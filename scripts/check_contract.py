@@ -5,12 +5,13 @@ compare row count, sorted column names, and order-insensitive values.
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
 from thesis_ner_co_tri_training_spark.session import get_spark
@@ -37,7 +38,9 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
 
 
 def main(sf_dir: str) -> int:
-    spark = get_spark("contract_check", cpus=8, shuffle_partitions=8)
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS")
+               or len(os.sched_getaffinity(0)))
+    spark = get_spark("contract_check", cpus=cpus, shuffle_partitions=8)
     con = duckdb.connect()
     for t in entrymod.TABLES:
         con.execute(

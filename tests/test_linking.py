@@ -8,6 +8,8 @@ identical after lowercasing have identical shingle sets, hence identical
 minhash signatures and a guaranteed shared bucket (collision prob 1.0).
 """
 
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -39,21 +41,36 @@ def union_find(nodes, edges):
 
 
 def test_connected_components_chain_and_island(spark):
-    # chain needs 7 propagation rounds (> checkpoint cadence of 5)
     chain = [(f"s{i}", f"s{i+1}") for i in range(1, 8)]
-    edges = chain + [("x1", "x2")]
-    df = spark.createDataFrame(edges, "a string, b string")
-    got = {r["node"]: r["comp"] for r in connected_components(df).collect()}
-    nodes = {n for e in edges for n in e}
-    want = union_find(nodes, edges)
-    assert got == want
-    assert got["s7"] == "s1" and got["x2"] == "x1"
+    rng = random.Random(11)
+    randoms = [
+        [(f"r{rng.randrange(40)}", f"r{rng.randrange(40)}")
+         for _ in range(rng.randrange(20, 50))]
+        for _ in range(3)
+    ]
+    cases = {
+        "chain+island": chain + [("x1", "x2")],
+        "empty": [],
+        "dup+reversed": [("b", "a"), ("a", "b"), ("a", "b"), ("c", "b"),
+                         ("d", "c"), ("c", "d")],
+        "self-loops": [("a", "a"), ("a", "b"), ("z", "z"), ("c", "c"),
+                       ("c", "d")],
+        **{f"random{i}": r for i, r in enumerate(randoms)},
+    }
+    for name, edges in cases.items():
+        df = spark.createDataFrame(edges, "a string, b string")
+        got = {r["node"]: r["comp"]
+               for r in connected_components(df).collect()}
+        want = union_find({n for e in edges for n in e}, edges)
+        assert got == want, name
+        if name == "chain+island":
+            assert got["s7"] == "s1" and got["x2"] == "x1"
 
 
 def test_star_cc_long_path_logarithmic(spark):
     """200-node path: star contraction closes it in <= 10 rounds
-    (O(log n)); one-hop hash-min provably cannot (O(diameter)) — which is
-    why star is the default for chain-shaped alias graphs."""
+    (O(log n)), but not in 2 — running out of rounds raises instead of
+    returning a partial forest."""
     names = [f"n{i:03d}" for i in range(200)]
     edges = list(zip(names, names[1:]))
     df = spark.createDataFrame(edges, "a string, b string")
@@ -62,10 +79,8 @@ def test_star_cc_long_path_logarithmic(spark):
            for r in connected_components(df, max_iter=10).collect()}
     assert got == want
     assert got[names[-1]] == names[0]
-    hm = {r["node"]: r["comp"]
-          for r in connected_components(df, max_iter=10,
-                                        algorithm="hashmin").collect()}
-    assert hm != want
+    with pytest.raises(RuntimeError, match="max_iter=2"):
+        connected_components(df, max_iter=2)
 
 
 SURFACES = [

@@ -7,7 +7,7 @@ the mention-detection core of a distributed triple-extraction pipeline:
     pages -> sentences -> mentions (3 deterministic tagger views)
           -> agreement-voted mentions (tri-training teachable gate)
           -> (subj, pred, obj) triples
-          -> entity linking + canonicalization (LSH blocking + hash-min CC)
+          -> entity linking + canonicalization (LSH blocking + star CC)
           -> partitioned node/edge tables (Iceberg-style layout)
 
 Everything is DataFrame/SQL-first; Python appears only in Arrow-vectorized

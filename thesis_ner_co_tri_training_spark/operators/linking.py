@@ -10,10 +10,10 @@ north star names explicitly:
      generation touches only DISTINCT surfaces, not mention rows.
   2. Verify: exact n-gram Jaccard similarity on the candidate pairs
      (the reference's cosine-check role).
-  3. Canonicalize: hash-min label propagation (GraphFrames-style
-     connected components) over the verified-pair edge set, with
-     checkpointing every few rounds to truncate lineage — SURVEY §4's one
-     hand-rolled iterative physical strategy.
+  3. Canonicalize: alternating large-star/small-star connected
+     components over the verified-pair edge set, checkpointed once per
+     round to truncate lineage — SURVEY §4's one hand-rolled iterative
+     physical strategy.
 
 Skew: surfaces follow a power law (popular entities appear in many
 documents). Blocking dedups to distinct surfaces FIRST, so bucket sizes
@@ -24,7 +24,7 @@ on a salted key.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 
@@ -134,145 +134,93 @@ def jaccard_verify(pairs: DataFrame, shingled: DataFrame,
     )
 
 
-def connected_components(edges: DataFrame, max_iter: int = 20,
-                         checkpoint_every: int = 5,
-                         algorithm: str = "star") -> DataFrame:
+def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     """(a, b) string edges -> (node, component).
 
     component = min surface (lexicographic) of the connected component —
-    a deterministic canonical representative.
+    a deterministic canonical representative. Every endpoint gets a row,
+    including a node whose only edge is a self-loop.
 
-    algorithm="star" (default): alternating large-star/small-star
-    contraction (Kiveris et al., "Connected Components in MapReduce and
-    Beyond") — converges in O(log n) rounds regardless of graph
-    diameter, the right shape for cross-document canonicalization where
-    alias graphs can chain (a~b~c~...). algorithm="hashmin": one-hop
-    min-label propagation — O(diameter) rounds; fine for the dense
-    near-dup clusters LSH verify emits, kept for comparison/tests.
+    Alternating large-star/small-star contraction (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond"): each pair of steps
+    at least halves tree heights, so it converges in O(log n) rounds
+    regardless of graph diameter — the right shape for cross-document
+    canonicalization where alias graphs can chain (a~b~c~...); a
+    2^k-long chain needs ~k rounds (the 200-node-path test pins <= 10).
 
-    `checkpoint_every` applies to the hashmin path only: star's per-round
-    fixed-point probe materializes the edge set every round anyway, so it
-    always checkpoints per round (the knob would buy nothing there).
+    Edges are kept oriented (larger, smaller). large-star points every
+    node's larger neighbors at the minimum of its closed neighborhood;
+    small-star contracts every node and its smaller neighbors onto the
+    minimum of that set. Each step's per-node minimum is a window over
+    the node's edges, so a step is one keyed shuffle (no aggregate joined
+    back). The fixed point — a star forest rooted at each component's
+    minimum — is detected by the round's canonical edge set no longer
+    changing: a (count, order-free XOR of row hashes) signature that
+    `observe` collects on the round's checkpoint job. bit_xor never
+    overflows (ANSI mode) and distinct edges can't cancel. Raises when
+    max_iter rounds pass without reaching it.
     """
-    if algorithm == "star":
-        return _connected_components_star(edges, max_iter)
-    return _connected_components_hashmin(edges, max_iter, checkpoint_every)
-
-
-def _connected_components_star(edges: DataFrame, max_iter: int = 20) -> DataFrame:
-    """Alternating large-star/small-star rounds.
-
-    large-star: every node points its LARGER neighbors at the minimum of
-    its closed neighborhood; small-star: every node and its smaller
-    neighbors contract onto that minimum. Each pair of rounds at least
-    halves tree heights, so a 2^k-long chain needs ~k rounds (the
-    200-node-path test pins < 10). All joins are keyed by node id —
-    uniform shuffles; per-round localCheckpoint truncates lineage.
-    Converged state is a star forest rooted at each component's minimum.
-    """
-    u, v = F.col("u"), F.col("v")
-    e = (
-        edges.select(F.col("a").alias("u"), F.col("b").alias("v"))
-        .filter(u != v)
+    u, v, m = F.col("u"), F.col("v"), F.col("m")
+    # Evaluated once: the caller's lineage (LSH + verify) feeds both the
+    # rounds and the self-loop nodes. Its signature seeds the fixed-point
+    # test, so an input that is already a star forest stops after 1 round.
+    obs = Observation()
+    given = (
+        edges.select(F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v"))
         .distinct()
-    )
-    nodes = (
-        e.select(u.alias("node")).union(e.select(v.alias("node"))).distinct()
+        .observe(obs, *_edge_signature())
         .localCheckpoint(eager=True)
     )
-    prev_sig = None
-    for i in range(max_iter):
-        # large-star over the symmetrized edge set
-        sym = e.union(e.select(v.alias("u"), u.alias("v"))).distinct()
-        mins = sym.groupBy("u").agg(F.min("v").alias("mn"))
-        mins = mins.select("u", F.least(F.col("mn"), u).alias("m"))
+    prev_sig = obs.get
+    e = given.filter(u != v)
+    w = Window.partitionBy("u")
+    for _ in range(max_iter):
+        # large-star over the symmetrized edge set: (larger nbr -> min)
+        sym = e.union(e.select(v.alias("u"), u.alias("v")))
         e1 = (
-            sym.join(mins, "u")
+            sym.withColumn("m", F.least(u, F.min(v).over(w)))
             .filter(v > u)
-            .select(v.alias("u"), F.col("m").alias("v"))
+            .select(v.alias("u"), m.alias("v"))
+        )
+        # small-star: each node and its smaller neighbors -> their min
+        obs = Observation()
+        e = (
+            e1.withColumn("m", F.min(v).over(w))
+            .select(F.inline(F.array(
+                F.struct(v.alias("u"), m.alias("v")),
+                F.struct(u.alias("u"), m.alias("v")),
+            )))
             .filter(u != v)
             .distinct()
-        )
-        # small-star: key every edge by its larger endpoint
-        dirn = e1.select(
-            F.greatest(u, v).alias("u"), F.least(u, v).alias("v")
-        )
-        mins2 = dirn.groupBy("u").agg(F.min("v").alias("m"))
-        e2 = (
-            dirn.join(mins2, "u")
-            .select(v.alias("u"), F.col("m").alias("v"))
-            .union(mins2.select(u, F.col("m").alias("v")))
-            .filter(u != v)
-            .distinct()
+            .observe(obs, *_edge_signature())
             .localCheckpoint(eager=True)
         )
-        # Fixed point: the canonical (min,max) edge set stopped changing.
-        # One tiny row: (count, order-free XOR of row hashes) — bit_xor
-        # never overflows (ANSI mode) and distinct edges can't cancel.
-        sig_row = (
-            e2.select(F.least(u, v).alias("x"), F.greatest(u, v).alias("y"))
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.expr("bit_xor(xxhash64(x, y))").alias("h"))
-            .collect()[0]
-        )
-        sig = (sig_row["n"], sig_row["h"])
-        e = e2
+        sig = obs.get
         if sig == prev_sig:
             break
         prev_sig = sig
-    # Star forest: every non-root points at its root; roots label selves.
-    labels = e.groupBy(u.alias("node")).agg(F.min("v").alias("comp"))
+    else:
+        raise RuntimeError(
+            "connected_components: edge set did not reach a fixed point "
+            f"within max_iter={max_iter} rounds")
+    # Star forest: non-roots point at their root, roots and self-loop
+    # nodes label themselves.
     return (
-        nodes.join(labels, "node", "left")
-        .select("node", F.coalesce(F.col("comp"), F.col("node")).alias("comp"))
+        e.union(e.select(v.alias("u"), v))
+        .union(given.filter(u == v))
+        .groupBy(u.alias("node"))
+        .agg(F.min("v").alias("comp"))
     )
 
 
-def _connected_components_hashmin(edges: DataFrame, max_iter: int = 20,
-                                  checkpoint_every: int = 5) -> DataFrame:
-    """One-hop min-label propagation with periodic checkpoint+convergence
-    probe (GraphFrames' classic algorithm)."""
-    sym = (
-        edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .union(edges.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-        .distinct()
-    )
-    labels = (
-        sym.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("comp", F.col("node"))
-    )
-    for i in range(max_iter):
-        # neighbor's current label, min over neighbors and self
-        nbr = (
-            sym.join(labels.withColumnRenamed("node", "dst"), "dst")
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.min("comp").alias("nbr_comp"))
-        )
-        new_labels = (
-            labels.join(nbr, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("comp"), F.coalesce(F.col("nbr_comp"), F.col("comp"))
-                ).alias("comp"),
-            )
-        )
-        if (i + 1) % checkpoint_every == 0:
-            new_labels = new_labels.localCheckpoint(eager=True)
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "node")
-                .filter(F.col("n.comp") != F.col("o.comp"))
-                .limit(1)
-                .count()
-            )
-            labels = new_labels
-            if changed == 0:
-                break
-        else:
-            labels = new_labels
-    return labels
+def _edge_signature() -> list:
+    """(count, bit_xor of row hashes) over the non-loop edges; rows are
+    oriented (u > v), so xxhash64(v, u) hashes the canonical (min, max)."""
+    loop_free = F.col("u") != F.col("v")
+    return [
+        F.count(F.when(loop_free, 1)).alias("n"),
+        F.bit_xor(F.when(loop_free, F.xxhash64("v", "u"))).alias("h"),
+    ]
 
 
 def canonicalize_entities(mentions: DataFrame,

@@ -11,7 +11,7 @@ run_ner.py:322-324 — its de-facto checkpoint/restart mechanism):
   voted         voted        C1/C2 agreement vote
   mentions      mentions     BIO span extraction
   triples       triples      cue-pattern relation extraction
-  entities      entities     LSH blocking + Jaccard verify + hash-min CC
+  entities      entities     LSH blocking + Jaccard verify + star CC
   graph         nodes/edges  canonicalized graph materialization
 
 Each stage writes an Iceberg-style table with a snapshot/lineage record
