@@ -6,8 +6,8 @@ maintenance interleaved, plus end-state full-vs-incremental parity.
 
 The KG twin of jobs/bench_dedup_append.py (VERDICT r4 item 4): the
 dedup index proved flat appends; this job asks the same question of the
-whole pipeline. Design claim: doc-local stages (sentences/voted/
-mentions/triples) are O(batch) appends, so per-batch seconds should
+whole pipeline. Design claim: doc-local stages (voted/mentions/
+triples) are O(batch) appends, so per-batch seconds should
 stay near-flat as the warehouse accumulates; the global stages
 (entities/nodes/edges) recompute over the accumulated mentions, so a
 slow linear creep from that component is expected and measured
@@ -44,8 +44,8 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-FINAL_TABLES = ("sentences", "voted", "mentions", "triples",
-                "entities", "nodes", "edges")
+FINAL_TABLES = ("voted", "mentions", "triples", "entities", "nodes",
+                "edges")
 
 
 def _dir_bytes(path: str) -> int:

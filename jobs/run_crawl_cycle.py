@@ -21,9 +21,10 @@ survivors to the incremental KG pipeline. One cycle:
   3. DEDUP GATE — match candidates against the persisted index with
      dedup_against_index (O(batch), q67's operator); drop near-dups.
   4. INGEST — run_pipeline_incremental(batch_tag="cycle-<start>")
-     appends survivors through sentences -> tagging -> vote ->
-     mentions/triples and recomputes the global entity/graph stages;
-     the pages snapshot records the frontier high-water mark.
+     appends survivors through the fused voted stage (extract, split,
+     tag, vote) -> mentions/triples and recomputes the global
+     entity/graph stages; the pages snapshot records the frontier
+     high-water mark.
   5. INDEX MAINT — append the survivors' docs/bands/shingles to the
      index tables so the NEXT cycle sees this one as history.
 

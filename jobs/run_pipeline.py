@@ -6,9 +6,9 @@ Usage (north rule launch mode):
     spark-submit --py-files dist/engine.zip jobs/run_pipeline.py \
         --pages 2000 --warehouse /tmp/kg_wh --cpus 8
 
-Reads or generates the `pages` table, runs sentences -> mentions -> voted
--> triples -> entities -> nodes/edges with per-stage lineage, prints a
-one-line JSON summary (docs/sec throughput).
+Reads or generates the `pages` table, runs voted (extract + split + tag
++ vote in one pass) -> mentions/triples -> entities -> nodes/edges with
+per-stage lineage, prints a one-line JSON summary (docs/sec throughput).
 """
 
 from __future__ import annotations

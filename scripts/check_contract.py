@@ -16,6 +16,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as entrymod
 from thesis_ner_co_tri_training_spark.session import get_spark
 
+DEFAULT_SF_DIR = "/root/testdata/sf0.01"
+SHUFFLE_PARTITIONS = 8
+
 
 def canon(df: pd.DataFrame) -> pd.DataFrame:
     """Exact canonical form: every cell -> repr string.
@@ -37,10 +40,9 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(by=list(df.columns)).reset_index(drop=True)
 
 
-def main(sf_dir: str) -> int:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS")
-               or len(os.sched_getaffinity(0)))
-    spark = get_spark("contract_check", cpus=cpus, shuffle_partitions=8)
+def compare(spark, sf_dir: str) -> tuple[int, list[tuple[str, str]]]:
+    """Run every queries() entry against its oracle, printing one line
+    per query; returns (number of queries, failures)."""
     con = duckdb.connect()
     for t in entrymod.TABLES:
         con.execute(
@@ -103,10 +105,19 @@ def main(sf_dir: str) -> int:
                 print("  duckdb:", o.loc[idx].to_dict())
                 continue
         print(f"{name}: OK rows={len(s)}")
+    return len(qs), failures
+
+
+def main(sf_dir: str) -> int:
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS")
+               or len(os.sched_getaffinity(0)))
+    spark = get_spark("contract_check", cpus=cpus,
+                      shuffle_partitions=SHUFFLE_PARTITIONS)
+    n, failures = compare(spark, sf_dir)
     spark.stop()
-    print(f"\n{len(qs) - len(failures)}/{len(qs)} OK")
+    print(f"\n{n - len(failures)}/{n} OK")
     return 1 if failures else 0
 
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"))
+    sys.exit(main(sys.argv[1] if len(sys.argv) > 1 else DEFAULT_SF_DIR))

@@ -41,7 +41,7 @@ def warehouses(spark, tmp_path_factory):
 
 def test_full_vs_incremental_row_sets(spark, warehouses):
     full_wh, inc_wh, _, _ = warehouses
-    for table in ("sentences", "voted", "mentions", "triples",
+    for table in ("voted", "mentions", "triples",
                   "entities", "nodes", "edges"):
         assert _rows(spark, full_wh, table) == _rows(spark, inc_wh, table), (
             table)
@@ -50,8 +50,8 @@ def test_full_vs_incremental_row_sets(spark, warehouses):
 def test_append_lineage_shape(spark, warehouses):
     _, inc_wh, lin1, lin2 = warehouses
     # batch 1 bootstraps (snapshot 0), batch 2 appends (snapshot 1)
-    assert lin1["sentences"]["snapshot_id"] == 0
-    s2 = lin2["sentences"]
+    assert lin1["voted"]["snapshot_id"] == 0
+    s2 = lin2["voted"]
     assert s2["snapshot_id"] == 1 and s2["operation"] == "append"
     assert s2["parent_snapshot_id"] == 0
     assert 0 < s2["added_rows"] < s2["row_count"]
@@ -97,12 +97,12 @@ def test_skipped_batch_rejected_then_resumable_in_order(spark, tmp_path):
         run_pipeline_incremental(spark, None, wh, batch_tag="b3")
     lin2 = run_pipeline_incremental(spark, None, wh, batch_tag="b2")
     assert lin2["pages"]["resumed"] is True  # no duplicate pages append
-    assert lin2["sentences"]["params"]["pages_snapshot"] == 1
+    assert lin2["voted"]["params"]["pages_snapshot"] == 1
     lin3 = run_pipeline_incremental(spark, None, wh, batch_tag="b3")
-    assert lin3["sentences"]["params"]["pages_snapshot"] == 2
+    assert lin3["voted"]["params"]["pages_snapshot"] == 2
     assert lin3["pages"]["row_count"] == 8
-    n_sent = catalog.read_table(spark, wh, "sentences").count()
-    assert n_sent == lin3["sentences"]["row_count"]
+    n_voted = catalog.read_table(spark, wh, "voted").count()
+    assert n_voted == lin3["voted"]["row_count"]
 
 
 def test_resume_unknown_tag_requires_pages(spark, tmp_path):
@@ -122,20 +122,20 @@ def test_compaction_between_batches(spark, tmp_path):
                              wh, batch_tag="b1")
     # maintenance: compact the pages table AND a stage table
     catalog.compact_table(spark, wh, "pages", target_files=1)
-    catalog.compact_table(spark, wh, "sentences", target_files=1)
+    catalog.compact_table(spark, wh, "voted", target_files=1)
     # next batch appends fine (old code: "batches must be sequential")
     lin2 = run_pipeline_incremental(
         spark, gen_pages_df(spark, 4, partitions=2, start=4), wh,
         batch_tag="b2")
     assert lin2["pages"]["row_count"] == 8
-    n_sent = catalog.read_table(spark, wh, "sentences").count()
-    assert n_sent == lin2["sentences"]["row_count"]
+    n_voted = catalog.read_table(spark, wh, "voted").count()
+    assert n_voted == lin2["voted"]["row_count"]
     # replaying b1 after stage compaction must resume, never re-append
     # (the compaction snapshot hides b1 from latest-only resume checks)
-    catalog.compact_table(spark, wh, "sentences", target_files=1)
+    catalog.compact_table(spark, wh, "voted", target_files=1)
     again = run_pipeline_incremental(spark, None, wh, batch_tag="b2")
-    assert again["sentences"].get("resumed") is True
-    assert catalog.read_table(spark, wh, "sentences").count() == n_sent
+    assert again["voted"].get("resumed") is True
+    assert catalog.read_table(spark, wh, "voted").count() == n_voted
 
 
 def test_expired_batch_refuses_replay(spark, tmp_path):

@@ -103,7 +103,7 @@ def mentions(spark):
 def test_canonicalize_matches_union_find_over_verified_pairs(spark, mentions):
     shingled = surface_shingles(mentions)
     sigs = minhash_signature(shingled)
-    verified = jaccard_verify(lsh_candidate_pairs(sigs), shingled, 0.6)
+    verified = jaccard_verify(lsh_candidate_pairs(sigs), 0.6)
     edges = [(r["a"], r["b"]) for r in verified.collect()]
     nodes = {s for s, _ in SURFACES}
     want_map = union_find(nodes, edges)
@@ -147,3 +147,24 @@ def test_lsh_candidate_pairs_rejects_short_signature(spark):
     sig = minhash_signature(surface_shingles(surfaces), num_hashes=16)
     with pytest.raises(ValueError, match="signature length"):
         lsh_candidate_pairs(sig, bands=8, rows_per_band=4)
+
+
+def test_lsh_skew_guard_at_max_bucket(spark):
+    """Case variants of one word share every shingle, hence the whole
+    signature and one bucket per band. A bucket of exactly max_bucket
+    surfaces yields all its pairs (with their shingles); one more
+    surface and the bucket is dropped."""
+    variants = ["abc", "Abc", "aBc", "abC", "ABc", "AbC"]
+    max_bucket = 5
+
+    def pairs(words):
+        df = spark.createDataFrame([(w,) for w in words], "surface string")
+        sig = minhash_signature(surface_shingles(df))
+        return lsh_candidate_pairs(sig, max_bucket=max_bucket).collect()
+
+    got = pairs(variants[:max_bucket])
+    assert sorted((r["a"], r["b"]) for r in got) == sorted(
+        (a, b) for a in variants[:max_bucket] for b in variants[:max_bucket]
+        if a < b)
+    assert all(r["sh_a"] == r["sh_b"] == ["^ab", "abc", "bc$"] for r in got)
+    assert pairs(variants[:max_bucket + 1]) == []

@@ -12,13 +12,13 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from thesis_ner_co_tri_training_spark.plans.pipeline import run_pipeline
+from thesis_ner_co_tri_training_spark.plans.pipeline import (
+    build_edges_df, build_nodes_df, run_pipeline)
 from thesis_ner_co_tri_training_spark.sources import catalog
 from thesis_ner_co_tri_training_spark.sources.pages import gen_pages_df
 
 N_PAGES = 30
-STAGES = ["sentences", "sent_views", "voted", "mentions", "triples",
-          "entities", "nodes", "edges"]
+STAGES = ["voted", "mentions", "triples", "entities", "nodes", "edges"]
 
 
 @pytest.fixture(scope="module")
@@ -56,7 +56,7 @@ def test_kill_and_resume_reproduces_identical_outputs(spark, warehouse):
     lineage2 = run_pipeline(spark, pages, wh)
 
     # upstream stages were NOT recomputed
-    for s in ("sentences", "sent_views", "voted", "mentions"):
+    for s in ("voted", "mentions"):
         assert lineage2[s].get("resumed"), s
     # recomputed stages were, and snapshot ids restart at 0 for fresh dirs
     for s in ("triples", "entities", "nodes", "edges"):
@@ -78,7 +78,44 @@ def test_no_resume_overwrites_and_bumps_snapshot_id(spark, warehouse):
     pages = gen_pages_df(spark, N_PAGES, partitions=4)
     lineage = run_pipeline(spark, pages, wh, resume=False)
     assert all(not lineage[s].get("resumed") for s in STAGES)
-    assert lineage["sentences"]["snapshot_id"] >= 1  # history retained
+    assert lineage["voted"]["snapshot_id"] >= 1  # history retained
+
+
+def test_graph_materialization_hand_built(spark):
+    """nodes: majority mention tag per entity, a tie broken by the
+    lexicographically smaller tag, NULL for an entity without mentions.
+    edges: one row per triple; a subj/obj outside every alias list keeps
+    its row with NULL id and canonical."""
+    entities = spark.createDataFrame(
+        [(1, "Acme", ["ACME", "Acme"], 4), (2, "Berlin", ["Berlin"], 3),
+         (3, "Orphan", ["Orphan"], 0)],
+        "entity_id long, canonical string, aliases array<string>, "
+        "n_mentions long")
+    mentions = spark.createDataFrame(
+        [("Acme", "PER"), ("ACME", "ORG"), ("Acme", "ORG"), ("ACME", "PER"),
+         ("Berlin", "LOC"), ("Berlin", "ORG"), ("Berlin", "LOC"),
+         ("Nobody", "PER")],
+        "surface string, tag string")
+    triples = spark.createDataFrame(
+        [("ACME", "based_in", "Berlin", "u1", 0, 0.9),
+         ("Acme", "met", "Nobody", "u2", 1, 0.5),
+         ("Ghost", "based_in", "Berlin", "u3", 2, 0.7)],
+        "subj string, pred string, obj string, url string, sent_id long, "
+        "confidence double")
+
+    nodes = {r["entity_id"]: tuple(r) for r in
+             build_nodes_df(mentions, entities).collect()}
+    assert nodes == {1: (1, "Acme", "ORG", 4), 2: (2, "Berlin", "LOC", 3),
+                     3: (3, "Orphan", None, 0)}
+
+    edges = build_edges_df(triples, entities)
+    assert edges.columns == ["subj_id", "subj_canonical", "pred", "obj_id",
+                             "obj_canonical", "url", "sent_id", "confidence"]
+    assert sorted(map(tuple, edges.collect()), key=lambda r: r[5]) == [
+        (1, "Acme", "based_in", 2, "Berlin", "u1", 0, 0.9),
+        (1, "Acme", "met", None, None, "u2", 1, 0.5),
+        (None, None, "based_in", 2, "Berlin", "u3", 2, 0.7),
+    ]
 
 
 def test_edges_partition_pruning(spark, warehouse):

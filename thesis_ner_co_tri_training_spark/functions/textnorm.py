@@ -252,11 +252,6 @@ def extract_text_udf(html_col: pd.Series) -> pd.Series:
     return html_col.map(extract_text)
 
 
-@F.pandas_udf(T.StringType())
-def normalize_line_udf(s: pd.Series) -> pd.Series:
-    return s.map(lambda x: normalize_line(x) if x is not None else None)
-
-
 @F.pandas_udf(T.ArrayType(T.StringType()))
 def split_sentences_udf(s: pd.Series) -> pd.Series:
     return s.map(lambda x: split_sentences(x) if x is not None else [])

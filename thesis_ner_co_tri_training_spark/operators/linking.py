@@ -5,11 +5,17 @@ verify, co_training.py:263-265) into the scalable two-phase pattern the
 north star names explicitly:
 
   1. MinHash-LSH blocking on character-3-gram shingles of the normalized
-     surface: band signatures -> groupBy band bucket -> candidate pairs.
-     All hashing is JVM-side (xxhash64 with per-row seeds); candidate
-     generation touches only DISTINCT surfaces, not mention rows.
-  2. Verify: exact n-gram Jaccard similarity on the candidate pairs
-     (the reference's cosine-check role).
+     surface. One keyed aggregate gives each distinct surface its
+     mention count and shingles; the signature is one higher-order SQL
+     expression (xxhash64 with per-hash seeds).
+     Each (band, bucket) is grouped ONCE into a list of its members'
+     (surface, shingles), and candidate pairs are enumerated inside the
+     bucket, carrying both shingle arrays — no bucket-size join and no
+     self-join. All hashing is JVM-side; candidate generation touches
+     only DISTINCT surfaces, not mention rows.
+  2. Verify: exact n-gram Jaccard similarity on the candidate pairs,
+     scored in place from the carried shingles (the reference's
+     cosine-check role).
   3. Canonicalize: alternating large-star/small-star connected
      components over the verified-pair edge set, checkpointed once per
      round to truncate lineage — SURVEY §4's one hand-rolled iterative
@@ -17,9 +23,9 @@ north star names explicitly:
 
 Skew: surfaces follow a power law (popular entities appear in many
 documents). Blocking dedups to distinct surfaces FIRST, so bucket sizes
-are bounded by vocabulary, not corpus size; the final mention->entity join
-broadcasts the (small) surface->entity map when it fits, else hash-joins
-on a salted key.
+are bounded by vocabulary, not corpus size, and buckets above
+`max_bucket` members are dropped before any pair is formed; the graph
+joins broadcast the (small) exploded alias map.
 """
 
 from __future__ import annotations
@@ -29,101 +35,98 @@ from pyspark.sql import functions as F
 
 
 def surface_shingles(df: DataFrame, col: str = "surface", n: int = 3) -> DataFrame:
-    """Distinct surfaces -> char n-gram shingle arrays (lowercased, padded)."""
+    """Distinct surfaces -> (surface, count, shingles): the number of
+    input rows per surface and its char n-gram shingle array
+    (lowercased, padded). NULL surfaces have no shingles and are left
+    out."""
     grams = F.expr(
         f"array_distinct(transform(sequence(1, greatest(length(concat('^', lower({col}), '$')) - {n - 1}, 1)), "
         f"i -> substring(concat('^', lower({col}), '$'), i, {n})))"
     )
-    return df.select(col).distinct().withColumn("shingles", grams)
+    return (df.filter(F.col(col).isNotNull()).groupBy(col).count()
+            .withColumn("shingles", grams))
 
 
 def minhash_signature(df: DataFrame, num_hashes: int = 16,
                       shingles_col: str = "shingles") -> DataFrame:
     """Per-surface minhash signature: min over xxhash64(shingle, seed_i).
 
-    JVM-side only: one array-transform + aggregate per hash function.
+    JVM-side only: one SQL expression folds the shingles once per hash
+    seed. The `sig` column's metadata records `num_hashes`, so banding
+    can check its length at the driver without running a job.
     """
-    sigs = F.array(*[
-        F.aggregate(
-            F.transform(F.col(shingles_col), lambda s: F.xxhash64(s, F.lit(i))),
-            F.lit(2**63 - 1).cast("long"),
-            lambda acc, h: F.least(acc, h),
-        )
-        for i in range(num_hashes)
-    ])
-    return df.withColumn("sig", sigs)
+    if num_hashes < 1:
+        raise ValueError(f"minhash_signature: num_hashes={num_hashes} < 1")
+    sig = F.expr(
+        f"transform(sequence(0, {num_hashes - 1}), i -> aggregate("
+        f"{shingles_col}, 9223372036854775807L, "
+        f"(acc, s) -> least(acc, xxhash64(s, i))))"
+    )
+    return df.select(
+        "*", sig.alias("sig", metadata={"num_hashes": num_hashes}))
 
 
 def lsh_candidate_pairs(df: DataFrame, bands: int = 4, rows_per_band: int = 4,
                         key: str = "surface", max_bucket: int = 256) -> DataFrame:
-    """Band the signature, bucket-join surfaces sharing a band hash.
+    """Band the signature and pair the members of each band bucket.
 
-    Output: (a, b) candidate surface pairs with a < b (dedup across bands).
-    Buckets larger than max_bucket are dropped (non-discriminative — see
+    Input: (key, shingles, sig) rows, `sig` built by minhash_signature.
+    Output: distinct (a, b, sh_a, sh_b) candidate pairs with a < b and
+    both shingle arrays, ready for jaccard_verify. Buckets with more than
+    max_bucket members are dropped (non-discriminative — see
     dedup.minhash_lsh_pairs; |B|^2 blow-up guard for power-law surfaces).
     """
-    # Cut the plan: banded is referenced three times below (bucket sizes +
-    # both join sides); without materialization the minhash fold re-runs
-    # per reference. The signature table is compact (num_hashes longs per
-    # distinct surface).
-    df = df.localCheckpoint(eager=True)
     # Fail fast at the driver: banding reads sig[b*rows_per_band + r + 1]
     # up to bands*rows_per_band — past the signature length that's an
     # opaque INVALID_ARRAY_INDEX mid-stage under ANSI (silent NULL bands
     # with ANSI off), e.g. num_hashes=16 with bands=8, rows_per_band=4.
-    # One-row probe over the just-checkpointed table: metadata-cheap.
-    probe = df.select(F.size("sig").alias("n")).limit(1).collect()
-    if probe and probe[0]["n"] < bands * rows_per_band:
+    n = df.schema["sig"].metadata.get("num_hashes")
+    if n is None:
+        raise ValueError(
+            "lsh_candidate_pairs: the sig column carries no num_hashes "
+            "metadata; build it with minhash_signature")
+    if n < bands * rows_per_band:
         raise ValueError(
             f"lsh_candidate_pairs: bands*rows_per_band = "
             f"{bands * rows_per_band} exceeds signature length "
-            f"{probe[0]['n']} (num_hashes at signature build)")
-    banded = df.select(
-        key,
-        F.posexplode(
-            F.array(*[
-                F.xxhash64(
-                    F.lit(b),
-                    *[F.element_at("sig", b * rows_per_band + r + 1)
-                      for r in range(rows_per_band)],
-                )
-                for b in range(bands)
-            ])
-        ).alias("band", "bucket"),
-    )
-    sizes = banded.groupBy("band", "bucket").count()
-    banded = (
-        banded.join(sizes.filter(F.col("count") <= max_bucket), ["band", "bucket"])
-        .drop("count")
-    )
-    left = banded.alias("l")
-    right = banded.alias("r")
-    pairs = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col(f"l.{key}") < F.col(f"r.{key}")),
+            f"{n} (num_hashes at signature build)")
+    buckets = (
+        df.select(
+            F.posexplode(
+                F.array(*[
+                    F.xxhash64(
+                        F.lit(b),
+                        *[F.element_at("sig", b * rows_per_band + r + 1)
+                          for r in range(rows_per_band)],
+                    )
+                    for b in range(bands)
+                ])
+            ).alias("band", "bucket"),
+            F.struct(F.col(key).alias("k"), F.col("shingles").alias("sh"))
+            .alias("m"),
         )
-        .select(F.col(f"l.{key}").alias("a"), F.col(f"r.{key}").alias("b"))
-        .distinct()
+        .groupBy("band", "bucket")
+        .agg(F.collect_list("m").alias("ms"))
+        .filter(F.size("ms") <= max_bucket)
     )
-    return pairs
+    pairs = F.flatten(F.transform("ms", lambda x: F.transform(
+        F.filter("ms", lambda y: x["k"] < y["k"]),
+        lambda y: F.struct(x["k"].alias("a"), y["k"].alias("b"),
+                           x["sh"].alias("sh_a"), y["sh"].alias("sh_b")),
+    )))
+    return buckets.select(F.inline(pairs)).distinct()
 
 
-def jaccard_verify(pairs: DataFrame, shingled: DataFrame,
-                   threshold: float = 0.6) -> DataFrame:
-    """Exact n-gram Jaccard on candidates (the J4 'verify' step).
+def jaccard_verify(pairs: DataFrame, threshold: float = 0.6) -> DataFrame:
+    """Exact n-gram Jaccard on candidates (the J4 'verify' step), scored
+    from the shingle arrays the pairs carry (sh_a, sh_b).
 
     round 4 per the reference's score convention (utils.py:70).
     """
-    sa = shingled.select(F.col("surface").alias("a"), F.col("shingles").alias("sh_a"))
-    sb = shingled.select(F.col("surface").alias("b"), F.col("shingles").alias("sh_b"))
-    joined = pairs.join(sa, "a").join(sb, "b")
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size(F.array_union("sh_a", "sh_b"))
     return (
-        joined.withColumn(
+        pairs.withColumn(
             "jaccard",
             F.round(
                 F.when(union == 0, F.lit(0.0)).otherwise(inter / union), 4
@@ -233,27 +236,19 @@ def canonicalize_entities(mentions: DataFrame,
     entity_id is a deterministic hash of the canonical surface (stable
     across runs and cluster sizes).
     """
-    # shingled feeds both the signature path and the Jaccard verify —
-    # materialize once (distinct surfaces only, so it is vocabulary-sized).
-    shingled = surface_shingles(mentions).localCheckpoint(eager=True)
-    sigs = minhash_signature(shingled, num_hashes=num_hashes)
+    # One row per distinct surface feeds both the blocking and the final
+    # mapping. Not checkpointed: rerunning the keyed count in both costs
+    # as many Spark jobs as a checkpoint would.
+    vocab = surface_shingles(mentions)
+    sigs = minhash_signature(vocab, num_hashes=num_hashes)
     pairs = lsh_candidate_pairs(sigs, bands=bands, rows_per_band=rows_per_band)
-    verified = jaccard_verify(pairs, shingled, threshold=jaccard_threshold)
+    verified = jaccard_verify(pairs, threshold=jaccard_threshold)
     comps = connected_components(verified)
 
     # Singletons (no verified edge) canonicalize to themselves.
-    all_surfaces = mentions.select("surface").distinct()
-    mapping = (
-        all_surfaces.join(comps.withColumnRenamed("node", "surface"), "surface", "left")
-        .select(
-            "surface",
-            F.coalesce(F.col("comp"), F.col("surface")).alias("canonical"),
-        )
-    )
-    counts = mentions.groupBy("surface").count()
     return (
-        mapping.join(counts, "surface")
-        .groupBy("canonical")
+        vocab.join(comps.withColumnRenamed("node", "surface"), "surface", "left")
+        .groupBy(F.coalesce(F.col("comp"), F.col("surface")).alias("canonical"))
         .agg(
             F.sort_array(F.collect_set("surface")).alias("aliases"),
             F.sum("count").alias("n_mentions"),

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.simfn import avg_cfd, cosine_tags, rename_tags_col
+from ..functions.simfn import cosine_tags, rename_tags_col
 
 
 def shuffled_with_position(df: DataFrame, seed: int = 42, id_col: str = "sent_id",
@@ -111,11 +111,6 @@ def top_n_per_pool(df: DataFrame, top_n: int,
     )
 
 
-def score_predictions(df: DataFrame, preds_col: str = "preds") -> DataFrame:
-    """A1 applied: attach avg_cfd (ignore-O, round 4)."""
-    return df.withColumn("avg_cfd", avg_cfd(preds_col))
-
-
 def agreement_join(
     df_a: DataFrame,
     df_b: DataFrame,
@@ -187,12 +182,6 @@ def arbitrate_labels(
 def min_tokens(df: DataFrame, n: int, tokens_col: str = "tokens") -> DataFrame:
     """P4: sentence length floor (unlabel_generator.py:31,37 uses n=10)."""
     return df.filter(F.size(F.col(tokens_col)) > n)
-
-
-def bootstrap_views(df: DataFrame, fraction: float = 0.7,
-                    seeds: tuple[int, int, int] = (1, 2, 3)) -> list[DataFrame]:
-    """R2: three bootstrap subsamples with replacement (utils.py:116-134)."""
-    return [df.sample(withReplacement=True, fraction=fraction, seed=s) for s in seeds]
 
 
 def extend_labeled(labeled: DataFrame, ext: DataFrame,

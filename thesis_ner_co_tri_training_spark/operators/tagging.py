@@ -513,9 +513,9 @@ def tag_and_vote_pages_df(
     core counts the socket/serialization work is kernel-heavy and
     contended, so shrinking it is what buys N->4N scaling efficiency;
     JVM-side it also removes the wide interpreted CASE trees from the
-    plan. The staged pipeline intentionally does NOT use this: it
-    materializes sent_views as a checkpoint so sweeps can re-vote with
-    different thresholds without re-tagging.
+    plan. The staged pipeline builds its `voted` stage with this; a
+    sweep that re-votes with other thresholds without re-tagging
+    materializes tag_pages_df once and runs vote_mentions over it.
     """
     from ..functions.textnorm import extract_text, split_sentences
     from .mentions import vote_sentence_flat

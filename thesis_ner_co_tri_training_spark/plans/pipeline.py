@@ -6,13 +6,17 @@ run_ner.py:322-324 — its de-facto checkpoint/restart mechanism):
 
   stage         table        op
   ------------  -----------  --------------------------------------------
-  sentences     sentences    extract_text (byte-identical UDF) + split
-  mentions_raw  sent_views   tri-view tagging (one Arrow pass)
-  voted         voted        C1/C2 agreement vote
+  voted         voted        extract_text (byte-identical) + split +
+                             tri-view tagging + C1/C2 agreement vote, in
+                             ONE Arrow pass (tag_and_vote_pages_df)
   mentions      mentions     BIO span extraction
   triples       triples      cue-pattern relation extraction
   entities      entities     LSH blocking + Jaccard verify + star CC
   graph         nodes/edges  canonicalized graph materialization
+
+No table holds the split sentences or the three tag views: nothing reads
+them back, so they are not worth their writes. A re-vote sweep with other
+thresholds builds them with tag_pages_df + vote_mentions.
 
 Each stage writes an Iceberg-style table with a snapshot/lineage record
 (params, row count, per-partition metrics). A rerun skips stages whose
@@ -31,8 +35,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.linking import canonicalize_entities, surface_to_entity
-from ..operators.mentions import mentions_table, vote_mentions
-from ..operators.tagging import explode_sentences, tag_sentences_df
+from ..operators.mentions import mentions_table
+from ..operators.tagging import tag_and_vote_pages_df
 from ..operators.triples import extract_triples
 from ..sources import catalog
 
@@ -110,19 +114,11 @@ def run_pipeline(
         "domain", F.regexp_extract("url", r"https?://([^/]+)/", 1)
     )
 
-    sentences = stage(
-        "sentences",
-        lambda: explode_sentences(pages.select("url", "html")),
-    )
-    sent_views = stage(
-        "sent_views",
-        lambda: tag_sentences_df(sentences, flat=True),
-    )
     voted = stage(
         "voted",
-        lambda: vote_mentions(
-            sent_views, p["cos_threshold"], p["tcfd_threshold"], p["scfd_threshold"]
-        ),
+        lambda: tag_and_vote_pages_df(
+            pages.select("url", "html"), p["cos_threshold"],
+            p["tcfd_threshold"], p["scfd_threshold"]),
     )
     mentions = stage(
         "mentions",
@@ -154,24 +150,16 @@ def run_pipeline(
 
 def build_nodes_df(mentions: DataFrame, entities: DataFrame) -> DataFrame:
     # entity_type = majority tag over the entity's mentions (ties
-    # break lexicographically) — mention tables are long-form, so
-    # this is one keyed count + one row_number over the tiny
-    # (entity, tag) table.
-    from pyspark.sql import Window
-
-    s2e = surface_to_entity(
-        mentions.select("surface").distinct(), entities
-    ).select("surface", "entity_id")
+    # break lexicographically): one keyed count over the broadcast
+    # alias-map join, then the min of (-count, tag) per entity.
     tag_counts = (
-        mentions.join(F.broadcast(s2e), "surface")
+        surface_to_entity(mentions, entities)
         .groupBy("entity_id", "tag")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    w = Window.partitionBy("entity_id").orderBy(F.col("c").desc(), "tag")
-    etype = (
-        tag_counts.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select("entity_id", F.col("tag").alias("entity_type"))
+    etype = tag_counts.groupBy("entity_id").agg(
+        F.min(F.struct((-F.col("c")).alias("neg_c"), "tag"))["tag"]
+        .alias("entity_type")
     )
     return entities.join(etype, "entity_id", "left").select(
         "entity_id", "canonical", "entity_type", "n_mentions"
@@ -179,27 +167,16 @@ def build_nodes_df(mentions: DataFrame, entities: DataFrame) -> DataFrame:
 
 
 def build_edges_df(triples: DataFrame, entities: DataFrame) -> DataFrame:
-    subj_map = surface_to_entity(
-        triples.select(F.col("subj").alias("surface")), entities
-    ).select(
-        F.col("surface").alias("subj"),
-        F.col("entity_id").alias("subj_id"),
-        F.col("canonical").alias("subj_canonical"),
-    ).distinct()
-    obj_map = surface_to_entity(
-        triples.select(F.col("obj").alias("surface")), entities
-    ).select(
-        F.col("surface").alias("obj"),
-        F.col("entity_id").alias("obj_id"),
-        F.col("canonical").alias("obj_canonical"),
-    ).distinct()
-    return (
-        triples.join(F.broadcast(subj_map), "subj", "left")
-        .join(F.broadcast(obj_map), "obj", "left")
-        .select(
-            "subj_id", "subj_canonical", "pred", "obj_id", "obj_canonical",
-            "url", "sent_id", "confidence",
-        )
+    # Each surface is in exactly one entity's aliases, so the left join
+    # keeps one row per triple; an unlinked subj/obj gets NULL ids.
+    for side in ("subj", "obj"):
+        triples = surface_to_entity(
+            triples.withColumnRenamed(side, "surface"), entities
+        ).withColumnsRenamed({"surface": side, "entity_id": f"{side}_id",
+                              "canonical": f"{side}_canonical"})
+    return triples.select(
+        "subj_id", "subj_canonical", "pred", "obj_id", "obj_canonical",
+        "url", "sent_id", "confidence",
     )
 
 
@@ -244,8 +221,8 @@ def run_pipeline_incremental(
     The Iceberg-incremental twin of run_pipeline, for the 10^12-document
     north-rule table where "the crawl" arrives as appends:
 
-    - `pages` and every doc-local stage (sentences, sent_views, voted,
-      mentions, triples) APPEND a new snapshot computed from the batch
+    - `pages` and every doc-local stage (voted, mentions, triples)
+      APPEND a new snapshot computed from the batch
       only — O(batch) work, never rescanning the already-processed
       corpus. Each appended snapshot records `pages_snapshot` (the
       pages snapshot it derives from) in its lineage params.
@@ -305,7 +282,7 @@ def run_pipeline_incremental(
             # full-mode run_pipeline writes stage tables but no `pages`
             # table; bootstrapping a batch on top of those would append
             # batch deltas onto full-run rows (duplicates)
-            if catalog.latest_snapshot(warehouse, "sentences") is not None:
+            if catalog.latest_snapshot(warehouse, "voted") is not None:
                 raise ValueError(
                     "incremental bootstrap on a warehouse that already has "
                     "stage tables but no batch-tagged pages history (it was "
@@ -442,20 +419,11 @@ def run_pipeline_incremental(
         "domain", F.regexp_extract("url", r"https?://([^/]+)/", 1)
     )
 
-    sentences_d = append_stage(
-        "sentences",
-        lambda: explode_sentences(pages_delta.select("url", "html")),
-    )
-    sent_views_d = append_stage(
-        "sent_views",
-        lambda: tag_sentences_df(sentences_d, flat=True),
-    )
     voted_d = append_stage(
         "voted",
-        lambda: vote_mentions(
-            sent_views_d, p["cos_threshold"], p["tcfd_threshold"],
-            p["scfd_threshold"]
-        ),
+        lambda: tag_and_vote_pages_df(
+            pages_delta.select("url", "html"), p["cos_threshold"],
+            p["tcfd_threshold"], p["scfd_threshold"]),
     )
     append_stage(
         "mentions",

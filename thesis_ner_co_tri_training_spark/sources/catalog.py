@@ -50,7 +50,6 @@ from contextlib import contextmanager
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 @contextmanager
@@ -136,17 +135,6 @@ def _snapshot_ids(warehouse: str, table: str) -> list[int]:
             except ValueError:
                 continue
     return sorted(ids)
-
-
-def partition_metrics(df: DataFrame) -> list[dict[str, Any]]:
-    """Per-partition row counts via one distributed aggregate."""
-    rows = (
-        df.groupBy(F.spark_partition_id().alias("pid"))
-        .count()
-        .orderBy("pid")
-        .collect()
-    )
-    return [{"partition": r["pid"], "rows": r["count"]} for r in rows]
 
 
 def partition_metrics_from_files(out_dir: str) -> list[dict[str, Any]]:
