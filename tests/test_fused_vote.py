@@ -15,8 +15,10 @@ from thesis_ner_co_tri_training_spark.operators.mentions import (
     vote_sentence_flat,
 )
 from thesis_ner_co_tri_training_spark.operators.tagging import (
+    explode_sentences,
     tag_and_vote_pages_df,
     tag_pages_df,
+    tag_sentences_df,
 )
 from thesis_ner_co_tri_training_spark.sources.pages import gen_pages_df
 
@@ -52,6 +54,30 @@ def test_fused_passthrough_and_thresholds(spark):
     fused = tag_and_vote_pages_df(src, passthrough=["warc_ts"], **kw)
     assert fused.columns == staged.columns
     assert _rows(fused) == _rows(staged)
+
+
+def test_struct_and_flat_sinks_agree(spark):
+    """tag_sentences_df(explode_sentences(pages)) (struct views) and
+    tag_pages_df(pages) (flat views) are two sinks of one pass; per
+    (url, sent_id) they must carry the same tokens, tags, confidences,
+    cfds and cosines."""
+    pages = gen_pages_df(spark, 40, partitions=2).drop("text")
+    struct = {(r["url"], r["sent_id"]): r
+              for r in tag_sentences_df(explode_sentences(pages)).collect()}
+    flat = {(r["url"], r["sent_id"]): r for r in tag_pages_df(pages).collect()}
+    assert struct.keys() == flat.keys()
+    assert len(flat) > 100
+    for key, f in flat.items():
+        s = struct[key]
+        assert s["tokens"] == f["tokens"], key
+        for k in (1, 2, 3):
+            preds = s[f"v{k}_preds"]
+            assert [p["word"] for p in preds] == f["tokens"], key
+            assert [p["tag"] for p in preds] == f[f"t{k}_tags"], key
+            assert [p["confidence"] for p in preds] == f[f"t{k}_confs"], key
+            assert s[f"t{k}_cfd"] == f[f"t{k}_cfd"], key
+        for c in ("cos12", "cos23", "cos13"):
+            assert s[c] == f[c], key
 
 
 def test_vote_sentence_flat_edge_cases():
@@ -109,10 +135,8 @@ def test_tagging_stats_parity(spark):
 def test_fused_paths_survive_null_and_unicode_pages(spark):
     """One malformed source row (null text/html — jsonl/warc parse_error
     rows emit exactly this) and one No-category unicode digit token must
-    not kill the fused Arrow workers."""
-    from thesis_ner_co_tri_training_spark.operators.tagging import (
-        tag_and_vote_pages_df, tag_pages_df)
-
+    not kill any entry point of the tagging pass; null rows yield no
+    sentence."""
     pages = spark.createDataFrame(
         [("u1", "Angela Merkel visited Berlin in 2019. Total: ²⁰²⁵ units."),
          ("u2", None),
@@ -123,6 +147,12 @@ def test_fused_paths_survive_null_and_unicode_pages(spark):
     assert sv.filter("url = 'u1'").count() > 0
     voted = tag_and_vote_pages_df(pages)
     assert voted.filter("url = 'u2'").count() == 0
+    sents = explode_sentences(pages)
+    assert sents.filter("url = 'u2'").count() == 0
+    assert sents.filter("url = 'u1'").count() == 2
+    sv_struct = tag_sentences_df(sents)
+    assert sv_struct.filter("url = 'u2'").count() == 0
+    assert sv_struct.filter("url = 'u1'").count() == 2
 
     html_pages = spark.createDataFrame(
         [("h1", b"<html><body>Angela Merkel in Berlin.</body></html>"),
@@ -131,3 +161,7 @@ def test_fused_paths_survive_null_and_unicode_pages(spark):
     sv2 = tag_pages_df(html_pages)
     assert sv2.filter("url = 'h2'").count() == 0
     assert sv2.filter("url = 'h1'").count() > 0
+    sents2 = explode_sentences(html_pages)
+    assert [(r["url"], r["sent_id"]) for r in sents2.collect()] == [("h1", 0)]
+    assert [(r["url"], r["sent_id"])
+            for r in tag_sentences_df(sents2).collect()] == [("h1", 0)]

@@ -23,8 +23,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.simfn import avg_cfd, cosine_tags
-
 _SPAN_STRUCT = "array<struct<beg:int,end:int,tag:string,conf:double>>"
 
 # Rotation order is reference semantics (tri_train.py:148): a sentence is
@@ -116,19 +114,16 @@ def vote_mentions(
     tcfd_threshold: float = 0.7,
     scfd_threshold: float = 0.6,
 ) -> DataFrame:
-    """(url, sent_id, tokens, v1/v2/v3_preds) -> voted sentence labels.
+    """sent_views -> voted sentence labels.
 
+    Input: url, sent_id, tokens, the three views (flat t1..t3_tags/confs
+    or struct v1..v3_preds) and the tagging pass's t1..t3_cfd and
+    cos12/cos23/cos13 columns — every producer in operators/tagging
+    emits them.
     Output: url, sent_id, tokens, tags, confs, selection_rule, cos_score.
     Non-teachable, non-unanimous sentences are filtered out (low-confidence
     mention filtering — the engine's whole point).
     """
-    # Performance: the cosine/avg folds are interpreted higher-order
-    # expressions (no codegen). Each is materialized as its OWN column in a
-    # separate projection so it is evaluated exactly once per row —
-    # Catalyst's CollapseProject refuses to inline non-cheap expressions
-    # referenced more than once, which is precisely what we rely on.
-    # Inlining them into the big CASE tree below cost ~12x wall-clock.
-    precomputed = "cos12" in sent_views.columns  # tagging stage fast path
     extras = [c for c in ("warc_ts",) if c in sent_views.columns]
     df = sent_views
     if "t1_tags" not in df.columns:  # struct form -> flat columns
@@ -138,78 +133,45 @@ def vote_mentions(
                 df.withColumn(f"t{v}_tags", F.transform(F.col(p), lambda x: x["tag"]))
                 .withColumn(f"t{v}_confs", F.transform(F.col(p), lambda x: x["confidence"]))
             )
-    base_cols = ["url", "sent_id", *extras, "tokens",
-                 "t1_tags", "t2_tags", "t3_tags",
-                 "t1_confs", "t2_confs", "t3_confs"]
-    if precomputed:
-        df = df.select(*base_cols, "t1_cfd", "t2_cfd", "t3_cfd",
-                       "cos12", "cos23", "cos13")
-    else:
-        df = df.select(
-            *base_cols,
-            avg_cfd("v1_preds").alias("t1_cfd"),
-            avg_cfd("v2_preds").alias("t2_cfd"),
-            avg_cfd("v3_preds").alias("t3_cfd"),
-        )
-        # Teacher-pair cosines on FULL tag lists incl. O (tri_train.py:51-54).
-        df = df.withColumns({
-            "cos12": cosine_tags("t1_tags", "t2_tags"),
-            "cos23": cosine_tags("t2_tags", "t3_tags"),
-            "cos13": cosine_tags("t1_tags", "t3_tags"),
-        })
-
-    rotations = [  # (teacher_a, teacher_b, student, pair-cosine col)
-        (1, 2, 3, "cos12"), (2, 3, 1, "cos23"), (1, 3, 2, "cos13"),
-    ]  # tri_train.py:148
-    gate_cols = {}
-    for (a, b, s, cos_col) in rotations:
-        gate_cols[f"g{a}{b}"] = (
-            (F.col(cos_col) > cos_threshold)
+    # C1 gate per rotation, each its own column so the CASE chains below
+    # reference it instead of re-evaluating it.
+    df = df.withColumns({
+        f"g{a}{b}": (
+            (F.col(f"cos{a}{b}") > cos_threshold)
             & (F.least(F.col(f"t{a}_cfd"), F.col(f"t{b}_cfd")) > tcfd_threshold)
             & (F.col(f"t{s}_cfd") < scfd_threshold)
         )
-    df = df.withColumns(gate_cols)
+        for a, b, s, _rule in ROTATIONS
+    })
+    unanimous = (F.col("t1_tags") == F.col("t2_tags")) & (
+        F.col("t2_tags") == F.col("t3_tags")
+    )
 
-    def arb(col_fmt: str):
-        """C2 per rotation over cheap column refs."""
-        out = None
-        cases = []
-        for (a, b, _s, _c) in rotations:
+    def first_gate(value, fallback) -> Column:
+        """CASE over ROTATIONS in order (the first passing gate wins),
+        then the unanimous fallback; value(a, b, rule) per rotation."""
+        expr = None
+        for a, b, _s, rule in ROTATIONS:
+            gate, val = F.col(f"g{a}{b}"), value(a, b, rule)
+            expr = F.when(gate, val) if expr is None else expr.when(gate, val)
+        return expr.when(unanimous, fallback)
+
+    def arbitrate(col_fmt: str):
+        """C2: equal tags -> teacher a, else the higher-cfd teacher."""
+        def pick(a, b, _rule):
             ta, tb = F.col(f"t{a}_tags"), F.col(f"t{b}_tags")
             ca, cb = F.col(f"t{a}_cfd"), F.col(f"t{b}_cfd")
-            pick = (
+            return (
                 F.when(ta == tb, F.col(col_fmt.format(a)))
                 .when(ca > cb, F.col(col_fmt.format(a)))
                 .otherwise(F.col(col_fmt.format(b)))
             )
-            cases.append((F.col(f"g{a}{b}"), pick))
-        return cases
+        return pick
 
-    unanimous = (F.col("t1_tags") == F.col("t2_tags")) & (
-        F.col("t2_tags") == F.col("t3_tags")
-    )
-    g1, g2, g3 = F.col("g12"), F.col("g23"), F.col("g13")
-    rule = (
-        F.when(g1, F.lit("rot_12_3"))
-        .when(g2, F.lit("rot_23_1"))
-        .when(g3, F.lit("rot_13_2"))
-        .when(unanimous, F.lit("unanimous"))
-    )
-
-    def chain(cases, fallback):
-        expr = None
-        for gate, val in cases:
-            expr = F.when(gate, val) if expr is None else expr.when(gate, val)
-        return expr.when(unanimous, fallback)
-
-    tags = chain(arb("t{}_tags"), F.col("t1_tags"))
-    confs = chain(arb("t{}_confs"), F.col("t1_confs"))
-    cos_score = (
-        F.when(g1, F.col("cos12"))
-        .when(g2, F.col("cos23"))
-        .when(g3, F.col("cos13"))
-        .when(unanimous, F.lit(1.0))
-    )
+    rule = first_gate(lambda a, b, r: F.lit(r), F.lit("unanimous"))
+    tags = first_gate(arbitrate("t{}_tags"), F.col("t1_tags"))
+    confs = first_gate(arbitrate("t{}_confs"), F.col("t1_confs"))
+    cos_score = first_gate(lambda a, b, r: F.col(f"cos{a}{b}"), F.lit(1.0))
     return (
         df.withColumn("selection_rule", rule)
         .withColumn("tags", tags)

@@ -6,12 +6,15 @@ not weights. Views genuinely disagree (bootstrap-subsampled gazetteers,
 seeds 1/2/3 — utils.py:116-134 analog), so the tri-training vote has work
 to do.
 
-Execution: ONE mapInPandas pass over sentences emits all three views'
-predictions (SURVEY §2.3 J2 "preferred" form — no join needed between
-views). View resources are built once per executor (module-level cache),
-mirroring the reference loading models once per process
-(tri_train.py:34-36). Arrow-batched; no per-row Python in the Spark plan
-beyond this single vectorized stage.
+Execution: one pass, two sources, four sinks. `_sentence_pass` is the only
+mapInPandas in this module (SURVEY §2.3 J2 "preferred" form — all three
+views come out of one Arrow pass, no join between views). Its source is
+either pages (extract + split inside the pass) or sentence rows (already
+carrying `sent_id`). Its sinks are one `emit` function per output schema:
+sentence text (explode_sentences), struct views (tag_sentences_df), flat
+views (tag_pages_df) and voted sentences (tag_and_vote_pages_df). View
+resources are built once per worker (module-level cache), mirroring the
+reference loading models once per process (tri_train.py:34-36).
 
 Each view's per-token output is {'word','tag','confidence'} exactly as
 predict.py:114; tokenization is whitespace over punctuation-stripped text
@@ -21,35 +24,36 @@ predict.py:114; tokenization is whitespace over punctuation-stripped text
 from __future__ import annotations
 
 from functools import lru_cache
-from typing import Iterator
+from itertools import repeat
+from typing import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..functions.simfn import cosine_from_counts, tag_counts_py
 from ..functions.textnorm import strip_punct, tokenize
 from ..sources import corpus
 from ..sources.corpus import CONTEXT_CUES, ORG_SUFFIX, _stable_conf
+from .mentions import ROTATIONS, vote_sentence_flat
 
+# Sink schemas, after the pass's own url, sent_id, *passthrough columns.
 PRED_FIELDS = "array<struct<word:string,tag:string,confidence:double>>"
-SENT_VIEWS_SCHEMA = (
-    "url string, sent_id bigint, tokens array<string>, "
-    f"v1_preds {PRED_FIELDS}, v2_preds {PRED_FIELDS}, v3_preds {PRED_FIELDS}, "
-    "t1_cfd double, t2_cfd double, t3_cfd double, "
-    "cos12 double, cos23 double, cos13 double"
-)
+_COS_COLS = [f"cos{a}{b}" for a, b, _s, _rule in ROTATIONS]
+_SCORE_COLS = {"t1_cfd": "double", "t2_cfd": "double", "t3_cfd": "double",
+               **{c: "double" for c in _COS_COLS}}
+_STRUCT_COLS = {"tokens": "array<string>",
+                **{f"v{v}_preds": PRED_FIELDS for v in (1, 2, 3)},
+                **_SCORE_COLS}
 # Flat form: parallel tags/confs arrays instead of array<struct> records.
 # Same information (word == tokens[i]), but ~40% smaller Arrow payload and
-# no per-element dict boxing on either side of the socket — the hot-path
-# schema for the fused page tagger.
-SENT_VIEWS_FLAT_SCHEMA = (
-    "url string, sent_id bigint, tokens array<string>, "
-    "t1_tags array<string>, t2_tags array<string>, t3_tags array<string>, "
-    "t1_confs array<double>, t2_confs array<double>, t3_confs array<double>, "
-    "t1_cfd double, t2_cfd double, t3_cfd double, "
-    "cos12 double, cos23 double, cos13 double"
-)
+# no per-element dict boxing on either side of the socket.
+_FLAT_COLS = {"tokens": "array<string>",
+              **{f"t{v}_tags": "array<string>" for v in (1, 2, 3)},
+              **{f"t{v}_confs": "array<double>" for v in (1, 2, 3)},
+              **_SCORE_COLS}
+_VOTED_COLS = {"tokens": "array<string>", "tags": "array<string>",
+               "confs": "array<double>", "selection_rule": "string",
+               "cos_score": "double"}
 
 _RESOURCES: list[dict] | None = None
 _ORG_SUFFIX_SET = set(ORG_SUFFIX)
@@ -318,181 +322,120 @@ def cosines_from_counts(c1: dict, c2: dict, c3: dict) -> tuple[float, float, flo
             cosine_from_counts(c1, c3))
 
 
-def tag_sentences_df(sentences: DataFrame, passthrough: list[str] | None = None,
-                     flat: bool = False) -> DataFrame:
-    """(url, sent_id, text) -> (url, sent_id, tokens, v1/v2/v3_preds).
-
-    Single Arrow-vectorized stage; preserves size(tokens) == size(preds)
-    per view (the reference's predict.py:113 invariant).
-
-    `passthrough` columns (e.g. warc_ts for streaming event time) ride
-    through the Arrow batch unchanged — keeps the streaming path free of
-    stateful stream-stream rejoins.
-
-    `flat=True` emits SENT_VIEWS_FLAT_SCHEMA (parallel tags/confs arrays)
-    instead of the reference-record struct form — smaller Arrow payload
-    and parquet footprint; the vote consumes either.
-    """
-    if flat:
-        return _tag_sentences_flat(sentences, passthrough or [])
-
-    from ..functions.simfn import avg_confident_score, cosine_similarity
-
-    passthrough = passthrough or []
-    extra_schema = "".join(
-        f", {f.name} {f.dataType.simpleString()}"
-        for f in sentences.schema.fields if f.name in passthrough
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        _resources()  # build once per worker
-        for pdf in batches:
-            toks, v1, v2, v3 = [], [], [], []
-            cfds: list[list[float]] = [[], [], []]
-            coses: list[list[float]] = [[], [], []]
-            for text in pdf["text"]:
-                t, a, b, c = tag_all_views(text)
-                toks.append(t)
-                v1.append(a)
-                v2.append(b)
-                v3.append(c)
-                # Precompute the vote's hot scalars with the SAME shared
-                # functions the oracle uses (utils.py:51-88 semantics) —
-                # the SQL fallback in vote_mentions computes identical
-                # values, ~10x slower (interpreted higher-order exprs).
-                for i, preds in enumerate((a, b, c)):
-                    cfds[i].append(avg_confident_score(preds, ignore_o=True))
-                ta = [p["tag"] for p in a]
-                tb = [p["tag"] for p in b]
-                tc = [p["tag"] for p in c]
-                coses[0].append(cosine_similarity(ta, tb))
-                coses[1].append(cosine_similarity(tb, tc))
-                coses[2].append(cosine_similarity(ta, tc))
-            out = {
-                "url": pdf["url"], "sent_id": pdf["sent_id"], "tokens": toks,
-                "v1_preds": v1, "v2_preds": v2, "v3_preds": v3,
-                "t1_cfd": cfds[0], "t2_cfd": cfds[1], "t3_cfd": cfds[2],
-                "cos12": coses[0], "cos23": coses[1], "cos13": coses[2],
-            }
-            for c in passthrough:
-                out[c] = pdf[c]
-            if len(pdf):  # out["url"] is a Series here, not a list
-                # a zero-row chunk (e.g. every input row had null
-                # text/html) must yield NOTHING: pd.DataFrame of empty
-                # python lists infers float64 columns, and Arrow cannot
-                # convert an empty float64 to array<string>
-                yield pd.DataFrame(out)
-
-    return sentences.select("url", "sent_id", "text", *passthrough).mapInPandas(
-        run, SENT_VIEWS_SCHEMA + extra_schema
-    )
+def _emit_scores(out: dict[str, list], views: list) -> None:
+    """Append the vote's per-view cfd and pairwise cosine columns."""
+    for v, view in enumerate(views, start=1):
+        out[f"t{v}_cfd"].append(view[3])
+    cosines = cosines_from_counts(views[0][2], views[1][2], views[2][2])
+    for col, cos in zip(_COS_COLS, cosines):
+        out[col].append(cos)
 
 
-def _tag_sentences_flat(sentences: DataFrame, passthrough: list[str]) -> DataFrame:
-    """Flat per-sentence tagging (rows are already sentences — no split)."""
-    extra_schema = "".join(
-        f", {f.name} {f.dataType.simpleString()}"
-        for f in sentences.schema.fields if f.name in passthrough
-    )
+def _sentence_pass(
+    df: DataFrame,
+    columns: dict[str, str],
+    emit: Callable[[dict[str, list], str], bool],
+    passthrough: list[str] | None = None,
+) -> DataFrame:
+    """The one Python pass behind every entry point below.
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        _resources()
-        for pdf in batches:
-            out: dict[str, list] = {
-                "url": list(pdf["url"]), "sent_id": list(pdf["sent_id"]),
-                "tokens": [],
-                "t1_tags": [], "t2_tags": [], "t3_tags": [],
-                "t1_confs": [], "t2_confs": [], "t3_confs": [],
-                "t1_cfd": [], "t2_cfd": [], "t3_cfd": [],
-                "cos12": [], "cos23": [], "cos13": [],
-                **{c: list(pdf[c]) for c in passthrough},
-            }
-            for text in pdf["text"]:
-                toks, views = tag_all_views_stats(text)
-                out["tokens"].append(toks)
-                for v, (tags, confs, _, cfd) in enumerate(views, start=1):
-                    out[f"t{v}_tags"].append(tags)
-                    out[f"t{v}_confs"].append(confs)
-                    out[f"t{v}_cfd"].append(cfd)
-                cos12, cos23, cos13 = cosines_from_counts(
-                    views[0][2], views[1][2], views[2][2])
-                out["cos12"].append(cos12)
-                out["cos23"].append(cos23)
-                out["cos13"].append(cos13)
-            if out["url"]:
-                # a zero-row chunk (e.g. every input row had null
-                # text/html) must yield NOTHING: pd.DataFrame of empty
-                # python lists infers float64 columns, and Arrow cannot
-                # convert an empty float64 to array<string>
-                yield pd.DataFrame(out)
+    A row with a `sent_id` column is already a sentence: its `text` goes
+    to `emit` as is. Any other row is a page: `text` (or, when only
+    `html` is present, extract_text over it) is run through
+    split_sentences and each sentence is numbered from 0; null payloads
+    yield no sentence. `emit(out, text)` appends one value to each of
+    its `columns` lists in `out` and returns whether it emitted a row;
+    the pass then appends that row's url, sent_id and `passthrough`
+    values. Output schema: url, sent_id, *passthrough, *columns.
 
-    return sentences.select("url", "sent_id", "text", *passthrough).mapInPandas(
-        run, SENT_VIEWS_FLAT_SCHEMA + extra_schema
-    )
-
-
-def tag_pages_df(pages: DataFrame, passthrough: list[str] | None = None) -> DataFrame:
-    """pages (url, html|text, ...) -> sent_views in ONE Arrow pass.
-
-    Fuses extract_text -> split_sentences -> tri-view tagging into a
-    single mapInPandas stage. Semantically identical to
-    tag_sentences_df(explode_sentences(pages)) — asserted by the
-    streaming-vs-batch parity test — but with one Python runner instead
-    of a chain of two/three: a narrow task otherwise pipelines through
-    every chained Python stage concurrently (each its own worker process
-    + two Arrow socket hops), which at high core counts multiplies
-    processes and kernel socket work ~3x for zero algorithmic gain. At
-    cluster scale the fusion also removes two full serialize/deserialize
-    round-trips of the sentence corpus per task.
+    One mapInPandas stage: chained Python stages pipeline each task
+    through every one of them concurrently (each its own worker process
+    + two Arrow socket hops), multiplying processes and kernel socket
+    work for no algorithmic gain; at cluster scale a chain also adds a
+    serialize/deserialize round-trip of the sentence corpus per stage.
     """
     from ..functions.textnorm import extract_text, split_sentences
 
     passthrough = passthrough or []
-    has_text = "text" in pages.columns
-    in_cols = ["url", "text" if has_text else "html", *passthrough]
-    extra_schema = "".join(
-        f", {f.name} {f.dataType.simpleString()}"
-        for f in pages.schema.fields if f.name in passthrough
-    )
+    is_sentence = "sent_id" in df.columns
+    src = "text" if "text" in df.columns else "html"
+    types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    schema = {"url": "string", "sent_id": "bigint",
+              **{c: types[c] for c in passthrough}, **columns}
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        _resources()
+        _resources()  # build once per worker
         for pdf in batches:
-            out: dict[str, list] = {
-                "url": [], "sent_id": [], "tokens": [],
-                "t1_tags": [], "t2_tags": [], "t3_tags": [],
-                "t1_confs": [], "t2_confs": [], "t3_confs": [],
-                "t1_cfd": [], "t2_cfd": [], "t3_cfd": [],
-                "cos12": [], "cos23": [], "cos13": [],
-                **{c: [] for c in passthrough},
-            }
-            src = pdf["text"] if has_text else pdf["html"]
-            for row_i, (url, payload) in enumerate(zip(pdf["url"], src)):
-                text = payload if has_text else extract_text(payload)
-                for sent_id, sent in enumerate(split_sentences(text)):
-                    toks, views = tag_all_views_stats(sent)
-                    out["url"].append(url)
-                    out["sent_id"].append(sent_id)
-                    out["tokens"].append(toks)
-                    for v, (tags, confs, _, cfd) in enumerate(views, start=1):
-                        out[f"t{v}_tags"].append(tags)
-                        out[f"t{v}_confs"].append(confs)
-                        out[f"t{v}_cfd"].append(cfd)
-                    cos12, cos23, cos13 = cosines_from_counts(
-                        views[0][2], views[1][2], views[2][2])
-                    out["cos12"].append(cos12)
-                    out["cos23"].append(cos23)
-                    out["cos13"].append(cos13)
-                    for col in passthrough:
-                        out[col].append(pdf[col].iloc[row_i])
-            if out["url"]:
+            out: dict[str, list] = {c: [] for c in schema}
+            urls, sent_ids = out["url"], out["sent_id"]
+            kept = [out[c] for c in passthrough]
+            row_ids = pdf["sent_id"] if is_sentence else repeat(None)
+            for url, row_id, payload, *extras in zip(
+                    pdf["url"], row_ids, pdf[src], *(pdf[c] for c in passthrough)):
+                if is_sentence:
+                    sents = ((row_id, payload),)
+                else:
+                    text = payload if src == "text" else extract_text(payload)
+                    sents = enumerate(split_sentences(text))
+                for sent_id, sent in sents:
+                    if emit(out, sent):
+                        urls.append(url)
+                        sent_ids.append(sent_id)
+                        for col, val in zip(kept, extras):
+                            col.append(val)
+            if urls:
                 # a zero-row chunk (e.g. every input row had null
                 # text/html) must yield NOTHING: pd.DataFrame of empty
                 # python lists infers float64 columns, and Arrow cannot
                 # convert an empty float64 to array<string>
                 yield pd.DataFrame(out)
 
-    return pages.select(*in_cols).mapInPandas(run, SENT_VIEWS_FLAT_SCHEMA + extra_schema)
+    in_cols = ["url", *(["sent_id"] if is_sentence else []), src, *passthrough]
+    return df.select(*in_cols).mapInPandas(
+        run, ", ".join(f"{c} {t}" for c, t in schema.items()))
+
+
+def tag_sentences_df(sentences: DataFrame) -> DataFrame:
+    """(url, sent_id, text) -> (url, sent_id, tokens, v1/v2/v3_preds,
+    t1..t3_cfd, cos12/cos23/cos13).
+
+    Reference record form: each view's per-token
+    {'word','tag','confidence'} (predict.py:114), so size(tokens) ==
+    size(preds) per view (the predict.py:113 invariant). Values equal
+    tag_pages_df's flat arrays sentence for sentence.
+    """
+    def emit(out: dict[str, list], text: str) -> bool:
+        toks, views = tag_all_views_stats(text)
+        out["tokens"].append(toks)
+        for v, (tags, confs, _, _) in enumerate(views, start=1):
+            out[f"v{v}_preds"].append([
+                {"word": w, "tag": t, "confidence": c}
+                for w, t, c in zip(toks, tags, confs)
+            ])
+        _emit_scores(out, views)
+        return True
+
+    return _sentence_pass(sentences, _STRUCT_COLS, emit)
+
+
+def tag_pages_df(pages: DataFrame, passthrough: list[str] | None = None) -> DataFrame:
+    """pages (url, html|text, ...) or sentences -> flat sent_views.
+
+    Parallel tags/confs arrays per view (word == tokens[i]) plus the
+    vote's cfd/cos columns; `passthrough` columns ride along unchanged.
+    A re-vote sweep materializes this once and runs vote_mentions over
+    it with other thresholds.
+    """
+    def emit(out: dict[str, list], text: str) -> bool:
+        toks, views = tag_all_views_stats(text)
+        out["tokens"].append(toks)
+        for v, (tags, confs, _, _) in enumerate(views, start=1):
+            out[f"t{v}_tags"].append(tags)
+            out[f"t{v}_confs"].append(confs)
+        _emit_scores(out, views)
+        return True
+
+    return _sentence_pass(pages, _FLAT_COLS, emit, passthrough)
 
 
 def tag_and_vote_pages_df(
@@ -513,96 +456,33 @@ def tag_and_vote_pages_df(
     core counts the socket/serialization work is kernel-heavy and
     contended, so shrinking it is what buys N->4N scaling efficiency;
     JVM-side it also removes the wide interpreted CASE trees from the
-    plan. The staged pipeline builds its `voted` stage with this; a
-    sweep that re-votes with other thresholds without re-tagging
-    materializes tag_pages_df once and runs vote_mentions over it.
+    plan. The staged pipeline builds its `voted` stage with this.
     """
-    from ..functions.textnorm import extract_text, split_sentences
-    from .mentions import vote_sentence_flat
+    def emit(out: dict[str, list], text: str) -> bool:
+        toks, views = tag_all_views_stats(text)
+        picked = vote_sentence_flat(
+            [v[0] for v in views], [v[1] for v in views], [v[3] for v in views],
+            cosines_from_counts(views[0][2], views[1][2], views[2][2]),
+            cos_threshold, tcfd_threshold, scfd_threshold,
+        )
+        if picked is None:
+            return False
+        # (tokens, tags, confs, selection_rule, cos_score)
+        for col, val in zip(_VOTED_COLS, (toks, *picked)):
+            out[col].append(val)
+        return True
 
-    passthrough = passthrough or []
-    has_text = "text" in pages.columns
-    in_cols = ["url", "text" if has_text else "html", *passthrough]
-    # Same column order as vote_mentions: url, sent_id, *extras, tokens, ...
-    extra_schema = "".join(
-        f"{f.name} {f.dataType.simpleString()}, "
-        for f in pages.schema.fields if f.name in passthrough
-    )
-    out_schema = (
-        "url string, sent_id bigint, " + extra_schema
-        + "tokens array<string>, tags array<string>, confs array<double>, "
-          "selection_rule string, cos_score double"
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        _resources()
-        for pdf in batches:
-            out: dict[str, list] = {
-                "url": [], "sent_id": [],
-                **{c: [] for c in passthrough},
-                "tokens": [], "tags": [],
-                "confs": [], "selection_rule": [], "cos_score": [],
-            }
-            src = pdf["text"] if has_text else pdf["html"]
-            for row_i, (url, payload) in enumerate(zip(pdf["url"], src)):
-                text = payload if has_text else extract_text(payload)
-                for sent_id, sent in enumerate(split_sentences(text)):
-                    toks, views = tag_all_views_stats(sent)
-                    tags_v = [v[0] for v in views]
-                    confs_v = [v[1] for v in views]
-                    cfds = [v[3] for v in views]
-                    cosines = cosines_from_counts(
-                        views[0][2], views[1][2], views[2][2])
-                    picked = vote_sentence_flat(
-                        tags_v, confs_v, cfds, cosines,
-                        cos_threshold, tcfd_threshold, scfd_threshold,
-                    )
-                    if picked is None:
-                        continue
-                    tags, confs, rule, cos = picked
-                    out["url"].append(url)
-                    out["sent_id"].append(sent_id)
-                    out["tokens"].append(toks)
-                    out["tags"].append(tags)
-                    out["confs"].append(confs)
-                    out["selection_rule"].append(rule)
-                    out["cos_score"].append(cos)
-                    for col in passthrough:
-                        out[col].append(pdf[col].iloc[row_i])
-            if out["url"]:
-                # a zero-row chunk (e.g. every input row had null
-                # text/html) must yield NOTHING: pd.DataFrame of empty
-                # python lists infers float64 columns, and Arrow cannot
-                # convert an empty float64 to array<string>
-                yield pd.DataFrame(out)
-
-    return pages.select(*in_cols).mapInPandas(run, out_schema)
+    return _sentence_pass(pages, _VOTED_COLS, emit, passthrough)
 
 
 def explode_sentences(pages: DataFrame) -> DataFrame:
     """pages -> (url, sent_id, text) via extract/split (S1/S2 analogs).
 
     Uses the `text` column when present (already-extracted corpora);
-    otherwise runs the byte-identical extractor over `html`. One fused
-    Arrow pass — chaining extract_text_udf and split_sentences_udf would
-    pipeline each task through TWO Python workers (see tag_pages_df).
+    otherwise runs the byte-identical extractor over `html`.
     """
-    from ..functions.textnorm import extract_text, split_sentences
+    def emit(out: dict[str, list], text: str) -> bool:
+        out["text"].append(text)
+        return True
 
-    has_text = "text" in pages.columns
-    src_col = "text" if has_text else "html"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls, ids, texts = [], [], []
-            for url, payload in zip(pdf["url"], pdf[src_col]):
-                text = payload if has_text else extract_text(payload)
-                for i, s in enumerate(split_sentences(text)):
-                    urls.append(url)
-                    ids.append(i)
-                    texts.append(s)
-            yield pd.DataFrame({"url": urls, "sent_id": ids, "text": texts})
-
-    return pages.select("url", src_col).mapInPandas(
-        run, "url string, sent_id bigint, text string"
-    )
+    return _sentence_pass(pages, {"text": "string"}, emit)
