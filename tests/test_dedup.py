@@ -232,7 +232,10 @@ def test_hash_families_agree_on_verified_pairs(spark):
     exact n-gram Jaccard verify the surviving near-dup pairs must agree
     (recall at the default 32x8 banding is ~1 for jaccard >= 0.8, and the
     verify step is hash-free). This is the bridge that lets the contract
-    entries (q19/q36, md5) vouch for the engine default (xxhash64)."""
+    entries (q19/q36, md5) vouch for the engine default (xxhash64).
+    The carried-shingle verify (pairs=None: shingles ride out of the
+    signature aggregate) must score exactly what the rejoin verify
+    scores for caller-supplied pairs."""
     df = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     out = {}
     for fam in ("xxhash64", "md5"):
@@ -240,7 +243,9 @@ def test_hash_families_agree_on_verified_pairs(spark):
         out[fam] = {(r["a"], r["b"]): r["jaccard"]
                     for r in ngram_jaccard_pairs(df, cands,
                                                  threshold=0.8).collect()}
-    assert out["xxhash64"] == out["md5"]
+    carried = {(r["a"], r["b"]): r["jaccard"]
+               for r in ngram_jaccard_pairs(df, threshold=0.8).collect()}
+    assert carried == out["xxhash64"] == out["md5"]
     assert out["md5"]  # non-vacuous: real near-dups exist at sf0.01
 
 
@@ -745,6 +750,19 @@ def test_semantic_dedup_empty_centroids_raise(spark):
     empty = spark.createDataFrame([], "cluster int, centroid array<double>")
     with pytest.raises(ValueError):
         semantic_dedup(df, centroids=empty)
+
+
+def test_semantic_dedup_duplicate_cluster_ids_raise(spark):
+    """Two centroids under one cluster id would merge their members into
+    one cluster ranked against different centroids; reject the set."""
+    from thesis_ner_co_tri_training_spark.operators.dedup import semantic_dedup
+
+    df = spark.createDataFrame(SEM_VECS, "vec_id long, embedding array<double>")
+    (c0, v0), (_, v1) = SEM_CENTS[:2]
+    dup = spark.createDataFrame([(c0, v0), (c0, v1)],
+                                "cluster int, centroid array<double>")
+    with pytest.raises(ValueError, match="distinct"):
+        semantic_dedup(df, centroids=dup)
 
 
 def test_semantic_dedup_drops_nonfinite_vectors(spark):

@@ -153,7 +153,8 @@ def test_lsh_skew_guard_at_max_bucket(spark):
     """Case variants of one word share every shingle, hence the whole
     signature and one bucket per band. A bucket of exactly max_bucket
     surfaces yields all its pairs (with their shingles); one more
-    surface and the bucket is dropped."""
+    surface and the bucket is dropped. The same holds for identical
+    docs through dedup.minhash_lsh_pairs."""
     variants = ["abc", "Abc", "aBc", "abC", "ABc", "AbC"]
     max_bucket = 5
 
@@ -168,3 +169,19 @@ def test_lsh_skew_guard_at_max_bucket(spark):
         if a < b)
     assert all(r["sh_a"] == r["sh_b"] == ["^ab", "abc", "bc$"] for r in got)
     assert pairs(variants[:max_bucket + 1]) == []
+
+    # dedup rides the same enumerator: identical docs share one bucket
+    # per band
+    from thesis_ner_co_tri_training_spark.operators.dedup import (
+        minhash_lsh_pairs)
+
+    def doc_pairs(k):
+        df = spark.createDataFrame(
+            [(i, "the same four words") for i in range(k)],
+            "doc_id long, text string")
+        return {(r["a"], r["b"]) for r in
+                minhash_lsh_pairs(df, max_bucket=max_bucket).collect()}
+
+    assert doc_pairs(max_bucket) == {
+        (a, b) for a in range(max_bucket) for b in range(max_bucket) if a < b}
+    assert doc_pairs(max_bucket + 1) == set()

@@ -1,7 +1,6 @@
 """Document deduplication suite for large-scale training-data pipelines.
 
-Five strategies, all DataFrame-first (the LSH machinery is shared with
-operators.linking — same band/bucket pattern at document granularity):
+Five strategies, all DataFrame-first:
 
   exact          md5 of normalized text, groupBy          (hash-groupBy)
   minhash-LSH    token-shingle minhash -> banded buckets  (scale path)
@@ -9,15 +8,22 @@ operators.linking — same band/bucket pattern at document granularity):
   ngram-jaccard  exact verify on candidate pairs
   embedding      cosine >= threshold on embedding pairs   (semantic dups)
 
+MinHash-LSH runs on operators.linking's band hash, bucket enumerator
+and jaccard_verify, at document granularity.
+
 At 100 TB: exact dedup is one shuffle on a 16-byte key; minhash banding
 keys the shuffle by (band, bucket) which is uniform by construction
-(hash output), so no skew; verification joins only candidate pairs.
+(hash output), so no skew beyond boilerplate buckets, which the
+max_bucket guard drops before any pair is formed.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .linking import (_band_buckets, _bucket_pairs, _shingle_hash,
+                      connected_components, jaccard_verify)
 
 # lower + collapse whitespace runs + TRIM. The trim matters: without it
 # leading/trailing whitespace leaves empty-string tokens after split
@@ -77,29 +83,6 @@ def _shingle_expr(n: int) -> str:
     )
 
 
-def _hash_fns(hasher: str):
-    """(shash, bhash) for a hash family: shash(col, i) hashes one
-    shingle under seed i; bhash(b, cols) hashes a band's signature
-    slice. Shared by minhash_bands and minhash_bands_narrow — the byte
-    recipe is the cross-engine oracle contract (hashutil docstring)."""
-    if hasher == "md5":
-        from ..functions.hashutil import md5_long
-
-        def shash(c, i: int) -> F.Column:
-            return md5_long(c, F.lit(str(i)))
-
-        def bhash(b: int, cols: list) -> F.Column:
-            return md5_long(F.lit(str(b)), *[c.cast("string") for c in cols])
-    else:
-        def shash(c, i: int) -> F.Column:
-            return F.xxhash64(c, F.lit(i))
-
-        def bhash(b: int, cols: list) -> F.Column:
-            return F.xxhash64(F.lit(b), *cols)
-
-    return shash, bhash
-
-
 def token_shingles_long(df: DataFrame, id_col: str = "doc_id",
                         text_col: str = "text", n: int = 3,
                         distinct: bool = True) -> DataFrame:
@@ -150,48 +133,64 @@ def token_shingles(df: DataFrame, id_col: str = "doc_id",
     )
 
 
+def _doc_signature(df: DataFrame, id_col: str, text_col: str, n: int,
+                   num_hashes: int, hasher: str) -> DataFrame:
+    """(id, shingles, h0 .. h{num_hashes-1}) per doc with >= n tokens:
+    num_hashes codegen'd mins over the long-form (doc, shingle) rows,
+    partially aggregated map-side, plus the doc's distinct shingles for
+    a verify (a caller that drops them prunes that aggregate away). The
+    shingle rows are not deduplicated first: min() doesn't need it."""
+    ex = token_shingles_long(df, id_col, text_col, n, distinct=False)
+    return ex.groupBy(id_col).agg(
+        F.array_distinct(F.collect_list("s")).alias("shingles"),
+        *[F.min(_shingle_hash(F.col("s"), i, hasher)).alias(f"h{i}")
+          for i in range(num_hashes)],
+    )
+
+
+def _doc_bands(num_hashes: int, bands: int, hasher: str) -> F.Column:
+    return _band_buckets([F.col(f"h{i}") for i in range(num_hashes)],
+                         bands, num_hashes // bands, hasher)
+
+
 def minhash_bands(df: DataFrame, id_col: str = "doc_id",
                   text_col: str = "text", n: int = 3,
                   num_hashes: int = 32, bands: int = 8,
                   hasher: str = "xxhash64") -> DataFrame:
     """Banded minhash rows (id, band, bucket) — the persistable LSH
-    index relation. minhash_lsh_pairs self-joins this for within-corpus
-    dedup; dedup_against_index writes it out once per corpus (via
-    catalog.write_table) and joins each new crawl batch's bands against
-    it, so an incremental batch pays O(batch) hashing instead of an
-    O(corpus) recompute. hasher/n/num_hashes/bands are part of the index
-    schema contract — a batch matched against an index built with
+    index relation. dedup_against_index writes it out once per corpus
+    (via catalog.write_table) and joins each new crawl batch's bands
+    against it, so an incremental batch pays O(batch) hashing instead of
+    an O(corpus) recompute. hasher/n/num_hashes/bands are part of the
+    index schema contract — a batch matched against an index built with
     different parameters silently finds nothing.
     """
-    rows_per_band = num_hashes // bands
-    # Long-form shingles + codegen'd min aggregates instead of per-row
-    # interpreted higher-order folds: num_hashes parallel mins over
-    # (doc, shingle) rows run in whole-stage codegen with map-side partial
-    # aggregation, and the shuffle carries only num_hashes longs per doc.
-    # distinct=False: min() is duplicate-insensitive, so the shingle
-    # dedup shuffle would be pure waste here. (The shingle helper's own
-    # _widen already spreads undersized local scans to full width.)
-    _shash, _bhash = _hash_fns(hasher)
+    # Materialize the signature table (num_hashes longs per doc, never
+    # the shingles): filter_index_buckets reads the index twice (bucket
+    # sizes + the join back), and without a cut Spark would re-run the
+    # whole shingle pipeline per read. At corpus scale this is exactly
+    # the table a production LSH job writes out before banding.
+    sig = (_doc_signature(df, id_col, text_col, n, num_hashes, hasher)
+           .drop("shingles").localCheckpoint(eager=True))
+    return sig.select(F.col(id_col), _doc_bands(num_hashes, bands, hasher))
 
-    ex = token_shingles_long(df, id_col, text_col, n, distinct=False)
-    sig = ex.groupBy(id_col).agg(*[
-        F.min(_shash(F.col("s"), i)).alias(f"h{i}") for i in range(num_hashes)
-    ])
-    # Materialize the signature table: `banded` below is referenced three
-    # times (bucket sizes + both join sides), and without a cut Spark
-    # re-evaluates the whole shingle pipeline per reference (~4x the cost
-    # of the query). sig is the compact point — num_hashes longs per doc;
-    # at corpus scale this is exactly the table a production LSH job
-    # writes out before banding.
-    sig = sig.localCheckpoint(eager=True)
-    return sig.select(
-        F.col(id_col),
-        F.posexplode(F.array(*[
-            _bhash(b, [F.col(f"h{b * rows_per_band + r}")
-                       for r in range(rows_per_band)])
-            for b in range(bands)
-        ])).alias("band", "bucket"),
-    )
+
+def _lsh_candidates(df: DataFrame, id_col: str = "doc_id",
+                    text_col: str = "text", n: int = 3,
+                    num_hashes: int = 32, bands: int = 8,
+                    max_bucket: int = 64, hasher: str = "xxhash64",
+                    carry_shingles: bool = True) -> DataFrame:
+    """Distinct (a, b, sh_a, sh_b) doc candidates, a < b: signature ->
+    band hash -> bucket enumerator. carry_shingles=False carries NULL
+    arrays, pruning collect_list out of the signature aggregate, which
+    keeps its mins in a codegen'd HashAggregate."""
+    sig = _doc_signature(df, id_col, text_col, n, num_hashes, hasher)
+    sh = (F.col("shingles") if carry_shingles
+          else F.lit(None).cast("array<string>"))
+    return _bucket_pairs(sig.select(
+        _doc_bands(num_hashes, bands, hasher),
+        F.struct(F.col(id_col).alias("k"), sh.alias("sh")).alias("m"),
+    ), max_bucket)
 
 
 def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
@@ -199,7 +198,8 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
                       num_hashes: int = 32, bands: int = 8,
                       max_bucket: int = 64,
                       hasher: str = "xxhash64") -> DataFrame:
-    """Candidate near-duplicate doc pairs via minhash banding.
+    """Candidate near-duplicate doc pairs (a, b), a < b, via minhash
+    banding: one collect_list per (band, bucket), pairs enumerated in it.
 
     rows_per_band = num_hashes // bands; collision prob ~ 1-(1-s^r)^b.
 
@@ -210,29 +210,14 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
     contract variant, q36); conv(hex,16,10) on 15 hex digits stays
     inside a signed 64-bit value.
 
-    Skew guard (`max_bucket`): buckets larger than max_bucket are dropped
-    before the pair join — an oversized bucket is non-discriminative
-    (boilerplate/template collisions) and would produce |B|^2 pairs; the
-    standard production mitigation is to skip it (the pairs it would
-    contribute are almost all false positives the verify step would
-    reject anyway). Dropped-bucket counts should be surfaced in stage
-    metrics when used inside the pipeline.
+    Skew guard (`max_bucket`): a bucket with more than max_bucket docs
+    forms no pairs — it is non-discriminative (boilerplate/template
+    collisions) and would produce |B|^2 pairs that the verify step
+    almost all rejects.
     """
-    banded = minhash_bands(df, id_col, text_col, n, num_hashes, bands,
-                           hasher)
-    sizes = banded.groupBy("band", "bucket").count()
-    banded = (
-        banded.join(sizes.filter(F.col("count") <= max_bucket), ["band", "bucket"])
-        .drop("count")
-    )
-    l, r = banded.alias("l"), banded.alias("r")
-    return (
-        l.join(r, (F.col("l.band") == F.col("r.band"))
-               & (F.col("l.bucket") == F.col("r.bucket"))
-               & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")))
-        .select(F.col(f"l.{id_col}").alias("a"), F.col(f"r.{id_col}").alias("b"))
-        .distinct()
-    )
+    return _lsh_candidates(df, id_col, text_col, n, num_hashes, bands,
+                           max_bucket, hasher,
+                           carry_shingles=False).select("a", "b")
 
 
 def ngram_jaccard_pairs(df: DataFrame, pairs: DataFrame | None = None,
@@ -240,24 +225,19 @@ def ngram_jaccard_pairs(df: DataFrame, pairs: DataFrame | None = None,
                         n: int = 3, threshold: float = 0.8) -> DataFrame:
     """Exact word-n-gram Jaccard on candidate pairs (or LSH candidates).
 
+    pairs=None verifies the LSH candidates' carried shingles; given
+    pairs are joined to token_shingles(df) on both sides.
+
     Output: a, b, jaccard (round 4) — pairs >= threshold.
     """
     if pairs is None:
-        pairs = minhash_lsh_pairs(df, id_col, text_col, n)
-    sh = token_shingles(df, id_col, text_col, n)
-    sa = sh.select(F.col(id_col).alias("a"), F.col("shingles").alias("sh_a"))
-    sb = sh.select(F.col(id_col).alias("b"), F.col("shingles").alias("sh_b"))
-    joined = pairs.join(sa, "a").join(sb, "b")
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    return (
-        joined.withColumn(
-            "jaccard",
-            F.round(F.when(union == 0, 0.0).otherwise(inter / union), 4),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("a", "b", "jaccard")
-    )
+        cand = _lsh_candidates(df, id_col, text_col, n)
+    else:
+        sh = token_shingles(df, id_col, text_col, n)
+        sa = sh.select(F.col(id_col).alias("a"), F.col("shingles").alias("sh_a"))
+        sb = sh.select(F.col(id_col).alias("b"), F.col("shingles").alias("sh_b"))
+        cand = pairs.join(sa, "a").join(sb, "b")
+    return jaccard_verify(cand, threshold).select("a", "b", "jaccard")
 
 
 def set_similarity_join(df: DataFrame, id_col: str = "doc_id",
@@ -612,12 +592,10 @@ def near_dup_clusters(
     Output: (id_col, cluster_id, keep). Ids are zero-padded through the
     string-keyed CC and cast back, so lexicographic == numeric order.
     """
-    from .linking import connected_components
-
-    pairs = minhash_lsh_pairs(df, id_col, text_col, n, num_hashes, bands,
-                              max_bucket, hasher=hasher)
-    verified = ngram_jaccard_pairs(df, pairs, id_col, text_col, n,
-                                   jaccard_threshold)
+    verified = jaccard_verify(
+        _lsh_candidates(df, id_col, text_col, n, num_hashes, bands,
+                        max_bucket, hasher),
+        jaccard_threshold)
     pad = lambda c: F.lpad(F.col(c).cast("string"), 12, "0")
     comps = connected_components(
         verified.select(pad("a").alias("a"), pad("b").alias("b"))
@@ -870,18 +848,18 @@ def minhash_bands_narrow(df: DataFrame, id_col: str = "doc_id",
                          keep_shingles: bool = False) -> DataFrame:
     """Per-row, ZERO-shuffle twin of minhash_bands — identical output
     rows (pinned by test): h_i = array_min(transform(shingles,
-    s -> hash(s, i))) equals the exploded groupBy-min because both are
-    the min of the same hashed multiset; band hashes then use the same
-    _hash_fns recipe. Docs shorter than n tokens emit no rows, as in
-    the exploded form.
+    s -> hash(s, i))) equals the signature aggregate's groupBy-min
+    because both are the min of the same hashed multiset, and the bands
+    come from the same band-hash expression (linking._band_buckets).
+    Docs shorter than n tokens emit no rows, as in the aggregate form.
 
     Because there is no aggregation, this form runs UNCHANGED on a
     stream — no state, no watermark — which is what makes stream-static
     dedup against a persisted index possible (streaming.ingest.
     dedup_against_index_stream). `keep` passes through extra columns
     (e.g. the event-time column); `keep_shingles` adds the distinct
-    shingle array (token_shingles semantics) so a downstream verify can
-    compute exact Jaccard without rejoining the stream.
+    shingle array (token_shingles semantics) so a downstream
+    jaccard_verify can score pairs without rejoining the stream.
 
     Trade: num_hashes array traversals per row instead of one shuffle.
     In a micro-batch, or when the corpus scan is already wide, that is
@@ -889,8 +867,6 @@ def minhash_bands_narrow(df: DataFrame, id_col: str = "doc_id",
     exploded form partial-aggregates map-side and its signature table
     localCheckpoints for reuse).
     """
-    rows_per_band = num_hashes // bands
-    shash, bhash = _hash_fns(hasher)
     toks = df.select(
         id_col, *keep, F.split(NORM(F.col(text_col)), " ").alias("__t")
     )
@@ -903,24 +879,16 @@ def minhash_bands_narrow(df: DataFrame, id_col: str = "doc_id",
     # lambda would make Spark bind the second parameter to the array
     # INDEX, silently replacing the seed.
     def _minhash(i: int) -> F.Column:
-        return F.array_min(F.transform("__sh", lambda s: shash(s, i)))
+        return F.array_min(F.transform("__sh",
+                                       lambda s: _shingle_hash(s, i, hasher)))
 
-    extra = (
-        [F.array_distinct("__sh").alias("shingles")] if keep_shingles
-        else []
-    )
     sig = sh.filter(F.size("__sh") > 0).select(
-        id_col, *keep, *extra,
+        id_col, *keep, F.array_distinct("__sh").alias("shingles"),
         *[_minhash(i).alias(f"h{i}") for i in range(num_hashes)],
     )
-    out_extra = ["shingles"] if keep_shingles else []
     return sig.select(
-        F.col(id_col), *keep, *out_extra,
-        F.posexplode(F.array(*[
-            bhash(b, [F.col(f"h{b * rows_per_band + r}")
-                      for r in range(rows_per_band)])
-            for b in range(bands)
-        ])).alias("band", "bucket"),
+        F.col(id_col), *keep, *(["shingles"] if keep_shingles else []),
+        _doc_bands(num_hashes, bands, hasher),
     )
 
 
@@ -1007,9 +975,16 @@ def semantic_dedup(emb: DataFrame, centroids: DataFrame | None = None,
         centroids = kmeans_centroids(emb, nlist=nlist, vec_col=vec_col,
                                      seed=seed)
     centroids = centroids.select("cluster", "centroid")
-    ncent = centroids.count()   # scalar action; centroid sets are small
+    # one scalar action (centroid sets are small); a repeated cluster id
+    # would rank one cluster's members against different centroids
+    ncent, nids = centroids.agg(
+        F.count(F.lit(1)), F.count_distinct("cluster")).first()
     if ncent == 0:
         raise ValueError("semantic_dedup: empty centroid set")
+    if nids != ncent:
+        raise ValueError(
+            f"semantic_dedup: {ncent} centroids but {nids} distinct "
+            "non-NULL cluster ids")
 
     # drop unusable vectors: NULL/empty, and any non-finite component
     # (isnan(x - x) is true for both NaN and +/-inf)

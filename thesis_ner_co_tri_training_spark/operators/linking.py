@@ -1,4 +1,5 @@
-"""Entity linking + cross-document canonicalization.
+"""Entity linking + cross-document canonicalization, and the MinHash-LSH
+core that operators.dedup shares.
 
 Generalizes the reference's agreement check (J4: equi-join then cosine
 verify, co_training.py:263-265) into the scalable two-phase pattern the
@@ -9,13 +10,13 @@ north star names explicitly:
      mention count and shingles; the signature is one higher-order SQL
      expression (xxhash64 with per-hash seeds).
      Each (band, bucket) is grouped ONCE into a list of its members'
-     (surface, shingles), and candidate pairs are enumerated inside the
+     (key, shingles), and candidate pairs are enumerated inside the
      bucket, carrying both shingle arrays — no bucket-size join and no
      self-join. All hashing is JVM-side; candidate generation touches
      only DISTINCT surfaces, not mention rows.
   2. Verify: exact n-gram Jaccard similarity on the candidate pairs,
-     scored in place from the carried shingles (the reference's
-     cosine-check role).
+     scored in place from the carried shingles (jaccard_verify, the
+     reference's cosine-check role).
   3. Canonicalize: alternating large-star/small-star connected
      components over the verified-pair edge set, checkpointed once per
      round to truncate lineage — SURVEY §4's one hand-rolled iterative
@@ -32,6 +33,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
+
+from ..functions.hashutil import md5_long
 
 
 def surface_shingles(df: DataFrame, col: str = "surface", n: int = 3) -> DataFrame:
@@ -66,6 +69,50 @@ def minhash_signature(df: DataFrame, num_hashes: int = 16,
         "*", sig.alias("sig", metadata={"num_hashes": num_hashes}))
 
 
+def _shingle_hash(c, i: int, hasher: str) -> F.Column:
+    """Shingle c hashed under seed i. With _band_buckets' band hash, the
+    cross-engine oracle byte recipe (hashutil docstring)."""
+    if hasher == "md5":
+        return md5_long(c, F.lit(str(i)))
+    return F.xxhash64(c, F.lit(i))
+
+
+def _band_buckets(cols: list, bands: int, rows_per_band: int,
+                  hasher: str = "xxhash64") -> F.Column:
+    """posexplode(band, bucket): band b hashes the signature slice
+    cols[b*rows_per_band : (b+1)*rows_per_band]. The one band hash of
+    every LSH relation (linking, dedup pairs, the persisted dedup index
+    and its per-row stream twin)."""
+    def bhash(b: int, cs: list) -> F.Column:
+        if hasher == "md5":
+            return md5_long(F.lit(str(b)), *[c.cast("string") for c in cs])
+        return F.xxhash64(F.lit(b), *cs)
+
+    return F.posexplode(F.array(*[
+        bhash(b, cols[b * rows_per_band:(b + 1) * rows_per_band])
+        for b in range(bands)
+    ])).alias("band", "bucket")
+
+
+def _bucket_pairs(rows: DataFrame, max_bucket: int) -> DataFrame:
+    """(band, bucket, m = struct(k, sh)) rows -> distinct (a, b, sh_a,
+    sh_b) with a < b: one collect_list per bucket, pairs enumerated
+    inside it. Skew guard: a bucket with more than max_bucket members is
+    non-discriminative (boilerplate, power-law surfaces) and forms no
+    pairs rather than |B|^2 ones the verify would almost all reject."""
+    buckets = (
+        rows.groupBy("band", "bucket")
+        .agg(F.collect_list("m").alias("ms"))
+        .filter(F.size("ms") <= max_bucket)
+    )
+    pairs = F.flatten(F.transform("ms", lambda x: F.transform(
+        F.filter("ms", lambda y: x["k"] < y["k"]),
+        lambda y: F.struct(x["k"].alias("a"), y["k"].alias("b"),
+                           x["sh"].alias("sh_a"), y["sh"].alias("sh_b")),
+    )))
+    return buckets.select(F.inline(pairs)).distinct()
+
+
 def lsh_candidate_pairs(df: DataFrame, bands: int = 4, rows_per_band: int = 4,
                         key: str = "surface", max_bucket: int = 256) -> DataFrame:
     """Band the signature and pair the members of each band bucket.
@@ -73,8 +120,7 @@ def lsh_candidate_pairs(df: DataFrame, bands: int = 4, rows_per_band: int = 4,
     Input: (key, shingles, sig) rows, `sig` built by minhash_signature.
     Output: distinct (a, b, sh_a, sh_b) candidate pairs with a < b and
     both shingle arrays, ready for jaccard_verify. Buckets with more than
-    max_bucket members are dropped (non-discriminative — see
-    dedup.minhash_lsh_pairs; |B|^2 blow-up guard for power-law surfaces).
+    max_bucket members are dropped (_bucket_pairs' skew guard).
     """
     # Fail fast at the driver: banding reads sig[b*rows_per_band + r + 1]
     # up to bands*rows_per_band — past the signature length that's an
@@ -90,50 +136,29 @@ def lsh_candidate_pairs(df: DataFrame, bands: int = 4, rows_per_band: int = 4,
             f"lsh_candidate_pairs: bands*rows_per_band = "
             f"{bands * rows_per_band} exceeds signature length "
             f"{n} (num_hashes at signature build)")
-    buckets = (
-        df.select(
-            F.posexplode(
-                F.array(*[
-                    F.xxhash64(
-                        F.lit(b),
-                        *[F.element_at("sig", b * rows_per_band + r + 1)
-                          for r in range(rows_per_band)],
-                    )
-                    for b in range(bands)
-                ])
-            ).alias("band", "bucket"),
-            F.struct(F.col(key).alias("k"), F.col("shingles").alias("sh"))
-            .alias("m"),
-        )
-        .groupBy("band", "bucket")
-        .agg(F.collect_list("m").alias("ms"))
-        .filter(F.size("ms") <= max_bucket)
-    )
-    pairs = F.flatten(F.transform("ms", lambda x: F.transform(
-        F.filter("ms", lambda y: x["k"] < y["k"]),
-        lambda y: F.struct(x["k"].alias("a"), y["k"].alias("b"),
-                           x["sh"].alias("sh_a"), y["sh"].alias("sh_b")),
-    )))
-    return buckets.select(F.inline(pairs)).distinct()
+    cols = [F.element_at("sig", i + 1) for i in range(bands * rows_per_band)]
+    return _bucket_pairs(df.select(
+        _band_buckets(cols, bands, rows_per_band),
+        F.struct(F.col(key).alias("k"), F.col("shingles").alias("sh"))
+        .alias("m"),
+    ), max_bucket)
 
 
 def jaccard_verify(pairs: DataFrame, threshold: float = 0.6) -> DataFrame:
     """Exact n-gram Jaccard on candidates (the J4 'verify' step), scored
     from the shingle arrays the pairs carry (sh_a, sh_b).
 
-    round 4 per the reference's score convention (utils.py:70).
+    Output: (a, b, jaccard, the pairs' other columns) — only sh_a/sh_b
+    are dropped. round 4 per the reference's score convention
+    (utils.py:70).
     """
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size(F.array_union("sh_a", "sh_b"))
+    jaccard = F.round(F.when(union == 0, F.lit(0.0)).otherwise(inter / union), 4)
+    rest = [c for c in pairs.columns if c not in ("a", "b", "sh_a", "sh_b")]
     return (
-        pairs.withColumn(
-            "jaccard",
-            F.round(
-                F.when(union == 0, F.lit(0.0)).otherwise(inter / union), 4
-            ),
-        )
+        pairs.select("a", "b", jaccard.alias("jaccard"), *rest)
         .filter(F.col("jaccard") >= threshold)
-        .select("a", "b", "jaccard")
     )
 
 

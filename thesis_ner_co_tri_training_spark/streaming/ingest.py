@@ -302,15 +302,17 @@ def dedup_against_index_stream(
     arriving doc with the ZERO-state per-row form
     (minhash_bands_narrow, pinned row-identical to the batch builder),
     so the whole path is: narrow banding -> stream-static equi-join on
-    (band, bucket) -> per-row exact-Jaccard verify against the old
-    doc's static shingle set -> watermarked dedup of the per-band
-    match multiplicity. State is only the (new, old) pairs inside the
+    (band, bucket) -> per-row linking.jaccard_verify of the stream doc's
+    carried shingles against the old doc's static shingle set (ts_col
+    passes through) -> watermarked dedup of the per-band match
+    multiplicity. State is only the (new, old) pairs inside the
     watermark horizon.
 
     Output: (a = new id, b = old id, jaccard round-4, ts_col) — same
     row contract as dedup_against_index, batch-parity pinned by test.
     """
     from ..operators.dedup import filter_index_buckets, minhash_bands_narrow
+    from ..operators.linking import jaccard_verify
 
     # The static side of a stream-static join is re-evaluated on EVERY
     # micro-batch, so the skew-guard groupBy over the whole persisted
@@ -332,17 +334,7 @@ def dedup_against_index_stream(
         old_shingles.select(F.col(id_col).alias("b"),
                             F.col("shingles").alias("sh_b")),
         "b",
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    verified = (
-        cand.withColumn(
-            "jaccard",
-            F.round(F.when(union == 0, 0.0).otherwise(inter / union), 4),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("a", "b", "jaccard", ts_col)
-    )
-    return verified.withWatermark(
+    ).drop("band", "bucket")
+    return jaccard_verify(cand, threshold).withWatermark(
         ts_col, watermark
     ).dropDuplicatesWithinWatermark(["a", "b"])
