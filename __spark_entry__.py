@@ -1371,7 +1371,9 @@ def q81_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5-fate-ranked top-quota docs. Every quantity is BIGINT and the
     fate order is the engine-portable md5 recipe, so the drawn sample
     is repr-exact vs DuckDB — unlike any Bernoulli sampleBy(), which
-    only hits quotas in expectation and moves with partition layout."""
+    only hits quotas in expectation and moves with partition layout.
+    A NULL source is a stratum of its own on both sides: a null-safe
+    quota join, and NULLS FIRST in the remainder tie-break."""
     from thesis_ner_co_tri_training_spark.operators.selection import (
         stratified_sample)
 
@@ -1397,7 +1399,7 @@ _Q81_SQL = """
     ), used AS (SELECT sum(b) AS u FROM base),
     rankedq AS (
         SELECT source, b, r,
-               row_number() OVER (ORDER BY r DESC, source) AS rk
+               row_number() OVER (ORDER BY r DESC, source NULLS FIRST) AS rk
         FROM base
     ),
     alloc AS (
@@ -1421,7 +1423,7 @@ _Q81_SQL = """
     )
     SELECT rk.doc_id, rk.source, rk.rank_in_stratum, a.alloc,
            rk.rank_in_stratum <= a.alloc AS kept
-    FROM rk JOIN alloc a USING (source)
+    FROM rk JOIN alloc a ON rk.source IS NOT DISTINCT FROM a.source
     ORDER BY doc_id
 """
 

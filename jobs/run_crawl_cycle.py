@@ -33,11 +33,11 @@ Crash safety, in order of what can be lost:
     functions of the warehouse state, so the rerun recomputes the
     identical batch and tag.
   - mid-INGEST: the pipeline's own per-stage resume finishes the batch
-    (every cycle first recovers an unfinished pages batch by tag).
+    (every cycle first runs pipeline.finish_last_batch).
   - after INGEST, before/mid INDEX MAINT: the index repair loop scans
     ALL cycle-tagged pages snapshots and re-derives any batch missing
-    from the index tables via the pages incremental scan (per-table
-    idempotent by tag) — the run_dedup.py repair shape, but re-derived
+    from the index tables from the rows its pages snapshot added
+    (catalog.read_added; per-table idempotent by tag) — the run_dedup.py repair shape, but re-derived
     from the warehouse instead of regenerated.
 A rerun of a fully completed cycle set proceeds to the NEXT cycle
 (frontier advanced); rerunning mid-crash never double-appends (tags).
@@ -59,20 +59,17 @@ INDEX_KW = dict(n=3, num_hashes=32, bands=8, hasher="xxhash64")
 
 
 def _index_kw(warehouse: str) -> dict:
-    """Index params persisted with this warehouse's own index (newest
-    snapshot carrying them, else the expiry ledger — the run_dedup
-    `_latest_params` pattern). INDEX_KW only seeds a brand-new
+    """Index params persisted with this warehouse's own index (the
+    newest entry of the dedup_docs `history` carrying them — the
+    run_dedup `_latest_params` pattern). INDEX_KW only seeds a brand-new
     warehouse: hashing new batches with drifted defaults against an
     index built under the old params would silently stop banding
     collisions, so the persisted params always win."""
     from thesis_ner_co_tri_training_spark.sources import catalog
 
-    for s in reversed(catalog.snapshots(warehouse, "dedup_docs")):
+    for s in reversed(catalog.history(warehouse, "dedup_docs")):
         if "hasher" in s.get("params", {}):
             return {k: s["params"][k] for k in INDEX_KW}
-    for e in reversed(catalog.batch_ledger(warehouse, "dedup_docs")):
-        if "hasher" in e.get("params", {}):
-            return {k: e["params"][k] for k in INDEX_KW}
     return dict(INDEX_KW)
 
 
@@ -111,69 +108,42 @@ def _pages_batches(warehouse):
     from this job and 'pages-*' from run_pipeline --append-pages; the
     two jobs may interleave on one warehouse, and a family-blind scan
     here made the frontier reset to 0 and re-append already-ingested
-    pages). Live snapshots PLUS the expiry ledger, so table maintenance
-    (compact + expire-keep on the pages table) never resets the
-    frontier high-water mark or the already-appended set back to zero
-    (ledger entries keep the full params, including frontier_end)."""
+    pages). The pages `history`, expired snapshots included, so table
+    maintenance (compact + expire-keep on the pages table) never resets
+    the frontier high-water mark or the already-appended set back to
+    zero (ledger entries keep the full params, including frontier_end)."""
     from thesis_ner_co_tri_training_spark.sources import catalog
 
-    by_id: dict[int, dict] = {}
-    for s in (catalog.batch_ledger(warehouse, "pages")
-              + catalog.snapshots(warehouse, "pages")):
-        tag = str(s.get("params", {}).get("batch_tag", ""))
-        if tag.startswith("cycle-") or tag.startswith("pages-"):
-            by_id[s["snapshot_id"]] = s
-    return [by_id[i] for i in sorted(by_id)]
+    return [s for s in catalog.history(warehouse, "pages")
+            if str(s.get("params", {}).get("batch_tag", ""))
+            .startswith(("cycle-", "pages-"))]
 
 
 def recover(spark, warehouse: str) -> dict:
     """Finish any half-done previous cycle: resume its pipeline batch,
     then repair the index tables from the warehouse (idempotent)."""
-    from pyspark.sql import functions as F
-
     from thesis_ner_co_tri_training_spark.operators.dedup import (
         minhash_bands, token_shingles)
     from thesis_ner_co_tri_training_spark.plans.pipeline import (
-        run_pipeline_incremental)
+        finish_last_batch)
     from thesis_ner_co_tri_training_spark.sources import catalog
 
-    done = {"resumed_pipeline": None, "repaired_index": []}
-    batches = _pages_batches(warehouse)
-    if not batches:
-        return done
-    last = batches[-1]
-    # snapshots + ledger: an expire-keep on edges must not look like an
-    # unfinished batch (re-resuming a finished one crashes append_stage)
-    edges_done = {s.get("params", {}).get("pages_snapshot")
-                  for s in catalog.snapshots(warehouse, "edges")}
-    edges_done |= {e.get("params", {}).get("pages_snapshot")
-                   for e in catalog.batch_ledger(warehouse, "edges")}
-    if last["snapshot_id"] not in edges_done:
-        tag = last["params"]["batch_tag"]
-        run_pipeline_incremental(spark, None, warehouse, batch_tag=tag)
-        done["resumed_pipeline"] = tag
-
+    done = {"resumed_pipeline": finish_last_batch(spark, warehouse),
+            "repaired_index": []}
     kw = _index_kw(warehouse)
-    for snap in batches:
+    for snap in _pages_batches(warehouse):
         tag = snap["params"]["batch_tag"]
         if tag in catalog.batch_tags(warehouse, "dedup_shingles") \
                 and tag in catalog.batch_tags(warehouse, "dedup_index") \
                 and tag in catalog.batch_tags(warehouse, "dedup_docs"):
             continue
         # An UNindexed batch whose pages snapshot was already expired
-        # cannot be re-derived; read_table/read_incremental then raise
-        # loudly (normal operation indexes each batch within its own
-        # cycle, so only a crash-before-step-5 + maintenance-before-
-        # rerun sequence can reach that state).
-        parent = snap.get("parent_snapshot_id")
-        if parent is None:
-            delta = catalog.read_table(spark, warehouse, "pages",
-                                       snapshot_id=snap["snapshot_id"])
-        else:
-            delta = catalog.read_incremental(
-                spark, warehouse, "pages", from_snapshot=parent,
-                to_snapshot=snap["snapshot_id"])
-        docs = delta.select("url", "text").localCheckpoint(eager=True)
+        # cannot be re-derived; read_added then raises loudly (normal
+        # operation indexes each batch within its own cycle, so only a
+        # crash-before-step-5 + maintenance-before-rerun sequence can
+        # reach that state).
+        docs = (catalog.read_added(spark, warehouse, "pages", snap)
+                .select("url", "text").localCheckpoint(eager=True))
         params = {**kw, "batch_tag": tag}
         for table, build in (
             ("dedup_docs", lambda: docs),
@@ -243,6 +213,10 @@ def run_cycle(spark, warehouse: str, budget: int,
                    .withColumn("weight", F.lit(1)))
     alloc = apportion_budget(weights, budget, key_col="domain",
                              weight_col="weight")
+    # one row per domain: evaluate the apportionment once; the crawl
+    # join and the report both use these rows
+    alloc_rows = alloc.collect()
+    alloc = spark.createDataFrame(alloc_rows, alloc.schema)
 
     # 2. CRAWL — deterministic per-domain take (id order); a domain's
     # allocation can exceed its frontier supply, so crawled <= budget
@@ -280,9 +254,8 @@ def run_cycle(spark, warehouse: str, budget: int,
     # pages batch, so the loop appends its docs/bands/shingles
     indexed = recover(spark, warehouse)
 
-    top = {r["domain"]: r["alloc"]
-           for r in alloc.orderBy(F.col("alloc").desc(), "domain")
-           .limit(5).collect()}
+    top = {r["domain"]: r["alloc"] for r in sorted(
+        alloc_rows, key=lambda r: (-r["alloc"], r["domain"]))[:5]}
     return {
         "cycle_tag": tag,
         "frontier": [frontier_start, frontier_start + n_frontier],

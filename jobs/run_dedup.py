@@ -81,18 +81,14 @@ def _mirror(pages, tag: str):
 
 
 def _latest_params(wh: str, table: str, key: str):
-    """Newest snapshot params carrying `key` — compaction snapshots
-    interleave without batch params, and expired batches live on in
-    the ledger."""
-    from thesis_ner_co_tri_training_spark.sources.catalog import (
-        batch_ledger, snapshots)
+    """Newest params carrying `key` in the table's `history` —
+    compaction snapshots interleave without batch params, and expired
+    batches live on in the ledger."""
+    from thesis_ner_co_tri_training_spark.sources.catalog import history
 
-    for s in reversed(snapshots(wh, table)):
+    for s in reversed(history(wh, table)):
         if key in s.get("params", {}):
             return s["params"]
-    for e in reversed(batch_ledger(wh, table)):
-        if key in e.get("params", {}):
-            return e["params"]
     return None
 
 
@@ -140,7 +136,7 @@ def do_append(spark, wh: str, n: int, threshold: float = 0.8) -> dict:
     from thesis_ner_co_tri_training_spark.operators.dedup import (
         dedup_against_index, minhash_bands, token_shingles)
     from thesis_ner_co_tri_training_spark.sources.catalog import (
-        batch_ledger, batch_tags, read_table, snapshots, write_table)
+        batch_tags, history, read_table, write_table)
     from thesis_ner_co_tri_training_spark.sources.pages import gen_pages_df
 
     kw = index_kw(wh)
@@ -184,8 +180,7 @@ def do_append(spark, wh: str, n: int, threshold: float = 0.8) -> dict:
     # maintenance table is replayed (batches regenerate exactly from
     # their recorded start/size)
     repaired = []
-    match_recs = ([s["params"] for s in snapshots(wh, "dedup_matches")]
-                  + [e["params"] for e in batch_ledger(wh, "dedup_matches")])
+    match_recs = [s.get("params", {}) for s in history(wh, "dedup_matches")]
     for p in match_recs:
         tag = p.get("batch_tag")
         if not tag:

@@ -59,47 +59,24 @@ def main() -> int:
 
     if args.append_pages is not None:
         from thesis_ner_co_tri_training_spark.plans.pipeline import (
-            run_pipeline_incremental)
+            finish_last_batch, pages_frontier, run_pipeline_incremental)
         from thesis_ner_co_tri_training_spark.sources import catalog
 
-        from thesis_ner_co_tri_training_spark.plans.pipeline import (
-            pages_frontier)
-
-        recovered = None
+        if (catalog.latest_snapshot(args.warehouse, "pages") is not None
+                and not catalog.batch_tags(args.warehouse, "pages")):
+            print(json.dumps({
+                "error": "--append-pages requires an incremental "
+                         "warehouse: the pages table has snapshots but "
+                         "none carries a batch_tag (it was written by "
+                         "full-mode run_pipeline). Start a fresh "
+                         "warehouse for incremental mode."}),
+                file=sys.stderr)
+            return 1
+        # crash recovery: finish the last appended batch first if it
+        # never reached the final stage (resumed by tag, no page
+        # regeneration)
+        recovered = finish_last_batch(spark, args.warehouse)
         prev = catalog.latest_snapshot(args.warehouse, "pages")
-        if prev is not None:
-            # crash recovery: if the last appended BATCH never reached the
-            # final stage, finish it first (its pages are already in the
-            # warehouse — resume by tag, no page regeneration). The last
-            # batch is the newest snapshot carrying a batch_tag, NOT the
-            # latest snapshot: compaction/maintenance snapshots carry no
-            # tag and add no pages.
-            last_batch = next(
-                (s for s in reversed(catalog.snapshots(args.warehouse,
-                                                       "pages"))
-                 if s.get("params", {}).get("batch_tag")), None)
-            if last_batch is None and not catalog.batch_ledger(
-                    args.warehouse, "pages"):
-                print(json.dumps({
-                    "error": "--append-pages requires an incremental "
-                             "warehouse: the pages table has snapshots but "
-                             "none carries a batch_tag (it was written by "
-                             "full-mode run_pipeline). Start a fresh "
-                             "warehouse for incremental mode."}),
-                    file=sys.stderr)
-                return 1
-            if last_batch is not None:
-                edges_done = {
-                    s.get("params", {}).get("pages_snapshot")
-                    for s in catalog.snapshots(args.warehouse, "edges")}
-                edges_done |= {
-                    e.get("params", {}).get("pages_snapshot")
-                    for e in catalog.batch_ledger(args.warehouse, "edges")}
-                if last_batch["snapshot_id"] not in edges_done:
-                    recovered = last_batch["params"]["batch_tag"]
-                    run_pipeline_incremental(spark, None, args.warehouse,
-                                             batch_tag=recovered)
-                prev = catalog.latest_snapshot(args.warehouse, "pages")
         # start from the shared generation frontier, not row_count alone:
         # crawl-cycle batches (run_crawl_cycle) advance the frontier past
         # row_count when their dedup gate drops candidates, and starting

@@ -139,18 +139,14 @@ def main() -> int:
             "seconds": round(elapsed, 2),
             "rows_in_sink": snap["row_count"] if snap else 0,
             "snapshot_id": snap["snapshot_id"] if snap else None,
-            # Count batches from live snapshots PLUS the expired-snapshot
-            # ledger — after table_maint --expire-keep the snapshots alone
-            # under-count the exactly-once history (CLAUDE.md expiry rule).
-            "stream_batches": len(set(
+            # Count batches over the table's history, expired snapshots
+            # included — after table_maint --expire-keep the snapshots
+            # alone under-count the exactly-once history.
+            "stream_batches": len({
                 s["params"]["batch_tag"]
-                for s in catalog.snapshots(args.warehouse, args.what)
-                if s["params"].get("stream_batch_id") is not None
-            ) | set(
-                e["params"]["batch_tag"]
-                for e in catalog.batch_ledger(args.warehouse, args.what)
-                if e.get("params", {}).get("stream_batch_id") is not None
-            )),
+                for s in catalog.history(args.warehouse, args.what)
+                if s.get("params", {}).get("stream_batch_id") is not None
+            }),
             "exactly_once": True,
             "catalog_table": f"{args.warehouse}/{args.what}",
         }))

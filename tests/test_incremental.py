@@ -105,6 +105,38 @@ def test_skipped_batch_rejected_then_resumable_in_order(spark, tmp_path):
     assert n_voted == lin3["voted"]["row_count"]
 
 
+def test_resume_after_parent_manifest_expired(spark, warehouses, tmp_path):
+    """Crash after b2's pages append, then expire the pages table down
+    to b2's snapshot: b1's manifest (b2's parent) is gone. Resuming b2
+    by tag reads the rows b2's own snapshot added, so voted ends equal,
+    row for row, to the 2-batch run without the expiry."""
+    _, inc_wh, _, _ = warehouses
+    wh = str(tmp_path)
+    run_pipeline_incremental(
+        spark, gen_pages_df(spark, N_BATCH1, partitions=4), wh,
+        batch_tag="b1")
+    catalog.write_table(
+        gen_pages_df(spark, N_FULL - N_BATCH1, partitions=4,
+                     start=N_BATCH1),
+        wh, "pages", stage_params={"batch_tag": "b2"}, mode="append")
+    catalog.expire_snapshots(wh, "pages", keep_last=1)
+    lin2 = run_pipeline_incremental(spark, None, wh, batch_tag="b2")
+    assert lin2["pages"]["resumed"] is True
+    assert _rows(spark, wh, "voted") == _rows(spark, inc_wh, "voted")
+
+
+def test_resume_refuses_other_params(spark, tmp_path):
+    """Resuming a finished batch under other params raises, as a
+    full-mode resume does, instead of returning outputs built under the
+    old thresholds labeled as this run's."""
+    wh = str(tmp_path)
+    run_pipeline_incremental(spark, gen_pages_df(spark, 4, partitions=2),
+                             wh, batch_tag="b1")
+    with pytest.raises(ValueError, match="params"):
+        run_pipeline_incremental(spark, None, wh, "b1",
+                                 params={"cos_threshold": 0.9})
+
+
 def test_resume_unknown_tag_requires_pages(spark, tmp_path):
     wh = str(tmp_path)
     run_pipeline_incremental(spark, gen_pages_df(spark, 2, partitions=2),

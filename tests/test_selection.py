@@ -467,3 +467,28 @@ def test_stratified_sample_null_stratum_and_null_key(spark):
             spark.createDataFrame([(None, "a"), (1, "a")],
                                   "doc_id bigint, source string"),
             1).collect()
+
+
+def test_q81_oracle_null_stratum_parity(spark, tmp_path):
+    """q81's DuckDB oracle treats a NULL source as the engine does: a
+    stratum of its own (null-safe quota join), ranked NULLS FIRST in
+    the remainder tie-break. Three equal strata tie on remainder with
+    two seats left over, so the tie-break decides which one goes short."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as entry
+
+    path = str(tmp_path / "documents.parquet")
+    pq.write_table(pa.table({
+        "doc_id": pa.array(range(6), pa.int64()),
+        "source": pa.array([None, None, "a", "a", "b", "b"], pa.string()),
+    }), path)
+    got = [tuple(r) for r in
+           entry.q81_stratified_sample(spark, str(tmp_path)).collect()]
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}')")
+    want = con.execute(entry.oracle_sql()["q81_stratified_sample"]).fetchall()
+    assert got == [tuple(r) for r in want]
+    assert {r[1]: r[3] for r in got} == {None: 66, "a": 66, "b": 65}

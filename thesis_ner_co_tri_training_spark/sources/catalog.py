@@ -17,7 +17,8 @@ capabilities the north rule's 10^12-document table needs, without jars:
                  manifest, regardless of later writes
 - incremental -> `read_incremental(from, to)` reads ONLY the dirs added
                  between two snapshots (Iceberg incremental scan;
-                 raises if a non-append rewrite broke the lineage)
+                 raises if a non-append rewrite broke the lineage);
+                 `read_added(snap)` reads the one dir a snapshot added
 - compaction  -> `compact_table` rewrites the current file set into few
                  large files as a NEW snapshot (row-parity asserted);
                  `expire_snapshots` garbage-collects unreferenced dirs
@@ -96,11 +97,10 @@ def _ledger_path(warehouse: str, table: str) -> str:
 
 def batch_ledger(warehouse: str, table: str) -> list[dict[str, Any]]:
     """Expired-snapshot batch records. `expire_snapshots` moves every
-    dropped snapshot that carries a `batch_tag` here, so the
-    exactly-once ledger the incremental jobs scan (run_dedup repair,
-    run_pipeline_incremental resume) survives snapshot expiry — a
-    maintained warehouse can still prove "this batch was already
-    appended" even when the snapshot JSON itself is gone."""
+    dropped snapshot that carries batch params here, so the
+    exactly-once ledger survives snapshot expiry — a maintained
+    warehouse can still prove "this batch was already appended" even
+    when the snapshot JSON itself is gone. Read it through `history`."""
     path = _ledger_path(warehouse, table)
     if not os.path.exists(path):
         return []
@@ -108,18 +108,27 @@ def batch_ledger(warehouse: str, table: str) -> list[dict[str, Any]]:
         return json.load(fh)
 
 
+def history(warehouse: str, table: str) -> list[dict[str, Any]]:
+    """The table's batch history: every live snapshot plus every
+    expired one recorded in `batch-ledger.json` (marked
+    `"expired": True`; a ledger record has ids, counts, operation and
+    params but no data paths), ordered by snapshot_id. THE reader for
+    "was this batch already appended/processed" — never scan snapshots
+    alone (expiry would forget batches) or the ledger alone."""
+    live = snapshots(warehouse, table)
+    # expiry writes the ledger before it deletes the snapshot JSON, so
+    # a crash in between leaves one snapshot in both
+    have = {s["snapshot_id"] for s in live}
+    gone = [{**e, "expired": True} for e in batch_ledger(warehouse, table)
+            if e["snapshot_id"] not in have]
+    return sorted(live + gone, key=lambda s: s["snapshot_id"])
+
+
 def batch_tags(warehouse: str, table: str) -> set[str]:
-    """Every batch_tag ever appended to the table: live snapshots plus
-    the expired-snapshot ledger. THE idempotence check for incremental
-    jobs — never scan snapshots alone (expiry would forget batches)."""
-    tags = {
-        s["params"]["batch_tag"]
-        for s in snapshots(warehouse, table)
-        if s.get("params", {}).get("batch_tag")
-    }
-    tags.update(e["params"]["batch_tag"] for e in batch_ledger(warehouse, table)
-                if e.get("params", {}).get("batch_tag"))
-    return tags
+    """Every batch_tag ever appended to the table (its `history`) —
+    THE idempotence check for incremental jobs."""
+    return {s["params"]["batch_tag"] for s in history(warehouse, table)
+            if s.get("params", {}).get("batch_tag")}
 
 
 def _snapshot_ids(warehouse: str, table: str) -> list[int]:
@@ -363,6 +372,25 @@ def read_incremental(spark: SparkSession, warehouse: str, table: str,
                        schema_json=hi.get("schema"))
 
 
+def read_added(spark: SparkSession, warehouse: str, table: str,
+               snap: dict[str, Any]) -> DataFrame:
+    """The rows snapshot `snap` (a record from `history`/`write_table`)
+    added: its own newest data dir, read with its manifest schema. For
+    a first write or an `append` (write_table adds exactly one dir)
+    this equals `read_incremental(parent, snap)`, and it needs only the
+    snapshot's OWN manifest — a parent removed by `expire_snapshots`
+    does not make the batch unreadable."""
+    own = snap.get("data_paths")
+    if not own:
+        raise ValueError(
+            f"{table}: snapshot {snap['snapshot_id']} was expired (only its "
+            "batch-ledger record is left); the rows it added cannot be "
+            "read on their own")
+    return _read_paths(spark, [os.path.join(_data_dir(warehouse, table),
+                                            own[-1])],
+                       schema_json=snap.get("schema"))
+
+
 def compact_table(spark: SparkSession, warehouse: str, table: str,
                   target_files: int = 1) -> dict[str, Any]:
     """Rewrite the current file set into `target_files` files per
@@ -413,9 +441,9 @@ def expire_snapshots(warehouse: str, table: str,
     Snapshots whose params carry a `batch_tag` are the exactly-once
     ledger of the incremental jobs (run_dedup repair, pipeline
     --append-pages resume); before their JSON is deleted, a slim record
-    (ids + params) is appended to `batch-ledger.json`, which
-    `batch_tags`/`batch_ledger` expose — expiry bounds storage without
-    ever forgetting which batches were appended."""
+    (ids + params) is appended to `batch-ledger.json`, which `history`
+    reads back — expiry bounds storage without ever forgetting which
+    batches were appended."""
     if keep_last < 1:
         raise ValueError("expire_snapshots: keep_last must be >= 1")
     # Same lock as write_table: expiry must never run against a
