@@ -2104,15 +2104,16 @@ def q67_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     a within-corpus self-join. md5 hash family end-to-end, so the whole
     incremental path is DuckDB-oracled."""
     from thesis_ner_co_tri_training_spark.operators.dedup import (
-        dedup_against_index, minhash_bands)
+        dedup_against_index, minhash_bands, token_shingles)
 
     docs = _t(spark, sf_dir, "documents")
     old = docs.filter("doc_id % 5 <> 0")
     new = docs.filter("doc_id % 5 = 0")
     idx = minhash_bands(old, num_hashes=16, bands=4, hasher="md5")
     return (
-        dedup_against_index(new, idx, old, num_hashes=16, bands=4,
-                            max_bucket=64, threshold=0.8, hasher="md5")
+        dedup_against_index(new, idx, token_shingles(old), num_hashes=16,
+                            bands=4, max_bucket=64, threshold=0.8,
+                            hasher="md5")
         .orderBy("a", "b")
     )
 

@@ -18,15 +18,17 @@ survivors to the incremental KG pipeline. One cycle:
      frontier (ids continue from the high-water mark recorded in the
      pages snapshot params) and keep per-domain up to its allocation,
      smallest page id first.
-  3. DEDUP GATE — match candidates against the persisted index with
-     dedup_against_index (O(batch), q67's operator); drop near-dups.
+  3. DEDUP GATE — match candidates against the persisted index and
+     shingles tables with dedup_against_index (O(batch), q67's
+     operator); drop near-dups.
   4. INGEST — run_pipeline_incremental(batch_tag="cycle-<start>")
      appends survivors through the fused voted stage (extract, split,
      tag, vote) -> mentions/triples and recomputes the global
      entity/graph stages; the pages snapshot records the frontier
      high-water mark.
   5. INDEX MAINT — append the survivors' docs/bands/shingles to the
-     index tables so the NEXT cycle sees this one as history.
+     index tables (plans/dedup_index.append_batch, the index's one
+     writer) so the NEXT cycle sees this one as history.
 
 Crash safety, in order of what can be lost:
   - before INGEST: nothing persisted; steps 1-3 are deterministic
@@ -35,10 +37,12 @@ Crash safety, in order of what can be lost:
   - mid-INGEST: the pipeline's own per-stage resume finishes the batch
     (every cycle first runs pipeline.finish_last_batch).
   - after INGEST, before/mid INDEX MAINT: the index repair loop scans
-    ALL cycle-tagged pages snapshots and re-derives any batch missing
+    ALL batch-tagged pages snapshots and re-derives any batch missing
     from the index tables from the rows its pages snapshot added
-    (catalog.read_added; per-table idempotent by tag) — the run_dedup.py repair shape, but re-derived
-    from the warehouse instead of regenerated.
+    (catalog.read_added; per-table idempotent by tag) — the
+    run_dedup.py repair shape, but re-derived from the warehouse
+    instead of regenerated. The gate runs only after this repair, so
+    the three tables agree when it matches.
 A rerun of a fully completed cycle set proceeds to the NEXT cycle
 (frontier advanced); rerunning mid-crash never double-appends (tags).
 Prints one JSON line per cycle.
@@ -55,22 +59,18 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-INDEX_KW = dict(n=3, num_hashes=32, bands=8, hasher="xxhash64")
+from thesis_ner_co_tri_training_spark.plans import dedup_index  # noqa: E402
+
+INDEX_KW = dedup_index.INDEX_PARAMS
 
 
 def _index_kw(warehouse: str) -> dict:
-    """Index params persisted with this warehouse's own index (the
-    newest entry of the dedup_docs `history` carrying them — the
-    run_dedup `_latest_params` pattern). INDEX_KW only seeds a brand-new
+    """Index params persisted with this warehouse's own index
+    (dedup_index.index_params). INDEX_KW only seeds a brand-new
     warehouse: hashing new batches with drifted defaults against an
     index built under the old params would silently stop banding
     collisions, so the persisted params always win."""
-    from thesis_ner_co_tri_training_spark.sources import catalog
-
-    for s in reversed(catalog.history(warehouse, "dedup_docs")):
-        if "hasher" in s.get("params", {}):
-            return {k: s["params"][k] for k in INDEX_KW}
-    return dict(INDEX_KW)
+    return dedup_index.index_params(warehouse) or dict(INDEX_KW)
 
 
 def main() -> int:
@@ -121,44 +121,32 @@ def _pages_batches(warehouse):
 
 def recover(spark, warehouse: str) -> dict:
     """Finish any half-done previous cycle: resume its pipeline batch,
-    then repair the index tables from the warehouse (idempotent)."""
-    from thesis_ner_co_tri_training_spark.operators.dedup import (
-        minhash_bands, token_shingles)
+    then repair the index tables from the warehouse (idempotent). Each
+    index table's history is read once per call, whatever the number
+    of batches (recover runs twice per cycle)."""
     from thesis_ner_co_tri_training_spark.plans.pipeline import (
         finish_last_batch)
     from thesis_ner_co_tri_training_spark.sources import catalog
 
     done = {"resumed_pipeline": finish_last_batch(spark, warehouse),
             "repaired_index": []}
-    kw = _index_kw(warehouse)
+    have = [catalog.batch_tags(warehouse, t) for t in dedup_index.TABLES]
+    kw = None
     for snap in _pages_batches(warehouse):
         tag = snap["params"]["batch_tag"]
-        if tag in catalog.batch_tags(warehouse, "dedup_shingles") \
-                and tag in catalog.batch_tags(warehouse, "dedup_index") \
-                and tag in catalog.batch_tags(warehouse, "dedup_docs"):
+        if all(tag in h for h in have):
             continue
         # An UNindexed batch whose pages snapshot was already expired
         # cannot be re-derived; read_added then raises loudly (normal
         # operation indexes each batch within its own cycle, so only a
         # crash-before-step-5 + maintenance-before-rerun sequence can
         # reach that state).
-        docs = (catalog.read_added(spark, warehouse, "pages", snap)
-                .select("url", "text").localCheckpoint(eager=True))
-        params = {**kw, "batch_tag": tag}
-        for table, build in (
-            ("dedup_docs", lambda: docs),
-            ("dedup_index",
-             lambda: minhash_bands(docs, id_col="url", **kw)),
-            ("dedup_shingles",
-             lambda: token_shingles(docs, id_col="url", n=kw["n"])),
-        ):
-            if tag not in catalog.batch_tags(warehouse, table):
-                catalog.write_table(
-                    build(), warehouse, table, stage_params=params,
-                    mode="append"
-                    if catalog.latest_snapshot(warehouse, table) is not None
-                    else "overwrite")
-                done["repaired_index"].append(f"{table}:{tag}")
+        kw = kw or _index_kw(warehouse)
+        docs = catalog.read_added(spark, warehouse, "pages", snap).select(
+            "url", "text")
+        done["repaired_index"] += [
+            f"{t}:{tag}" for t in dedup_index.append_batch(
+                warehouse, docs, {**kw, "batch_tag": tag})]
     return done
 
 
@@ -229,19 +217,17 @@ def run_cycle(spark, warehouse: str, budget: int,
              .drop("__rk", "alloc"))
     n_crawled = batch.count()
 
-    # 3. DEDUP GATE
+    # 3. DEDUP GATE — one job collects the distinct matched new urls
+    # (O(batch)); the drop count and the filter both come from that list
     n_dupes = 0
     if catalog.latest_snapshot(warehouse, "dedup_index") is not None:
-        matches = dedup_against_index(
-            batch.select("url", "text"),
-            catalog.read_table(spark, warehouse, "dedup_index"),
-            catalog.read_table(spark, warehouse, "dedup_docs"),
+        dupes = [r["a"] for r in dedup_against_index(
+            batch.select("url", "text"), *dedup_index.read(spark, warehouse),
             id_col="url", threshold=threshold,
-            **_index_kw(warehouse)).localCheckpoint(eager=True)
-        n_dupes = matches.select("a").distinct().count()
-        batch = batch.join(
-            matches.select(F.col("a").alias("url")).distinct(),
-            "url", "left_anti")
+            **_index_kw(warehouse)).select("a").distinct().collect()]
+        n_dupes = len(dupes)
+        if dupes:
+            batch = batch.filter(~F.col("url").isin(dupes))
     survivors = batch.drop("domain").localCheckpoint(eager=True)
     n_survivors = survivors.count()
 

@@ -7,22 +7,22 @@
     spark-submit ... jobs/run_dedup.py --warehouse /tmp/kg_dedup --maintain
 
 --init N: seed the corpus with N synthetic pages and build the three
-catalog tables the incremental path needs — `dedup_docs` (url, text),
-`dedup_index` (minhash_bands: url, band, bucket) and `dedup_shingles`
-(url, distinct shingle set). The index parameters (hasher/n/num_hashes/
-bands) are recorded in the snapshot lineage: they are the index schema
-contract, and --append reads them back rather than trusting its own
-defaults.
+catalog tables of the persisted index (plans/dedup_index, which owns
+their format and is their one writer) — `dedup_docs` (url, text),
+`dedup_index` (url, band, bucket) and `dedup_shingles` (url, distinct
+shingle set). The index parameters (hasher/n/num_hashes/bands) are
+recorded in the snapshot lineage: they are the index schema contract,
+and --append reads them back rather than trusting its own defaults.
 
 --append N: ingest the next crawl batch — N new pages plus a recrawl
 tail (mirror-host copies of N//5 existing pages: different url,
 identical text, the classic case incremental dedup must catch). The
-batch is matched against the CURRENT index snapshot with
-dedup_against_index (O(batch) hashing + one band join — never a corpus
-self-join or signature recompute), matches land in `dedup_matches`
-(append snapshot tagged by the batch), and the batch's own bands/
-shingles/docs are appended to the index tables so the NEXT batch sees
-this one as history. Exactly-once per batch: a rerun whose batch tag is
+batch is matched against the CURRENT index and shingles snapshots with
+dedup_against_index (O(batch) hashing + two broadcast joins — never a
+corpus self-join, signature recompute or re-tokenization), matches land
+in `dedup_matches` (append snapshot tagged by the batch), and the
+batch's own docs/bands/shingles are appended to the index tables so the
+NEXT batch sees this one as history. Exactly-once per batch: a rerun whose batch tag is
 already everywhere reports `"resumed": true` and writes nothing.
 
 --maintain: the index grows monotonically, one snap dir (many small
@@ -43,10 +43,11 @@ size) and the missing appends are replayed, per-table idempotent. Only
 then does the new batch run, so the index a batch is matched against
 never silently misses history.
 
-Every run asserts index parity: the accumulated `dedup_index` table
-must equal minhash_bands(all docs) row-for-row — append maintenance
-and full rebuild are interchangeable (cheap at smoke scale; at corpus
-scale this is an audit job, not a per-batch gate).
+Every run asserts index parity: the accumulated `dedup_index` table,
+built per batch by the per-row minhash_bands_narrow, must equal the
+aggregate minhash_bands(all docs) row-for-row — append maintenance and
+full rebuild are interchangeable (cheap at smoke scale; at corpus scale
+this is an audit job, not a per-batch gate).
 """
 
 from __future__ import annotations
@@ -60,10 +61,11 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-INDEX_PARAMS = dict(n=3, num_hashes=32, bands=8, hasher="xxhash64")
+from thesis_ner_co_tri_training_spark.plans import dedup_index  # noqa: E402
 
-DEDUP_TABLES = ("dedup_docs", "dedup_index", "dedup_shingles",
-                "dedup_matches")
+INDEX_PARAMS = dedup_index.INDEX_PARAMS
+
+DEDUP_TABLES = (*dedup_index.TABLES, "dedup_matches")
 
 
 def _docs_from_pages(pages):
@@ -80,21 +82,9 @@ def _mirror(pages, tag: str):
     )
 
 
-def _latest_params(wh: str, table: str, key: str):
-    """Newest params carrying `key` in the table's `history` —
-    compaction snapshots interleave without batch params, and expired
-    batches live on in the ledger."""
-    from thesis_ner_co_tri_training_spark.sources.catalog import history
-
-    for s in reversed(history(wh, table)):
-        if key in s.get("params", {}):
-            return s["params"]
-    return None
-
-
 def index_kw(wh: str) -> dict:
-    params = _latest_params(wh, "dedup_docs", "hasher")
-    if params is None:
+    kw = dedup_index.index_params(wh)
+    if kw is None:
         raise ValueError(
             f"{wh}: no dedup-index parameters found in any dedup_docs "
             f"snapshot or the batch ledger — not an initialized dedup "
@@ -102,50 +92,34 @@ def index_kw(wh: str) -> dict:
             f"snapshot was expired by a pre-ledger release. Appending "
             f"with fresh defaults would silently stop banding "
             f"collisions, so this is fatal by design.")
-    return {k: params[k] for k in INDEX_PARAMS}
+    return kw
 
 
 def do_init(spark, wh: str, n: int) -> dict:
-    from thesis_ner_co_tri_training_spark.operators.dedup import (
-        minhash_bands, token_shingles)
     from thesis_ner_co_tri_training_spark.sources.catalog import (
-        read_table, write_table)
+        latest_snapshot)
     from thesis_ner_co_tri_training_spark.sources.pages import gen_pages_df
 
     docs = _docs_from_pages(gen_pages_df(spark, n))
-    kw = dict(INDEX_PARAMS)
     # batch_tag "init" makes the seed snapshot ledger-eligible: if
     # --maintain expires it before any --append, the index params +
-    # next_start must survive in batch-ledger.json for _latest_params
-    params = {**kw, "next_start": n, "batch_tag": "init"}
-    write_table(docs, wh, "dedup_docs", stage_params=params)
-    write_table(
-        minhash_bands(docs, id_col="url", **kw), wh, "dedup_index",
-        stage_params=params)
-    write_table(
-        token_shingles(docs, id_col="url", n=kw["n"]), wh,
-        "dedup_shingles", stage_params=params)
+    # next_start must survive in batch-ledger.json for do_append
+    dedup_index.append_batch(
+        wh, docs, {**INDEX_PARAMS, "next_start": n, "batch_tag": "init"})
     return {
         "op": "init",
         "docs": n,
-        "index_rows": read_table(spark, wh, "dedup_index").count(),
+        "index_rows": latest_snapshot(wh, "dedup_index")["row_count"],
     }
 
 
 def do_append(spark, wh: str, n: int, threshold: float = 0.8) -> dict:
     from thesis_ner_co_tri_training_spark.operators.dedup import (
-        dedup_against_index, minhash_bands, token_shingles)
-    from thesis_ner_co_tri_training_spark.sources.catalog import (
-        batch_tags, history, read_table, write_table)
+        dedup_against_index)
+    from thesis_ner_co_tri_training_spark.sources import catalog
     from thesis_ner_co_tri_training_spark.sources.pages import gen_pages_df
 
     kw = index_kw(wh)
-
-    def _tags(table):
-        # live snapshots + the expired-snapshot ledger: snapshot expiry
-        # (--maintain / table_maint --expire-keep) must never make a
-        # batch look un-appended, or repair/resume would double-append
-        return batch_tags(wh, table)
 
     def _regen_batch(b_start, n_fresh, tag):
         fresh = _docs_from_pages(
@@ -155,41 +129,21 @@ def do_append(spark, wh: str, n: int, threshold: float = 0.8) -> dict:
             tag)
         return fresh.unionByName(recrawl).localCheckpoint(eager=True)
 
-    def _maintain_tables(batch, params):
-        """Append the batch to each maintenance table that does not
-        carry its tag yet (per-table idempotent)."""
-        tag = params["batch_tag"]
-        did = []
-        if tag not in _tags("dedup_docs"):
-            write_table(batch, wh, "dedup_docs", stage_params=params,
-                        mode="append", operation="append")
-            did.append("dedup_docs")
-        if tag not in _tags("dedup_index"):
-            write_table(minhash_bands(batch, id_col="url", **kw), wh,
-                        "dedup_index", stage_params=params,
-                        mode="append", operation="append")
-            did.append("dedup_index")
-        if tag not in _tags("dedup_shingles"):
-            write_table(token_shingles(batch, id_col="url", n=kw["n"]),
-                        wh, "dedup_shingles", stage_params=params,
-                        mode="append", operation="append")
-            did.append("dedup_shingles")
-        return did
-
-    # repair pass: any batch recorded in matches but missing from a
-    # maintenance table is replayed (batches regenerate exactly from
-    # their recorded start/size)
+    # repair pass: any batch recorded in matches but missing from an
+    # index table is replayed (batches regenerate exactly from their
+    # recorded start/size). Tags come from each table's `history`, read
+    # once: live snapshots + the expired-snapshot ledger, so expiry
+    # (--maintain / table_maint --expire-keep) never makes a batch look
+    # un-appended and repair/resume never double-appends.
+    have = [catalog.batch_tags(wh, t) for t in dedup_index.TABLES]
     repaired = []
-    match_recs = [s.get("params", {}) for s in history(wh, "dedup_matches")]
+    match_recs = [s.get("params", {})
+                  for s in catalog.history(wh, "dedup_matches")]
     for p in match_recs:
         tag = p.get("batch_tag")
-        if not tag:
-            continue
-        if (tag not in _tags("dedup_docs")
-                or tag not in _tags("dedup_index")
-                or tag not in _tags("dedup_shingles")):
-            batch = _regen_batch(p["start"], p["n_fresh"], tag)
-            repaired += _maintain_tables(batch, p)
+        if tag and not all(tag in h for h in have):
+            repaired += dedup_index.append_batch(
+                wh, _regen_batch(p["start"], p["n_fresh"], tag), p)
 
     if repaired:
         # The repair completed a crashed batch (matches were written,
@@ -199,48 +153,41 @@ def do_append(spark, wh: str, n: int, threshold: float = 0.8) -> dict:
         # retrying one failed `--append N` would double the intended
         # page count. Exactly-once contract: complete, then stop; the
         # next invocation appends the next batch.
-        return {
-            "op": "append",
-            "batch_tag": max(
-                (p["batch_tag"] for p in match_recs
-                 if p.get("batch_tag")),
-                key=lambda t: int(t.rsplit("-", 1)[1]),
-                default=None),
-            "resumed": True,
-            "repaired": repaired,
-            "matches_total":
-                read_table(spark, wh, "dedup_matches").count(),
-        }
-
-    start = _latest_params(wh, "dedup_docs", "next_start")["next_start"]
-    batch_tag = f"batch-{start}"
-    if batch_tag in _tags("dedup_matches"):
+        batch_tag = max((p["batch_tag"] for p in match_recs
+                         if p.get("batch_tag")),
+                        key=lambda t: int(t.rsplit("-", 1)[1]))
+    else:
+        # newest params carrying next_start: compaction snapshots carry
+        # none, and expired batches live on in the ledger
+        start = next(s["params"]["next_start"]
+                     for s in reversed(catalog.history(wh, "dedup_docs"))
+                     if "next_start" in s.get("params", {}))
+        batch_tag = f"batch-{start}"
+    if repaired or batch_tag in catalog.batch_tags(wh, "dedup_matches"):
         return {
             "op": "append", "batch_tag": batch_tag, "resumed": True,
             "repaired": repaired,
             "matches_total":
-                read_table(spark, wh, "dedup_matches").count(),
+                catalog.read_table(spark, wh, "dedup_matches").count(),
         }
     batch = _regen_batch(start, n, batch_tag)
-    index = read_table(spark, wh, "dedup_index")
-    old_docs = read_table(spark, wh, "dedup_docs")
     matches = dedup_against_index(
-        batch, index, old_docs, id_col="url",
+        batch, *dedup_index.read(spark, wh), id_col="url",
         threshold=threshold, **kw)
     params = {"batch_tag": batch_tag, "start": start,
               "n_fresh": n, **kw,
               "next_start": start + n}
     # matches FIRST: the repair pass's order invariant
-    m_rows = write_table(matches, wh, "dedup_matches",
-                         stage_params=params, mode="append",
-                         operation="append")["added_rows"]
-    _maintain_tables(batch, params)
+    m_rows = catalog.write_table(matches, wh, "dedup_matches",
+                                 stage_params=params, mode="append",
+                                 operation="append")["added_rows"]
+    dedup_index.append_batch(wh, batch, params)
     return {
         "op": "append", "batch_tag": batch_tag, "resumed": False,
         "repaired": repaired,
         "batch_docs": batch.count(), "batch_matches": m_rows,
         "matches_total":
-            read_table(spark, wh, "dedup_matches").count(),
+            catalog.read_table(spark, wh, "dedup_matches").count(),
     }
 
 
@@ -273,8 +220,9 @@ def do_maintain(spark, wh: str, target_files: int = 4,
 
 
 def audit(spark, wh: str) -> dict:
-    """Index parity: the accumulated dedup_index equals a full rebuild
-    over the accumulated docs, row-for-row."""
+    """Index parity: the accumulated dedup_index (per-row builder, one
+    append per batch) equals the aggregate minhash_bands rebuild over
+    the accumulated docs, row-for-row."""
     from thesis_ner_co_tri_training_spark.operators.dedup import (
         minhash_bands)
     from thesis_ner_co_tri_training_spark.sources.catalog import read_table

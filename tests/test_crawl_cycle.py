@@ -182,3 +182,39 @@ def test_mixed_warehouse_frontier_never_resets(spark, tmp_path):
         batch_tag=f"pages-{pages_frontier(w)}-{pages_frontier(w) + 10}")
     pages = catalog.read_table(spark, w, "pages")
     assert pages.count() == pages.select("url").distinct().count()
+
+
+def test_recover_reads_each_index_history_once(spark, tmp_path,
+                                               monkeypatch):
+    """recover() runs twice per cycle over EVERY pages batch ever
+    appended; reading the index tables' histories once per batch made
+    a cycle's catalog reads grow quadratically. With every batch already
+    indexed, one recover() reads each index table's history at most
+    once, however many batches there are."""
+    from collections import Counter
+
+    from jobs.run_crawl_cycle import recover
+
+    w = str(tmp_path / "reads_wh")
+    for i in range(3):
+        snap = catalog.write_table(
+            gen_pages_df(spark, 4, start=4 * i), w, "pages",
+            stage_params={"batch_tag": f"pages-{4 * i}-{4 * i + 4}"},
+            mode="append")
+    # the last batch reached `edges`: no unfinished pipeline batch
+    catalog.write_table(spark.range(1), w, "edges",
+                        stage_params={"pages_snapshot": snap["snapshot_id"]})
+    first = recover(spark, w)
+    assert len(first["repaired_index"]) == 9  # 3 batches x 3 tables
+
+    calls = Counter()
+    history = catalog.history
+
+    def counting(warehouse, table):
+        calls[table] += 1
+        return history(warehouse, table)
+
+    monkeypatch.setattr(catalog, "history", counting)
+    assert recover(spark, w)["repaired_index"] == []
+    for t in ("dedup_docs", "dedup_index", "dedup_shingles"):
+        assert calls[t] <= 1, (t, calls)

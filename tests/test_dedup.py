@@ -538,7 +538,7 @@ def test_dedup_against_index_matches_selfjoin(spark):
     skew guard, so the two guards coincide)."""
     from thesis_ner_co_tri_training_spark.operators.dedup import (
         dedup_against_index, minhash_bands, minhash_lsh_pairs,
-        ngram_jaccard_pairs)
+        ngram_jaccard_pairs, token_shingles)
 
     base = ("the quick brown fox jumps over the lazy dog while "
             "a very long sentence keeps adding more and more words")
@@ -547,6 +547,7 @@ def test_dedup_against_index_matches_selfjoin(spark):
         (3, "completely different content about spark plans"),
         (10, base + " extra"),                         # new ~ old 1/2
         (11, "nothing like anything else in this corpus at all"),
+        (12, base),                    # new copy of old 1: every band
     ]
     old = spark.createDataFrame(rows[:3], "doc_id long, text string")
     new = spark.createDataFrame(rows[3:], "doc_id long, text string")
@@ -554,9 +555,18 @@ def test_dedup_against_index_matches_selfjoin(spark):
 
     idx = minhash_bands(old, **kw)
     inc = {(r.a, r.b, r.jaccard)
-           for r in dedup_against_index(new, idx, old, threshold=0.5,
-                                        max_bucket=64, **kw).collect()}
+           for r in dedup_against_index(new, idx, token_shingles(old),
+                                        threshold=0.5, max_bucket=64,
+                                        **kw).collect()}
     assert inc and all(a >= 10 and b < 10 for a, b, _ in inc)
+    # a pair colliding in several bands is still ONE output row
+    shared = (minhash_bands(new, **kw).filter("doc_id = 12")
+              .join(idx.filter("doc_id = 1"), ["band", "bucket"]).count())
+    assert shared > 1
+    out = [tuple(r) for r in dedup_against_index(
+        new, idx, token_shingles(old), threshold=0.5, max_bucket=64,
+        **kw).select("a", "b").collect()]
+    assert (12, 1) in out and len(out) == len(set(out))
 
     both = old.unionByName(new)
     pairs = minhash_lsh_pairs(both, max_bucket=64, **kw)
@@ -570,8 +580,9 @@ def test_dedup_against_index_matches_selfjoin(spark):
     novel = spark.createDataFrame(
         [(20, "entirely fresh words never seen before anywhere")],
         "doc_id long, text string")
-    assert dedup_against_index(novel, idx, old, threshold=0.5,
-                               max_bucket=64, **kw).count() == 0
+    assert dedup_against_index(novel, idx, token_shingles(old),
+                               threshold=0.5, max_bucket=64,
+                               **kw).count() == 0
 
 
 def test_minhash_bands_narrow_identical(spark):
@@ -606,7 +617,7 @@ def test_max_bucket_guard_binds(spark):
     the index path (INDEX-side buckets only — the batch side rides)."""
     from thesis_ner_co_tri_training_spark.operators.dedup import (
         dedup_against_index, filter_index_buckets, minhash_bands,
-        minhash_lsh_pairs)
+        minhash_lsh_pairs, token_shingles)
 
     boiler = [(i, "identisches impressum boilerplate auf jeder seite "
                   "dieser domain immer gleich") for i in range(80)]
@@ -631,7 +642,7 @@ def test_max_bucket_guard_binds(spark):
     new = spark.createDataFrame(
         [(2000, boiler[0][1]), (2001, BASE)], "doc_id long, text string")
     got = {(r["a"], r["b"]) for r in dedup_against_index(
-        new, idx, docs, id_col="doc_id", max_bucket=64,
+        new, idx, token_shingles(docs), id_col="doc_id", max_bucket=64,
         threshold=0.8).collect()}
     assert all(a != 2000 for a, b in got)      # boilerplate gated
     assert (2001, 1000) in got                 # real dup still found

@@ -227,7 +227,7 @@ def test_dedup_against_index_stream_matches_batch(spark, tmp_path):
            for r in spark.read.parquet(out).collect()}
     new = spark.createDataFrame(new_rows, "doc_id long, text string")
     expect = {(r.a, r.b, r.jaccard)
-              for r in dedup_against_index(new, index, old,
+              for r in dedup_against_index(new, index, token_shingles(old),
                                            threshold=0.5, **kw).collect()}
     assert got == expect and got
     # exactly-once: a rerun with nothing new appended adds no rows

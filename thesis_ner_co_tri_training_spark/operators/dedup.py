@@ -9,7 +9,9 @@ Five strategies, all DataFrame-first:
   embedding      cosine >= threshold on embedding pairs   (semantic dups)
 
 MinHash-LSH runs on operators.linking's band hash, bucket enumerator
-and jaccard_verify, at document granularity.
+and jaccard_verify, at document granularity. Matching a batch against
+a persisted index (the old docs' bands + shingles) is one matcher,
+_index_matches, shared by dedup_against_index and the streaming twin.
 
 At 100 TB: exact dedup is one shuffle on a 16-byte key; minhash banding
 keys the shuffle by (band, bucket) which is uniform by construction
@@ -157,19 +159,19 @@ def minhash_bands(df: DataFrame, id_col: str = "doc_id",
                   text_col: str = "text", n: int = 3,
                   num_hashes: int = 32, bands: int = 8,
                   hasher: str = "xxhash64") -> DataFrame:
-    """Banded minhash rows (id, band, bucket) — the persistable LSH
-    index relation. dedup_against_index writes it out once per corpus
-    (via catalog.write_table) and joins each new crawl batch's bands
-    against it, so an incremental batch pays O(batch) hashing instead of
-    an O(corpus) recompute. hasher/n/num_hashes/bands are part of the
-    index schema contract — a batch matched against an index built with
-    different parameters silently finds nothing.
+    """Banded minhash rows (id, band, bucket) — the LSH index relation
+    dedup_against_index matches a batch against, built in one query
+    (q67, the index-parity audit). The persisted index is written per
+    batch by plans/dedup_index with the row-identical
+    minhash_bands_narrow, which needs no checkpoint. hasher/n/
+    num_hashes/bands are part of the index schema contract — a batch
+    matched against an index built with different parameters silently
+    finds nothing.
     """
     # Materialize the signature table (num_hashes longs per doc, never
-    # the shingles): filter_index_buckets reads the index twice (bucket
-    # sizes + the join back), and without a cut Spark would re-run the
-    # whole shingle pipeline per read. At corpus scale this is exactly
-    # the table a production LSH job writes out before banding.
+    # the shingles): filter_index_buckets reads an in-query index twice
+    # (bucket sizes + the join back), and without a cut Spark would
+    # re-run the whole shingle pipeline per read.
     sig = (_doc_signature(df, id_col, text_col, n, num_hashes, hasher)
            .drop("shingles").localCheckpoint(eager=True))
     return sig.select(F.col(id_col), _doc_bands(num_hashes, bands, hasher))
@@ -780,64 +782,60 @@ def filter_index_buckets(index: DataFrame, max_bucket: int) -> DataFrame:
     )
 
 
+def _index_matches(new_docs: DataFrame, idx: DataFrame,
+                   old_shingles: DataFrame, id_col: str, text_col: str,
+                   n: int, num_hashes: int, bands: int, threshold: float,
+                   hasher: str, keep: tuple = ()) -> DataFrame:
+    """The one set-vs-index matcher (batch and stream): per-row banding
+    of the new docs -> broadcast (band, bucket) join to the guarded
+    index -> broadcast join to the old docs' (id, shingles) ->
+    jaccard_verify. The new side is broadcast both times, so neither
+    persisted table is shuffled. Output: (a, b, jaccard, *keep), one
+    row per colliding band."""
+    new_b = minhash_bands_narrow(
+        new_docs, id_col, text_col, n, num_hashes, bands, hasher,
+        keep=keep, keep_shingles=True,
+    ).select(F.col(id_col).alias("a"), *keep,
+             F.col("shingles").alias("sh_a"), "band", "bucket")
+    cand = F.broadcast(new_b).join(
+        idx.select(F.col(id_col).alias("b"), "band", "bucket"),
+        ["band", "bucket"],
+    ).drop("band", "bucket")
+    old = old_shingles.select(F.col(id_col).alias("b"),
+                              F.col("shingles").alias("sh_b"))
+    return jaccard_verify(F.broadcast(cand).join(old, "b"), threshold)
+
+
 def dedup_against_index(new_docs: DataFrame, index: DataFrame,
-                        old_docs: DataFrame, id_col: str = "doc_id",
+                        old_shingles: DataFrame, id_col: str = "doc_id",
                         text_col: str = "text", n: int = 3,
                         num_hashes: int = 32, bands: int = 8,
                         max_bucket: int = 64, threshold: float = 0.8,
                         hasher: str = "xxhash64") -> DataFrame:
     """Incremental near-dup dedup of a crawl batch against the
-    accumulated corpus: `index` is minhash_bands(old corpus) persisted
-    once (catalog.write_table) and re-read per batch, so each batch pays
-    O(batch) shingle hashing + one band-keyed join against the index —
-    never an O(corpus) signature recompute or a within-corpus self-join.
-    This is the batch twin of streaming/ingest's recrawl dedup, for
-    history beyond any watermark.
+    accumulated corpus, persisted as `index` = the old docs' (id, band,
+    bucket) rows (minhash_bands) and `old_shingles` = their (id,
+    shingles) rows (token_shingles); plans/dedup_index writes both per
+    batch. Each batch pays O(batch) hashing and two broadcast joins:
+    no O(corpus) signature recompute, no re-tokenization of the old
+    corpus, no self-join. Same matcher as streaming.ingest.
+    dedup_against_index_stream, for history beyond any watermark.
 
-    new_docs and old_docs must have disjoint ids (crawl batches mint new
-    ids); within-batch duplicates are minhash_lsh_pairs(new_docs)'s job.
-    The skew guard drops oversized INDEX buckets (boilerplate buckets;
-    non-discriminative, as in minhash_lsh_pairs) — the batch side is
-    small by construction. num_hashes/bands/n/hasher must match the
-    index build (part of the index schema contract).
+    new_docs and the old corpus must have disjoint ids (crawl batches
+    mint new ids); within-batch duplicates are minhash_lsh_pairs(
+    new_docs)'s job. The skew guard drops oversized INDEX buckets
+    (boilerplate; non-discriminative) — the batch side is small by
+    construction. num_hashes/bands/n/hasher must match the index build
+    (the index schema contract).
 
-    Output: (a = new id, b = old id, jaccard round-4) — verified exact
-    n-gram Jaccard >= threshold, same verify as ngram_jaccard_pairs.
-    Fully DuckDB-oracled with hasher="md5" (q67).
+    Output: distinct (a = new id, b = old id, jaccard round-4) with
+    exact n-gram Jaccard >= threshold. DuckDB-oracled with hasher="md5"
+    (q67).
     """
-    idx = filter_index_buckets(index, max_bucket)
-    new_b = minhash_bands(new_docs, id_col, text_col, n, num_hashes,
-                          bands, hasher)
-    cand = (
-        new_b.alias("l").join(
-            idx.alias("r"),
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket")),
-        )
-        .select(F.col(f"l.{id_col}").alias("a"),
-                F.col(f"r.{id_col}").alias("b"))
-        .distinct()
-        # referenced three times below (pair relation + both id prunes)
-        .localCheckpoint(eager=True)
-    )
-    # Semi-join BOTH doc sides down to candidate ids BEFORE the verify:
-    # ngram_jaccard_pairs shingles whatever corpus it is handed, and the
-    # id filter cannot be pushed through its shingle groupBy — without
-    # this prune every batch re-tokenized the ENTIRE old corpus,
-    # violating the O(batch) contract above (candidates are O(batch) by
-    # construction: each is anchored at a new doc).
-    # broadcast the id sides: they are candidate-bounded (O(batch)), and
-    # a shuffle semi-join would move the full old-corpus text instead
-    a_ids = F.broadcast(cand.select(F.col("a").alias(id_col)).distinct())
-    b_ids = F.broadcast(cand.select(F.col("b").alias(id_col)).distinct())
-    corpus = (
-        new_docs.join(a_ids, id_col, "left_semi").select(id_col, text_col)
-        .unionByName(
-            old_docs.join(b_ids, id_col, "left_semi")
-            .select(id_col, text_col))
-    )
-    return ngram_jaccard_pairs(corpus, cand, id_col, text_col, n,
-                               threshold)
+    return _index_matches(
+        new_docs, filter_index_buckets(index, max_bucket), old_shingles,
+        id_col, text_col, n, num_hashes, bands, threshold, hasher,
+    ).select("a", "b", "jaccard").distinct()
 
 
 def minhash_bands_narrow(df: DataFrame, id_col: str = "doc_id",
@@ -854,18 +852,18 @@ def minhash_bands_narrow(df: DataFrame, id_col: str = "doc_id",
     Docs shorter than n tokens emit no rows, as in the aggregate form.
 
     Because there is no aggregation, this form runs UNCHANGED on a
-    stream — no state, no watermark — which is what makes stream-static
-    dedup against a persisted index possible (streaming.ingest.
-    dedup_against_index_stream). `keep` passes through extra columns
-    (e.g. the event-time column); `keep_shingles` adds the distinct
-    shingle array (token_shingles semantics) so a downstream
-    jaccard_verify can score pairs without rejoining the stream.
+    stream — no state, no watermark — and it is the new-doc side of the
+    one set-vs-index matcher (dedup_against_index and streaming.ingest.
+    dedup_against_index_stream) and the builder of the persisted index
+    (plans/dedup_index). `keep` passes through extra columns (e.g. the
+    event-time column); `keep_shingles` adds the distinct shingle array
+    (token_shingles semantics) so a downstream jaccard_verify can score
+    pairs without rejoining the docs.
 
     Trade: num_hashes array traversals per row instead of one shuffle.
-    In a micro-batch, or when the corpus scan is already wide, that is
-    the right trade; for bulk index builds prefer minhash_bands (its
-    exploded form partial-aggregates map-side and its signature table
-    localCheckpoints for reuse).
+    For a crawl batch or a micro-batch that is the right trade; a query
+    that reads its index twice in one plan keeps minhash_bands (its
+    signature table localCheckpoints for reuse).
     """
     toks = df.select(
         id_col, *keep, F.split(NORM(F.col(text_col)), " ").alias("__t")

@@ -27,7 +27,7 @@ small-side case automatically.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..functions.simfn import cosine_tags, rename_tags_col
@@ -597,9 +597,10 @@ def apportion_budget(df: DataFrame, budget: int, key_col: str = "key",
     key — every operation is BIGINT, so the allocation is byte-equal in
     any engine (q71 DuckDB-oracles it).
 
-    Shape at scale: one collected scalar total (guarded positive — NULL
-    allocs on a zero sum would be silent), one broadcast 1-row
-    used-total, and ONE global row_number over (remainder desc, key). The global sort is inherent
+    Shape at scale: one checkpoint of (key, weight) whose job also
+    observes the scalar total (guarded positive — NULL allocs on a zero
+    sum would be silent), one broadcast 1-row used-total, and ONE global
+    row_number over (remainder desc, key). The global sort is inherent
     to the problem (leftover +1s are a corpus-global ranking); rows are
     (key, two longs), so even 10^8 domains sort ~GBs in one task —
     acceptable for a scheduling step that runs once per crawl cycle.
@@ -610,19 +611,17 @@ def apportion_budget(df: DataFrame, budget: int, key_col: str = "key",
 
     w = F.col(weight_col).cast("long")
     # ONE evaluation of the caller's (possibly expensive) upstream
-    # lineage: cut it to (key, weight) first, then run the precondition
-    # guard and both downstream references (used-total, ranking) off
-    # the cut — the guard would otherwise re-run the whole upstream a
-    # second time (run_crawl_cycle's weights are a full mentions
-    # scan+join per cycle). The cut is (key, long) per row.
-    wdf = df.select(F.col(key_col), w.alias("__w")).localCheckpoint(
-        eager=True)
-    # Precondition guard (one scalar off the cut, like
-    # pagerank_fixedpoint's m == 0 guard): a zero/all-null weight total
-    # would make __base/__rem NULL via DIV and silently return
-    # alloc=NULL for every key.
-    tot_row = wdf.agg(F.sum("__w").alias("__tot"),
-                      F.min("__w").alias("__min")).first()
+    # lineage: cut it to (key, long weight); both downstream references
+    # (used-total, ranking) read the cut, and the guard's sum/min are
+    # observed on the cut's own job (as in connected_components). A
+    # zero/all-null total would make __base/__rem NULL via DIV and
+    # silently return alloc=NULL for every key.
+    obs = Observation()
+    wdf = (df.select(F.col(key_col), w.alias("__w"))
+           .observe(obs, F.sum("__w").alias("__tot"),
+                    F.min("__w").alias("__min"))
+           .localCheckpoint(eager=True))
+    tot_row = obs.get
     if tot_row["__tot"] is None or tot_row["__tot"] <= 0:
         raise ValueError(
             f"apportion_budget: weight sum must be positive, got "

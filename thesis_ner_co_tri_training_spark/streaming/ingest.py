@@ -291,50 +291,32 @@ def dedup_against_index_stream(
     hasher: str = "xxhash64",
 ) -> DataFrame:
     """Stream-static near-dup matching against the persisted corpus
-    index — the streaming twin of operators.dedup.dedup_against_index,
-    covering history BEYOND any watermark (dedup_pages_stream's
-    recrawl dedup only sees the watermark horizon).
+    index — the streaming twin of operators.dedup.dedup_against_index
+    and the same matcher body (dedup._index_matches), covering history
+    BEYOND any watermark (dedup_pages_stream's recrawl dedup only sees
+    the watermark horizon).
 
     `index` = minhash_bands(old corpus) and `old_shingles` =
     token_shingles(old corpus), both STATIC tables read from the
-    warehouse (built once per corpus snapshot; same num_hashes/bands/
-    n/hasher — the index schema contract). The stream side bands each
-    arriving doc with the ZERO-state per-row form
-    (minhash_bands_narrow, pinned row-identical to the batch builder),
-    so the whole path is: narrow banding -> stream-static equi-join on
-    (band, bucket) -> per-row linking.jaccard_verify of the stream doc's
-    carried shingles against the old doc's static shingle set (ts_col
-    passes through) -> watermarked dedup of the per-band match
-    multiplicity. State is only the (new, old) pairs inside the
+    warehouse (same num_hashes/bands/n/hasher — the index schema
+    contract). Each arriving doc is banded per row (no state), its band
+    rows are broadcast into the stream-static joins with the index and
+    the shingles table, and jaccard_verify scores the pair (ts_col
+    passes through). A watermarked dedup then drops the per-band match
+    multiplicity, so state is only the (new, old) pairs inside the
     watermark horizon.
 
     Output: (a = new id, b = old id, jaccard round-4, ts_col) — same
     row contract as dedup_against_index, batch-parity pinned by test.
     """
-    from ..operators.dedup import filter_index_buckets, minhash_bands_narrow
-    from ..operators.linking import jaccard_verify
+    from ..operators.dedup import _index_matches, filter_index_buckets
 
     # The static side of a stream-static join is re-evaluated on EVERY
-    # micro-batch, so the skew-guard groupBy over the whole persisted
-    # index would otherwise rerun per trigger — cache the filtered index
-    # once (shared helper with the batch path so the guard can't drift).
-    idx = (
-        filter_index_buckets(index, max_bucket)
-        .select(F.col(id_col).alias("b"), "band", "bucket")
-        .cache()
-    )
-    new_b = minhash_bands_narrow(
-        docs, id_col, text_col, n, num_hashes, bands, hasher,
-        keep=(ts_col,), keep_shingles=True,
-    ).select(
-        F.col(id_col).alias("a"), F.col(ts_col),
-        F.col("shingles").alias("sh_a"), "band", "bucket",
-    )
-    cand = new_b.join(idx, ["band", "bucket"]).join(
-        old_shingles.select(F.col(id_col).alias("b"),
-                            F.col("shingles").alias("sh_b")),
-        "b",
-    ).drop("band", "bucket")
-    return jaccard_verify(cand, threshold).withWatermark(
-        ts_col, watermark
-    ).dropDuplicatesWithinWatermark(["a", "b"])
+    # micro-batch, so the skew guard's groupBy over the whole persisted
+    # index would rerun per trigger — cache the guarded index once.
+    idx = filter_index_buckets(index, max_bucket).cache()
+    return _index_matches(
+        docs, idx, old_shingles, id_col, text_col, n, num_hashes, bands,
+        threshold, hasher, keep=(ts_col,),
+    ).withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
+        ["a", "b"])
