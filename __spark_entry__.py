@@ -2679,6 +2679,9 @@ _Q77_SQL = """
         SELECT vec_id, cast(embedding AS DOUBLE[]) AS ve
         FROM embeddings
         WHERE embedding IS NOT NULL AND len(embedding) > 0
+          -- semantic_dedup drops a vector with a non-finite component
+          AND len(list_filter(cast(embedding AS DOUBLE[]),
+                              x -> NOT isfinite(x))) = 0
     ),
     cent AS (
         SELECT CAST(vec_id AS INTEGER) AS cluster, ve AS ce
@@ -2737,7 +2740,8 @@ def q78_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     disjoint node spaces. The engine runs to the exact fixpoint
     (converges in 7 rounds at every test SF); the oracle unrolls 12
     rounds of the identical round body — a strict superset, and extra
-    rounds are no-ops at the fixpoint, so the comparison is exact.
+    rounds are no-ops at the fixpoint, so the comparison is exact; the
+    oracle raises when its last two rounds differ (not converged).
     All-BIGINT output (counts and mins of counts), no floats."""
     from thesis_ner_co_tri_training_spark.plans.graph import kcore
 
@@ -2798,7 +2802,15 @@ def _kcore_oracle_sql(rounds: int = 12) -> str:
             SELECT a AS node, CAST(count(*) AS BIGINT) AS core
             FROM sym GROUP BY a
         ){body}
-        SELECT node, core FROM r{rounds} ORDER BY node
+        SELECT node, core FROM r{rounds}
+        -- fail loudly, not with a wrong answer, when the unrolled
+        -- rounds stop short of the fixpoint the engine runs to
+        WHERE (SELECT CASE WHEN count(*) > 0 THEN error(
+                   'q78 oracle: {rounds} h-index rounds did not converge')
+                   ELSE true END
+               FROM r{rounds - 1} x JOIN r{rounds} y USING (node)
+               WHERE x.core <> y.core)
+        ORDER BY node
     """
 
 

@@ -119,22 +119,23 @@ def _pages_batches(warehouse):
             .startswith(("cycle-", "pages-"))]
 
 
-def recover(spark, warehouse: str) -> dict:
+def recover(spark, warehouse: str, kw: dict | None = None) -> dict:
     """Finish any half-done previous cycle: resume its pipeline batch,
     then repair the index tables from the warehouse (idempotent). Each
     index table's history is read once per call, whatever the number
-    of batches (recover runs twice per cycle)."""
+    of batches (recover runs twice per cycle). `kw` is the index params
+    when the caller has read them; else they are read when a batch
+    needs repair."""
     from thesis_ner_co_tri_training_spark.plans.pipeline import (
         finish_last_batch)
     from thesis_ner_co_tri_training_spark.sources import catalog
 
     done = {"resumed_pipeline": finish_last_batch(spark, warehouse),
             "repaired_index": []}
-    have = [catalog.batch_tags(warehouse, t) for t in dedup_index.TABLES]
-    kw = None
+    have = dedup_index.tags(warehouse)
     for snap in _pages_batches(warehouse):
         tag = snap["params"]["batch_tag"]
-        if all(tag in h for h in have):
+        if all(tag in h for h in have.values()):
             continue
         # An UNindexed batch whose pages snapshot was already expired
         # cannot be re-derived; read_added then raises loudly (normal
@@ -146,7 +147,7 @@ def recover(spark, warehouse: str) -> dict:
             "url", "text")
         done["repaired_index"] += [
             f"{t}:{tag}" for t in dedup_index.append_batch(
-                warehouse, docs, {**kw, "batch_tag": tag})]
+                warehouse, docs, {**kw, "batch_tag": tag}, have)]
     return done
 
 
@@ -167,7 +168,9 @@ def run_cycle(spark, warehouse: str, budget: int,
     from thesis_ner_co_tri_training_spark.sources.pages import gen_pages_df
 
     t0 = time.time()
-    recovered = recover(spark, warehouse)
+    # the index params, read once: the gate and both repair loops
+    kw = _index_kw(warehouse)
+    recovered = recover(spark, warehouse, kw)
 
     from thesis_ner_co_tri_training_spark.plans.pipeline import (
         pages_frontier)
@@ -224,7 +227,7 @@ def run_cycle(spark, warehouse: str, budget: int,
         dupes = [r["a"] for r in dedup_against_index(
             batch.select("url", "text"), *dedup_index.read(spark, warehouse),
             id_col="url", threshold=threshold,
-            **_index_kw(warehouse)).select("a").distinct().collect()]
+            **kw).select("a").distinct().collect()]
         n_dupes = len(dupes)
         if dupes:
             batch = batch.filter(~F.col("url").isin(dupes))
@@ -238,7 +241,7 @@ def run_cycle(spark, warehouse: str, budget: int,
 
     # 5. INDEX MAINT — same repair loop; this cycle's tag is now a
     # pages batch, so the loop appends its docs/bands/shingles
-    indexed = recover(spark, warehouse)
+    indexed = recover(spark, warehouse, kw)
 
     top = {r["domain"]: r["alloc"] for r in sorted(
         alloc_rows, key=lambda r: (-r["alloc"], r["domain"]))[:5]}

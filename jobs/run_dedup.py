@@ -105,7 +105,8 @@ def do_init(spark, wh: str, n: int) -> dict:
     # --maintain expires it before any --append, the index params +
     # next_start must survive in batch-ledger.json for do_append
     dedup_index.append_batch(
-        wh, docs, {**INDEX_PARAMS, "next_start": n, "batch_tag": "init"})
+        wh, docs, {**INDEX_PARAMS, "next_start": n, "batch_tag": "init"},
+        dedup_index.tags(wh))
     return {
         "op": "init",
         "docs": n,
@@ -135,15 +136,15 @@ def do_append(spark, wh: str, n: int, threshold: float = 0.8) -> dict:
     # once: live snapshots + the expired-snapshot ledger, so expiry
     # (--maintain / table_maint --expire-keep) never makes a batch look
     # un-appended and repair/resume never double-appends.
-    have = [catalog.batch_tags(wh, t) for t in dedup_index.TABLES]
+    have = dedup_index.tags(wh)
     repaired = []
     match_recs = [s.get("params", {})
                   for s in catalog.history(wh, "dedup_matches")]
     for p in match_recs:
         tag = p.get("batch_tag")
-        if tag and not all(tag in h for h in have):
+        if tag and not all(tag in h for h in have.values()):
             repaired += dedup_index.append_batch(
-                wh, _regen_batch(p["start"], p["n_fresh"], tag), p)
+                wh, _regen_batch(p["start"], p["n_fresh"], tag), p, have)
 
     if repaired:
         # The repair completed a crashed batch (matches were written,
@@ -181,7 +182,7 @@ def do_append(spark, wh: str, n: int, threshold: float = 0.8) -> dict:
     m_rows = catalog.write_table(matches, wh, "dedup_matches",
                                  stage_params=params, mode="append",
                                  operation="append")["added_rows"]
-    dedup_index.append_batch(wh, batch, params)
+    dedup_index.append_batch(wh, batch, params, have)
     return {
         "op": "append", "batch_tag": batch_tag, "resumed": False,
         "repaired": repaired,

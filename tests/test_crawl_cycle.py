@@ -218,3 +218,27 @@ def test_recover_reads_each_index_history_once(spark, tmp_path,
     assert recover(spark, w)["repaired_index"] == []
     for t in ("dedup_docs", "dedup_index", "dedup_shingles"):
         assert calls[t] <= 1, (t, calls)
+    monkeypatch.undo()
+
+    # Whole cycles: the index params are read once per cycle and
+    # append_batch takes the tables to write from recover()'s history
+    # read, so a cycle reads each index snapshot at most 7 times over
+    # (dedup_docs for the params, then the three tables in each of the
+    # two recover() calls), plus the gate's two table reads: 0/9/16/23
+    # snapshot reads over 4 cycles (0/13/24/35 before).
+    reads = Counter()
+    get_snapshot = catalog.get_snapshot
+
+    def counting_get(warehouse, table, snapshot_id=None):
+        reads[table] += 1
+        return get_snapshot(warehouse, table, snapshot_id)
+
+    monkeypatch.setattr(catalog, "get_snapshot", counting_get)
+    w = str(tmp_path / "cycles_wh")
+    per_cycle = []
+    for i in range(4):
+        reads.clear()
+        assert run_cycle(spark, w, 8)["indexed"]
+        per_cycle.append(sum(reads[t] for t in (
+            "dedup_docs", "dedup_index", "dedup_shingles")))
+        assert per_cycle[-1] <= 7 * i + 2 * (i > 0), per_cycle

@@ -56,6 +56,10 @@ def test_connected_components_chain_and_island(spark):
         "self-loops": [("a", "a"), ("a", "b"), ("z", "z"), ("c", "c"),
                        ("c", "d")],
         **{f"random{i}": r for i, r in enumerate(randoms)},
+        # nodes whose only edge is a self-loop, beside random graphs
+        **{f"random{i}+lone": r + [(f"lone{j}", f"lone{j}")
+                                   for j in range(i + 1)]
+           for i, r in enumerate(randoms)},
     }
     for name, edges in cases.items():
         df = spark.createDataFrame(edges, "a string, b string")
@@ -81,6 +85,37 @@ def test_star_cc_long_path_logarithmic(spark):
     assert got[names[-1]] == names[0]
     with pytest.raises(RuntimeError, match="max_iter=2"):
         connected_components(df, max_iter=2)
+
+
+def _cc_jobs(spark, edges, group):
+    """(node -> comp, Spark jobs connected_components ran eagerly)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = connected_components(
+            spark.createDataFrame(edges, "a string, b string"))
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return {r["node"]: r["comp"] for r in out.collect()}, jobs
+
+
+def test_star_cc_stops_on_star_forest(spark):
+    """The star-forest test ends the loop with no confirming round: an
+    input that already is a star forest (every node has at most one
+    smaller neighbour, and no node with one is another's) returns after
+    its input checkpoint — one shuffle and the checkpoint job — and a
+    two-level tree after exactly one round, which adds the round's
+    three shuffles and its checkpoint job."""
+    stars = [("b", "a"), ("a", "c"), ("e", "d"), ("f", "f")]
+    got, jobs = _cc_jobs(spark, stars, "cc-star-forest")
+    assert got == union_find({n for e in stars for n in e}, stars)
+    assert jobs == 2
+
+    tree = [("b", "a"), ("c", "b"), ("d", "b")]
+    got, jobs = _cc_jobs(spark, tree, "cc-two-level")
+    assert got == {"a": "a", "b": "a", "c": "a", "d": "a"}
+    assert jobs == 2 + 4
 
 
 SURFACES = [

@@ -43,12 +43,20 @@ def read(spark: SparkSession, warehouse: str) -> tuple[DataFrame, DataFrame]:
             catalog.read_table(spark, warehouse, "dedup_shingles"))
 
 
-def append_batch(warehouse: str, docs: DataFrame, params: dict) -> list[str]:
+def tags(warehouse: str) -> dict[str, set[str]]:
+    """{index table: every batch tag in its history}, one history read
+    per table: the `have` argument of append_batch."""
+    return {t: catalog.batch_tags(warehouse, t) for t in TABLES}
+
+
+def append_batch(warehouse: str, docs: DataFrame, params: dict,
+                 have: dict[str, set[str]]) -> list[str]:
     """Append the (url, text) batch `docs` to each index table whose
-    history lacks params["batch_tag"]; the first write creates the
-    table. Bands come from the per-row minhash_bands_narrow (rows
-    identical to minhash_bands, no checkpoint job). Returns the tables
-    written, in TABLES order."""
+    tags in `have` (the caller's one `tags` read) lack
+    params["batch_tag"]; the first write creates the table. Bands come
+    from the per-row minhash_bands_narrow (rows identical to
+    minhash_bands, no checkpoint job). Returns the tables written, in
+    TABLES order."""
     tag = params["batch_tag"]
     kw = {k: params[k] for k in INDEX_PARAMS}
     build = {
@@ -57,13 +65,10 @@ def append_batch(warehouse: str, docs: DataFrame, params: dict) -> list[str]:
         "dedup_shingles": lambda: token_shingles(docs, id_col="url",
                                                  n=kw["n"]),
     }
-    wrote = []
-    for t in TABLES:
-        if tag in catalog.batch_tags(warehouse, t):
-            continue
+    wrote = [t for t in TABLES if tag not in have[t]]
+    for t in wrote:
         catalog.write_table(
             build[t](), warehouse, t, stage_params=params,
             mode="append" if catalog.latest_snapshot(warehouse, t)
             else "overwrite")
-        wrote.append(t)
     return wrote

@@ -33,6 +33,15 @@ entry points:
   recompute over the accumulated tables, and a stage resumes when its
   history holds a live snapshot of this batch.
 
+Overlap: after `voted`, the DAG has two pairs of independent stages —
+`triples` beside `mentions -> entities`, then `nodes` beside `edges`
+(both read `entities`; `edges` also `triples`). Each pair runs at the
+same time, one branch on a worker thread. At this scale a stage's time
+is mostly fixed per-job and per-stage cost that leaves cores idle, so
+the second branch's jobs fill them. The worker inherits the caller's
+Spark local properties (job group), both branches finish before either
+one's error is raised, and the returned lineage stays in DAG order.
+
 Skew handling: mention/triple writes are salted-repartitioned on the
 Zipf-skewed domain key before the shuffle-heavy stages (north rule
 requirement); the salt factor is recorded in lineage.
@@ -40,8 +49,10 @@ requirement); the salt factor is recorded in lineage.
 
 from __future__ import annotations
 
+import threading
 from typing import Any
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -81,6 +92,10 @@ DEFAULT_PARAMS: dict[str, Any] = {
     "lsh_rows_per_band": 4,
     "salt": 8,
 }
+
+# The lineage's key order: overlapped stages finish in either order.
+_DAG_ORDER = ("pages", "voted", "mentions", "triples", "entities", "nodes",
+              "edges")
 
 
 def run_pipeline(
@@ -243,33 +258,74 @@ def _run(spark: SparkSession, pages: DataFrame | None, warehouse: str,
             p["tcfd_threshold"], p["scfd_threshold"]),
         doc_local=True,
     )
-    mentions = stage(
-        "mentions",
-        lambda: salted_repartition(
-            with_domain(mentions_table(voted)), "domain", n_shuffle, p["salt"],
-            salt_cols=["url", "sent_id"],
-        ).drop("domain"),
-        doc_local=True,
+
+    def link():
+        mentions = stage(
+            "mentions",
+            lambda: salted_repartition(
+                with_domain(mentions_table(voted)), "domain", n_shuffle,
+                p["salt"], salt_cols=["url", "sent_id"],
+            ).drop("domain"),
+            doc_local=True,
+        )
+        if batch is not None:
+            # the global stages read the accumulated table, not the delta
+            mentions = catalog.read_table(spark, warehouse, "mentions")
+        entities = stage(
+            "entities",
+            lambda: canonicalize_entities(
+                mentions,
+                num_hashes=p["minhash_hashes"],
+                bands=p["lsh_bands"],
+                rows_per_band=p["lsh_rows_per_band"],
+                jaccard_threshold=p["jaccard_threshold"],
+            ),
+        )
+        return mentions, entities
+
+    def relate():
+        triples = stage("triples", lambda: extract_triples(voted),
+                        doc_local=True)
+        if batch is not None:
+            triples = catalog.read_table(spark, warehouse, "triples")
+        return triples
+
+    triples, (mentions, entities) = _overlap(spark, relate, link)
+    _overlap(
+        spark,
+        lambda: stage("nodes", lambda: build_nodes_df(mentions, entities)),
+        lambda: stage("edges", lambda: build_edges_df(triples, entities),
+                      partition_by=["pred"]),
     )
-    triples = stage("triples", lambda: extract_triples(voted), doc_local=True)
-    if batch is not None:
-        # the global stages read the accumulated tables, not the deltas
-        mentions = catalog.read_table(spark, warehouse, "mentions")
-        triples = catalog.read_table(spark, warehouse, "triples")
-    entities = stage(
-        "entities",
-        lambda: canonicalize_entities(
-            mentions,
-            num_hashes=p["minhash_hashes"],
-            bands=p["lsh_bands"],
-            rows_per_band=p["lsh_rows_per_band"],
-            jaccard_threshold=p["jaccard_threshold"],
-        ),
-    )
-    stage("nodes", lambda: build_nodes_df(mentions, entities))
-    stage("edges", lambda: build_edges_df(triples, entities),
-          partition_by=["pred"])
-    return lineage
+    return {name: lineage[name] for name in _DAG_ORDER if name in lineage}
+
+
+def _overlap(spark: SparkSession, side, main):
+    """Run side() on one worker thread while main() runs here; return
+    (side's result, main's result). Both branches finish before either
+    one's exception is raised (main's first), so no Spark job of a
+    failed run outlives the call. The worker starts through
+    inheritable_thread_target: it inherits this thread's Spark local
+    properties and job tags, so its jobs carry the caller's job
+    group."""
+    out: dict[str, Any] = {}
+
+    def run():
+        try:
+            out["side"] = side()
+        except BaseException as e:  # re-raised below, after the join
+            out["error"] = e
+
+    worker = threading.Thread(target=inheritable_thread_target(spark)(run),
+                              name="kg-stage-overlap")
+    worker.start()
+    try:
+        got = main()
+    finally:
+        worker.join()
+    if "error" in out:
+        raise out["error"]
+    return out["side"], got
 
 
 def _pages_batch(warehouse: str, new_pages: DataFrame | None,
@@ -357,20 +413,20 @@ def finish_last_batch(spark: SparkSession, warehouse: str) -> str | None:
 
 
 def build_nodes_df(mentions: DataFrame, entities: DataFrame) -> DataFrame:
-    # entity_type = majority tag over the entity's mentions (ties
-    # break lexicographically): one keyed count over the broadcast
-    # alias-map join, then the min of (-count, tag) per entity.
-    tag_counts = (
-        surface_to_entity(mentions, entities)
-        .groupBy("entity_id", "tag")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    etype = tag_counts.groupBy("entity_id").agg(
-        F.min(F.struct((-F.col("c")).alias("neg_c"), "tag"))["tag"]
-        .alias("entity_type")
-    )
-    return entities.join(etype, "entity_id", "left").select(
-        "entity_id", "canonical", "entity_type", "n_mentions"
+    # entity_type = majority tag over the entity's mentions, a tie going
+    # to the smaller tag: one broadcast join to an alias map carrying
+    # every node column, then one mode per entity. Each entity also adds
+    # one tag-less row (mode skips NULLs), so an entity without mentions
+    # keeps its node with a NULL type.
+    cols = ["entity_id", "canonical", "n_mentions"]
+    alias_map = entities.select(F.explode("aliases").alias("surface"), *cols)
+    tagged = mentions.join(F.broadcast(alias_map), "surface").select(
+        *cols, "tag")
+    return (
+        tagged.unionByName(entities.select(*cols, F.lit(None).cast("string").alias("tag")))
+        .groupBy(*cols)
+        .agg(F.mode("tag", deterministic=True).alias("entity_type"))
+        .select("entity_id", "canonical", "entity_type", "n_mentions")
     )
 
 
