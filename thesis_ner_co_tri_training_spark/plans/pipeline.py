@@ -49,7 +49,7 @@ requirement); the salt factor is recorded in lineage.
 
 from __future__ import annotations
 
-import threading
+from concurrent.futures import ThreadPoolExecutor
 from typing import Any
 
 from pyspark import inheritable_thread_target
@@ -303,29 +303,15 @@ def _run(spark: SparkSession, pages: DataFrame | None, warehouse: str,
 def _overlap(spark: SparkSession, side, main):
     """Run side() on one worker thread while main() runs here; return
     (side's result, main's result). Both branches finish before either
-    one's exception is raised (main's first), so no Spark job of a
-    failed run outlives the call. The worker starts through
-    inheritable_thread_target: it inherits this thread's Spark local
-    properties and job tags, so its jobs carry the caller's job
-    group."""
-    out: dict[str, Any] = {}
-
-    def run():
-        try:
-            out["side"] = side()
-        except BaseException as e:  # re-raised below, after the join
-            out["error"] = e
-
-    worker = threading.Thread(target=inheritable_thread_target(spark)(run),
-                              name="kg-stage-overlap")
-    worker.start()
-    try:
+    one's exception is raised (main's first): leaving the pool waits for
+    the worker, so no Spark job of a failed run outlives the call. The
+    worker's target is wrapped by inheritable_thread_target: it inherits
+    this thread's Spark local properties and job tags, so its jobs carry
+    the caller's job group."""
+    with ThreadPoolExecutor(1, thread_name_prefix="kg-stage-overlap") as pool:
+        pending = pool.submit(inheritable_thread_target(spark)(side))
         got = main()
-    finally:
-        worker.join()
-    if "error" in out:
-        raise out["error"]
-    return out["side"], got
+    return pending.result(), got
 
 
 def _pages_batch(warehouse: str, new_pages: DataFrame | None,
@@ -422,8 +408,9 @@ def build_nodes_df(mentions: DataFrame, entities: DataFrame) -> DataFrame:
     alias_map = entities.select(F.explode("aliases").alias("surface"), *cols)
     tagged = mentions.join(F.broadcast(alias_map), "surface").select(
         *cols, "tag")
+    untagged = entities.select(*cols, F.lit(None).cast("string").alias("tag"))
     return (
-        tagged.unionByName(entities.select(*cols, F.lit(None).cast("string").alias("tag")))
+        tagged.unionByName(untagged)
         .groupBy(*cols)
         .agg(F.mode("tag", deterministic=True).alias("entity_type"))
         .select("entity_id", "canonical", "entity_type", "n_mentions")
