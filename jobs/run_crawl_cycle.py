@@ -119,13 +119,12 @@ def _pages_batches(warehouse):
             .startswith(("cycle-", "pages-"))]
 
 
-def recover(spark, warehouse: str, kw: dict | None = None) -> dict:
+def recover(spark, warehouse: str, kw: dict) -> dict:
     """Finish any half-done previous cycle: resume its pipeline batch,
     then repair the index tables from the warehouse (idempotent). Each
     index table's history is read once per call, whatever the number
     of batches (recover runs twice per cycle). `kw` is the index params
-    when the caller has read them; else they are read when a batch
-    needs repair."""
+    (`_index_kw`), read once by the caller."""
     from thesis_ner_co_tri_training_spark.plans.pipeline import (
         finish_last_batch)
     from thesis_ner_co_tri_training_spark.sources import catalog
@@ -142,7 +141,6 @@ def recover(spark, warehouse: str, kw: dict | None = None) -> dict:
         # operation indexes each batch within its own cycle, so only a
         # crash-before-step-5 + maintenance-before-rerun sequence can
         # reach that state).
-        kw = kw or _index_kw(warehouse)
         docs = catalog.read_added(spark, warehouse, "pages", snap).select(
             "url", "text")
         done["repaired_index"] += [

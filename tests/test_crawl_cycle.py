@@ -193,7 +193,7 @@ def test_recover_reads_each_index_history_once(spark, tmp_path,
     once, however many batches there are."""
     from collections import Counter
 
-    from jobs.run_crawl_cycle import recover
+    from jobs.run_crawl_cycle import _index_kw, recover
 
     w = str(tmp_path / "reads_wh")
     for i in range(3):
@@ -201,10 +201,14 @@ def test_recover_reads_each_index_history_once(spark, tmp_path,
             gen_pages_df(spark, 4, start=4 * i), w, "pages",
             stage_params={"batch_tag": f"pages-{4 * i}-{4 * i + 4}"},
             mode="append")
-    # the last batch reached `edges`: no unfinished pipeline batch
-    catalog.write_table(spark.range(1), w, "edges",
-                        stage_params={"pages_snapshot": snap["snapshot_id"]})
-    first = recover(spark, w)
+    # the last batch reached `nodes` and `edges`: no unfinished
+    # pipeline batch
+    for t in ("nodes", "edges"):
+        catalog.write_table(
+            spark.range(1), w, t,
+            stage_params={"pages_snapshot": snap["snapshot_id"]})
+    kw = _index_kw(w)
+    first = recover(spark, w, kw)
     assert len(first["repaired_index"]) == 9  # 3 batches x 3 tables
 
     calls = Counter()
@@ -215,7 +219,7 @@ def test_recover_reads_each_index_history_once(spark, tmp_path,
         return history(warehouse, table)
 
     monkeypatch.setattr(catalog, "history", counting)
-    assert recover(spark, w)["repaired_index"] == []
+    assert recover(spark, w, kw)["repaired_index"] == []
     for t in ("dedup_docs", "dedup_index", "dedup_shingles"):
         assert calls[t] <= 1, (t, calls)
     monkeypatch.undo()

@@ -10,7 +10,7 @@ import pytest
 
 from thesis_ner_co_tri_training_spark.plans import pipeline
 from thesis_ner_co_tri_training_spark.plans.pipeline import (
-    build_nodes_df, run_pipeline)
+    build_nodes_df, finish_last_batch, run_pipeline, run_pipeline_incremental)
 from thesis_ner_co_tri_training_spark.sources import catalog
 from thesis_ner_co_tri_training_spark.sources.pages import gen_pages_df
 
@@ -84,6 +84,32 @@ def test_branch_error_waits_then_rerun_resumes(spark, reference, tmp_path,
     lineage = run_pipeline(spark, pages, wh)
     assert [s for s in STAGES if lineage[s].get("resumed")] == [
         "voted", "mentions", "entities"]
+    assert _rows(spark, wh) == _rows(spark, ref_wh)
+
+
+def test_batch_with_failed_nodes_is_recovered(spark, reference, tmp_path,
+                                             monkeypatch):
+    """nodes fails on the worker branch of a batch while edges, beside
+    it, publishes: the batch still counts as unfinished, so
+    finish_last_batch resumes it by tag and builds nodes, and the
+    warehouse matches the full run."""
+    ref_wh = reference[0]
+    wh = str(tmp_path / "wh")
+    pages = gen_pages_df(spark, N_PAGES, partitions=4)
+
+    def boom(mentions, entities):
+        raise RuntimeError("build_nodes_df failed")
+
+    monkeypatch.setattr(pipeline, "build_nodes_df", boom)
+    with pytest.raises(RuntimeError, match="build_nodes_df failed"):
+        run_pipeline_incremental(spark, pages, wh, batch_tag="b1")
+    assert catalog.table_complete(wh, "edges")
+    assert catalog.history(wh, "nodes") == []
+
+    monkeypatch.undo()
+    assert finish_last_batch(spark, wh) == "b1"
+    assert catalog.table_complete(wh, "nodes")
+    assert finish_last_batch(spark, wh) is None
     assert _rows(spark, wh) == _rows(spark, ref_wh)
 
 

@@ -287,8 +287,10 @@ def canonicalize_entities(mentions: DataFrame,
 
 
 def surface_to_entity(mentions: DataFrame, entities: DataFrame) -> DataFrame:
-    """Attach entity_id to every mention; broadcast the alias map."""
+    """Attach the entity's columns (all but `aliases`) to every mention;
+    broadcast the alias map. A surface in no entity's aliases gets
+    NULLs."""
     alias_map = entities.select(
-        F.explode("aliases").alias("surface"), "entity_id", "canonical"
-    )
+        F.explode("aliases").alias("surface"),
+        *[c for c in entities.columns if c != "aliases"])
     return mentions.join(F.broadcast(alias_map), "surface", "left")

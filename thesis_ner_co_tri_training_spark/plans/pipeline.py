@@ -380,18 +380,19 @@ def _pages_batch(warehouse: str, new_pages: DataFrame | None,
 def finish_last_batch(spark: SparkSession, warehouse: str) -> str | None:
     """Crash recovery before a new batch: if the newest batch-tagged
     pages snapshot (live or expired — compaction snapshots carry no tag
-    and add no pages) never reached the final `edges` stage, resume it
-    by tag (its pages are already in the warehouse) and return the tag;
-    else return None. Reading `edges`' history, not its snapshots
-    alone, keeps an expire-keep on edges from making a finished batch
-    look unfinished."""
+    and add no pages) never reached both final stages, `nodes` and
+    `edges`, resume it by tag (its pages are already in the warehouse)
+    and return the tag; else return None. Both are checked because they
+    run side by side, so either can publish while the other fails.
+    Reading their histories, not their snapshots alone, keeps an
+    expire-keep on them from making a finished batch look unfinished."""
     last = next((s for s in reversed(catalog.history(warehouse, "pages"))
                  if s.get("params", {}).get("batch_tag")), None)
     if last is None:
         return None
-    done = {s.get("params", {}).get("pages_snapshot")
-            for s in catalog.history(warehouse, "edges")}
-    if last["snapshot_id"] in done:
+    if all(last["snapshot_id"] in {s.get("params", {}).get("pages_snapshot")
+                                   for s in catalog.history(warehouse, t)}
+           for t in ("nodes", "edges")):
         return None
     tag = last["params"]["batch_tag"]
     run_pipeline_incremental(spark, None, warehouse, batch_tag=tag)
@@ -400,14 +401,13 @@ def finish_last_batch(spark: SparkSession, warehouse: str) -> str | None:
 
 def build_nodes_df(mentions: DataFrame, entities: DataFrame) -> DataFrame:
     # entity_type = majority tag over the entity's mentions, a tie going
-    # to the smaller tag: one broadcast join to an alias map carrying
-    # every node column, then one mode per entity. Each entity also adds
-    # one tag-less row (mode skips NULLs), so an entity without mentions
-    # keeps its node with a NULL type.
+    # to the smaller tag: one broadcast join to the alias map (which
+    # carries every node column), then one mode per entity. Each entity
+    # also adds one tag-less row (mode skips NULLs), so an entity
+    # without mentions keeps its node with a NULL type.
     cols = ["entity_id", "canonical", "n_mentions"]
-    alias_map = entities.select(F.explode("aliases").alias("surface"), *cols)
-    tagged = mentions.join(F.broadcast(alias_map), "surface").select(
-        *cols, "tag")
+    tagged = (surface_to_entity(mentions, entities)
+              .filter(F.col("entity_id").isNotNull()).select(*cols, "tag"))
     untagged = entities.select(*cols, F.lit(None).cast("string").alias("tag"))
     return (
         tagged.unionByName(untagged)
