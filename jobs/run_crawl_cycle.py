@@ -216,7 +216,6 @@ def run_cycle(spark, warehouse: str, budget: int,
     batch = (ranked.join(F.broadcast(alloc), "domain")
              .filter(F.col("__rk") <= F.col("alloc"))
              .drop("__rk", "alloc"))
-    n_crawled = batch.count()
 
     # 3. DEDUP GATE — one job collects the distinct matched new urls
     # (O(batch)); the drop count and the filter both come from that list
@@ -229,13 +228,15 @@ def run_cycle(spark, warehouse: str, budget: int,
         n_dupes = len(dupes)
         if dupes:
             batch = batch.filter(~F.col("url").isin(dupes))
-    survivors = batch.drop("domain").localCheckpoint(eager=True)
-    n_survivors = survivors.count()
 
-    # 4. INGEST (exactly-once; pages snapshot carries the frontier hwm)
+    # 4. INGEST (exactly-once; pages snapshot carries the frontier hwm).
+    # The pages write evaluates the survivors once; its snapshot counts
+    # them, and the batch urls are unique with the dupes a subset, so
+    # crawled = ingested + dupes with no counting job.
     lineage = run_pipeline_incremental(
-        spark, survivors, warehouse, batch_tag=tag,
+        spark, batch.drop("domain"), warehouse, batch_tag=tag,
         pages_params={"frontier_end": frontier_start + n_frontier})
+    n_survivors = lineage["pages"]["added_rows"]
 
     # 5. INDEX MAINT — same repair loop; this cycle's tag is now a
     # pages batch, so the loop appends its docs/bands/shingles
@@ -247,7 +248,7 @@ def run_cycle(spark, warehouse: str, budget: int,
         "cycle_tag": tag,
         "frontier": [frontier_start, frontier_start + n_frontier],
         "budget": budget,
-        "crawled": n_crawled,
+        "crawled": n_survivors + n_dupes,
         "near_dupes_dropped": n_dupes,
         "ingested": n_survivors,
         "top_allocations": top,

@@ -799,21 +799,3 @@ def test_semantic_dedup_drops_nonfinite_vectors(spark):
                                    threshold=0.95).collect()}
     # clean rows unchanged, poisoned rows absent
     assert got == _semdedup_replay(SEM_VECS, SEM_CENTS, 0.95)
-
-
-def test_semantic_dedup_join_path_matches_literal(spark):
-    """The large-nlist broadcast-join assignment (literal_nlist_max
-    exceeded) must produce exactly the literal fold's output — same
-    sequential-fold doubles, same nearest/tie rule."""
-    from thesis_ner_co_tri_training_spark.operators.dedup import semantic_dedup
-
-    df = spark.createDataFrame(SEM_VECS, "vec_id long, embedding array<double>")
-    cent = spark.createDataFrame(SEM_CENTS,
-                                 "cluster int, centroid array<double>")
-    lit = {r["vec_id"]: (r["cluster"], r["rank_in_cluster"], r["kept"])
-           for r in semantic_dedup(df, centroids=cent,
-                                   threshold=0.95).collect()}
-    joined = {r["vec_id"]: (r["cluster"], r["rank_in_cluster"], r["kept"])
-              for r in semantic_dedup(df, centroids=cent, threshold=0.95,
-                                      literal_nlist_max=1).collect()}
-    assert joined == lit == _semdedup_replay(SEM_VECS, SEM_CENTS, 0.95)

@@ -169,9 +169,9 @@ def test_surface_to_entity_covers_all_mentions(spark, mentions):
     assert linked.count() == mentions.count()
 
 
-def test_lsh_candidate_pairs_rejects_short_signature(spark):
-    """bands*rows_per_band beyond the signature length fails fast at
-    the driver instead of an opaque mid-stage INVALID_ARRAY_INDEX."""
+def test_lsh_candidate_pairs_rejects_nondividing_bands(spark):
+    """A band count that does not divide the signature length fails
+    fast at the driver instead of banding a ragged signature."""
     import pytest
 
     from thesis_ner_co_tri_training_spark.operators.linking import (
@@ -180,8 +180,10 @@ def test_lsh_candidate_pairs_rejects_short_signature(spark):
     surfaces = spark.createDataFrame(
         [("Alpha",), ("Beta",)], "surface string")
     sig = minhash_signature(surface_shingles(surfaces), num_hashes=16)
-    with pytest.raises(ValueError, match="signature length"):
-        lsh_candidate_pairs(sig, bands=8, rows_per_band=4)
+    with pytest.raises(ValueError, match="does not divide"):
+        lsh_candidate_pairs(sig, bands=5)
+    with pytest.raises(ValueError, match="does not divide"):
+        lsh_candidate_pairs(sig, bands=0)
 
 
 def test_lsh_skew_guard_at_max_bucket(spark):

@@ -1,5 +1,6 @@
 """Structured-Streaming path: incremental pages -> mentions parity with
-batch, watermarked windowed rates, exactly-once file sink + restart."""
+batch, watermarked windowed rates, exactly-once catalog sink + restart,
+near-dup matching against the persisted dedup index."""
 
 import os
 
@@ -12,8 +13,7 @@ from thesis_ner_co_tri_training_spark.operators.tagging import (
     explode_sentences, tag_sentences_df)
 from thesis_ner_co_tri_training_spark.sources.pages import gen_pages_df
 from thesis_ner_co_tri_training_spark.streaming import (
-    mention_rates_stream, mentions_stream, read_pages_stream,
-    start_mentions_sink)
+    mention_rates_stream, mentions_stream, read_pages_stream)
 
 N_PAGES = 24
 
@@ -78,22 +78,6 @@ def test_windowed_rates_with_watermark(spark, pages_dir):
     assert rows
     for r in rows:
         assert r["n_mentions"] >= 1 and r["window_end"] > r["window_start"]
-
-
-def test_file_sink_exactly_once_on_restart(spark, pages_dir, tmp_path):
-    out = str(tmp_path / "mentions_out")
-    ckpt = str(tmp_path / "ckpt")
-    s = mentions_stream(read_pages_stream(spark, pages_dir))
-    q = start_mentions_sink(s, out, ckpt)
-    q.awaitTermination(120)
-    n1 = spark.read.parquet(out).count()
-
-    # restart against the same checkpoint: no new input -> no duplicates
-    q2 = start_mentions_sink(
-        mentions_stream(read_pages_stream(spark, pages_dir)), out, ckpt)
-    q2.awaitTermination(120)
-    n2 = spark.read.parquet(out).count()
-    assert n1 == n2 > 0
 
 
 def test_stateful_domain_counts_accumulate(spark, pages_dir, tmp_path):
@@ -240,6 +224,44 @@ def test_dedup_against_index_stream_matches_batch(spark, tmp_path):
           .outputMode("append").trigger(availableNow=True).start())
     q2.awaitTermination(120)
     assert spark.read.parquet(out).count() == len(expect)
+
+
+def test_neardups_stream_seeds_index_once(spark, tmp_path):
+    """run_stream's neardups builder, twice on one warehouse: the second
+    seeding of the mirror history writes nothing, and the catalog-sink
+    rows equal the batch dedup_against_index of the same docs against
+    the persisted index."""
+    from jobs.run_stream import neardups_stream
+    from thesis_ner_co_tri_training_spark.operators.dedup import (
+        dedup_against_index)
+    from thesis_ner_co_tri_training_spark.plans import dedup_index
+    from thesis_ner_co_tri_training_spark.sources import catalog
+    from thesis_ner_co_tri_training_spark.streaming.ingest import (
+        start_catalog_sink)
+
+    src = str(tmp_path / "pages_in")
+    wh = str(tmp_path / "wh")
+    gen_pages_df(spark, 12, partitions=2).write.parquet(src)
+
+    def drain():
+        q = start_catalog_sink(
+            neardups_stream(spark, read_pages_stream(spark, src), wh, 12),
+            wh, "neardups", str(tmp_path / "ckpt"))
+        q.awaitTermination(120)
+
+    drain()
+    drain()
+    for t in dedup_index.TABLES:
+        assert [s["params"]["batch_tag"]
+                for s in catalog.history(wh, t)] == ["mirror-history"]
+    got = catalog.read_table(spark, wh, "neardups")
+    want = {tuple(r) for r in dedup_against_index(
+        gen_pages_df(spark, 12).select("url", "text"),
+        *dedup_index.read(spark, wh), id_col="url",
+        **dedup_index.index_params(wh)).collect()}
+    assert {tuple(r) for r in got.select("a", "b", "jaccard").collect()} \
+        == want
+    assert got.count() == len(want) > 0
 
 
 def test_dedup_pages_stream_canonical_merges_variants(spark, tmp_path):

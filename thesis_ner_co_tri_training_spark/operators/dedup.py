@@ -917,8 +917,7 @@ def semantic_dedup(emb: DataFrame, centroids: DataFrame | None = None,
                    nlist: int = 8, threshold: float = 0.82,
                    id_col: str = "vec_id",
                    vec_col: str = "embedding",
-                   seed: int = 42,
-                   literal_nlist_max: int = 64) -> DataFrame:
+                   seed: int = 42) -> DataFrame:
     """SemDeDup-style embedding-cluster semantic dedup (Abbas et al.
     2023, arXiv:2303.09540): cluster the corpus embeddings, then prune
     near-duplicates WITHIN each cluster so the quadratic comparison is
@@ -945,22 +944,17 @@ def semantic_dedup(emb: DataFrame, centroids: DataFrame | None = None,
 
     Rows with NULL/empty vectors are dropped (can't be clustered), and
     so are vectors carrying a non-finite component (NaN/inf distances
-    poison every comparison: a strict-< argmin never selects, and the
-    pre-fix fold then crashed on element_at(..., 0) under ANSI mode —
-    one bad embedding must not kill a corpus-scale job). Output:
+    poison every comparison; one bad embedding must not kill a
+    corpus-scale job). Output:
     (id_col, cluster int, rank_in_cluster bigint, kept boolean) —
     integers/booleans only, no rounded floats in hashed columns.
 
-    Shape at 100 TB: centroid assignment has two physical strategies,
-    picked by centroid count. Up to `literal_nlist_max` centroids
-    (contract scale) they are collected driver-side (scalar-bounded,
-    OPERATORS.md driver-action audit) and folded as literal arrays — a
-    ZERO-shuffle narrow map. Above that, literal folds are the wrong
-    shape (nlist x dim expression nodes would blow up Catalyst analysis
-    long before the paper's ~50k-cluster design point), so assignment
-    switches to a broadcast nested-loop join against the centroid
-    relation + a map-side-combinable min_by(struct(d2, cluster)) argmin
-    — one keyed shuffle of N pre-reduced rows, no driver collect.
+    Shape at 100 TB: centroid assignment is a broadcast nested-loop
+    join against the centroid relation + a map-side-combinable
+    min(struct(d2, cluster)) argmin — one keyed shuffle of N
+    pre-reduced rows, no driver collect of the centroids, and no
+    nlist x dim literal expression tree that would blow up Catalyst
+    analysis at the paper's ~50k-cluster design point.
     Ranking is one cluster-keyed shuffle; the screening self-join is
     keyed by cluster, so cost is sum(|cluster|^2) — the paper's design
     point: nlist grows as N/target_cluster_size (LAION runs use ~50k
@@ -995,99 +989,38 @@ def semantic_dedup(emb: DataFrame, centroids: DataFrame | None = None,
             "__v", F.lit(0.0), lambda a, x: a + x * x))
     )
 
-    if ncent <= literal_nlist_max:
-        # literal-fold path: nlist rows collected driver-side
-        # (scalar-bounded, like simsearch's clusterCenters collect) buy
-        # a shuffle-free assignment stage
-        crows = sorted(
-            ((int(r["cluster"]), [float(x) for x in r["centroid"]])
-             for r in centroids.collect()),
-            key=lambda t: t[0],
+    # Broadcast the centroid relation, score every (vector, centroid)
+    # pair map-side, and take the per-id argmin with a min(struct)
+    # aggregate: partial aggregation pre-reduces each id's nlist rows
+    # before the one keyed shuffle. Struct order (d2, cluster) keeps the
+    # tie rule: nearest centroid, ties -> lowest cluster id (NaN d2
+    # sorts last, so a finite candidate always wins when one exists).
+    cent = centroids.select(
+        F.col("cluster"),
+        F.col("centroid").cast("array<double>").alias("__c"),
+    ).withColumn("__cself", F.aggregate(
+        "__c", F.lit(0.0), lambda a, x: a + x * x))
+    pair_dot = F.aggregate(
+        F.zip_with("__v", "__c", lambda x, y: x * y),
+        F.lit(0.0), lambda a, x: a + x,
+    )
+    assigned = (
+        v0.join(F.broadcast(cent))
+        .withColumn("__cdot", pair_dot)
+        .withColumn("__d2", F.col("__self") - F.lit(2.0)
+                    * F.col("__cdot") + F.col("__cself"))
+        .groupBy(id_col)
+        .agg(
+            F.min(F.struct("__d2", "cluster", "__cdot",
+                           "__cself")).alias("__b"),
+            F.first("__v").alias("__v"),
+            F.first("__self").alias("__self"),
         )
-
-        # <c,c> as a sequential Python fold — the same left-to-right
-        # IEEE adds as the engine/oracle folds, so the literal is
-        # bit-identical to DuckDB's list_dot_product(ce, ce).
-        def _self_dot(vec):
-            s = 0.0
-            for x in vec:
-                s += x * x
-            return s
-
-        cids = F.array(*[F.lit(c) for c, _ in crows])
-        cselfs = F.array(*[F.lit(_self_dot(v)) for _, v in crows])
-
-        def _dot_lit(vec):
-            lits = F.array(*[F.lit(x) for x in vec])
-            return F.aggregate(
-                F.zip_with(F.col("__v"), lits, lambda x, y: x * y),
-                F.lit(0.0), lambda a, x: a + x,
-            )
-
-        n = len(crows)
-        assigned = (
-            v0
-            .withColumn("__dots",
-                        F.array(*[_dot_lit(vec) for _, vec in crows]))
-            .withColumn("__d2s", F.zip_with(
-                "__dots", cselfs,
-                lambda d, cs: F.col("__self") - F.lit(2.0) * d + cs))
-            # argmin fold, strict < -> earliest (= lowest cluster id)
-            # wins ties
-            .withColumn("__best", F.aggregate(
-                F.sequence(F.lit(1), F.lit(n)),
-                F.struct(F.lit(0).alias("i"),
-                         F.lit(float("inf")).alias("d")),
-                lambda acc, i: F.when(
-                    F.element_at(F.col("__d2s"), i) < acc["d"],
-                    F.struct(i.alias("i"),
-                             F.element_at(F.col("__d2s"), i).alias("d")),
-                ).otherwise(acc)))
-            # overflow guard: finite inputs can still square/sum to inf,
-            # making every d2 inf or NaN so the strict-< fold never
-            # fires; clamp to the first (lowest-id) centroid instead of
-            # element_at(..., 0) (INVALID_INDEX_OF_ZERO under ANSI)
-            .withColumn("__bi", F.greatest(F.col("__best.i"), F.lit(1)))
-            .withColumn("cluster", F.element_at(cids, F.col("__bi")))
-            .withColumn("__cdot", F.element_at("__dots", F.col("__bi")))
-            .withColumn("__cself", F.element_at(cselfs, F.col("__bi")))
-        )
-    else:
-        # join path: at the paper's ~50k-cluster design point, literal
-        # folds would put nlist x dim nodes into one projection —
-        # Catalyst fails long before that. Broadcast the centroid
-        # relation, score every (vector, centroid) pair map-side, and
-        # take the per-id argmin with a min(struct) aggregate: partial
-        # aggregation pre-reduces each id's nlist rows before the one
-        # keyed shuffle. Struct order (d2, cluster) keeps the tie rule:
-        # nearest centroid, ties -> lowest cluster id (NaN d2 sorts
-        # last, so a finite candidate always wins when one exists).
-        cent = centroids.select(
-            F.col("cluster"),
-            F.col("centroid").cast("array<double>").alias("__c"),
-        ).withColumn("__cself", F.aggregate(
-            "__c", F.lit(0.0), lambda a, x: a + x * x))
-        pair_dot = F.aggregate(
-            F.zip_with("__v", "__c", lambda x, y: x * y),
-            F.lit(0.0), lambda a, x: a + x,
-        )
-        assigned = (
-            v0.join(F.broadcast(cent))
-            .withColumn("__cdot", pair_dot)
-            .withColumn("__d2", F.col("__self") - F.lit(2.0)
-                        * F.col("__cdot") + F.col("__cself"))
-            .groupBy(id_col)
-            .agg(
-                F.min(F.struct("__d2", "cluster", "__cdot",
-                               "__cself")).alias("__b"),
-                F.first("__v").alias("__v"),
-                F.first("__self").alias("__self"),
-            )
-            .select(id_col, "__v", "__self",
-                    F.col("__b.cluster").alias("cluster"),
-                    F.col("__b.__cdot").alias("__cdot"),
-                    F.col("__b.__cself").alias("__cself"))
-        )
+        .select(id_col, "__v", "__self",
+                F.col("__b.cluster").alias("cluster"),
+                F.col("__b.__cdot").alias("__cdot"),
+                F.col("__b.__cself").alias("__cself"))
+    )
 
     v = (
         assigned

@@ -113,30 +113,31 @@ def _bucket_pairs(rows: DataFrame, max_bucket: int) -> DataFrame:
     return buckets.select(F.inline(pairs)).distinct()
 
 
-def lsh_candidate_pairs(df: DataFrame, bands: int = 4, rows_per_band: int = 4,
+def lsh_candidate_pairs(df: DataFrame, bands: int = 4,
                         key: str = "surface", max_bucket: int = 256) -> DataFrame:
     """Band the signature and pair the members of each band bucket.
 
     Input: (key, shingles, sig) rows, `sig` built by minhash_signature.
-    Output: distinct (a, b, sh_a, sh_b) candidate pairs with a < b and
-    both shingle arrays, ready for jaccard_verify. Buckets with more than
-    max_bucket members are dropped (_bucket_pairs' skew guard).
+    Each band takes num_hashes // bands signature rows, num_hashes read
+    from the `sig` metadata, as dedup derives it. Output: distinct
+    (a, b, sh_a, sh_b) candidate pairs with a < b and both shingle
+    arrays, ready for jaccard_verify. Buckets with more than max_bucket
+    members are dropped (_bucket_pairs' skew guard).
     """
-    # Fail fast at the driver: banding reads sig[b*rows_per_band + r + 1]
-    # up to bands*rows_per_band — past the signature length that's an
-    # opaque INVALID_ARRAY_INDEX mid-stage under ANSI (silent NULL bands
-    # with ANSI off), e.g. num_hashes=16 with bands=8, rows_per_band=4.
+    # Fail fast at the driver, no job: a band count that does not split
+    # the signature evenly would leave hash rows unused or index past
+    # the signature (INVALID_ARRAY_INDEX mid-stage under ANSI).
     n = df.schema["sig"].metadata.get("num_hashes")
     if n is None:
         raise ValueError(
             "lsh_candidate_pairs: the sig column carries no num_hashes "
             "metadata; build it with minhash_signature")
-    if n < bands * rows_per_band:
+    if bands < 1 or n % bands:
         raise ValueError(
-            f"lsh_candidate_pairs: bands*rows_per_band = "
-            f"{bands * rows_per_band} exceeds signature length "
-            f"{n} (num_hashes at signature build)")
-    cols = [F.element_at("sig", i + 1) for i in range(bands * rows_per_band)]
+            f"lsh_candidate_pairs: bands={bands} does not divide the "
+            f"signature length {n} (num_hashes at signature build)")
+    rows_per_band = n // bands
+    cols = [F.element_at("sig", i + 1) for i in range(n)]
     return _bucket_pairs(df.select(
         _band_buckets(cols, bands, rows_per_band),
         F.struct(F.col(key).alias("k"), F.col("shingles").alias("sh"))
@@ -257,7 +258,6 @@ def _star_round(nodes: DataFrame) -> DataFrame:
 def canonicalize_entities(mentions: DataFrame,
                           num_hashes: int = 16,
                           bands: int = 4,
-                          rows_per_band: int = 4,
                           jaccard_threshold: float = 0.6) -> DataFrame:
     """mentions -> entities(entity_id, canonical, aliases, n_mentions).
 
@@ -269,7 +269,7 @@ def canonicalize_entities(mentions: DataFrame,
     # as many Spark jobs as a checkpoint would.
     vocab = surface_shingles(mentions)
     sigs = minhash_signature(vocab, num_hashes=num_hashes)
-    pairs = lsh_candidate_pairs(sigs, bands=bands, rows_per_band=rows_per_band)
+    pairs = lsh_candidate_pairs(sigs, bands=bands)
     verified = jaccard_verify(pairs, threshold=jaccard_threshold)
     comps = connected_components(verified)
 

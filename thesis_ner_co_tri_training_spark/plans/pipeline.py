@@ -89,7 +89,6 @@ DEFAULT_PARAMS: dict[str, Any] = {
     "jaccard_threshold": 0.6,
     "minhash_hashes": 16,
     "lsh_bands": 4,
-    "lsh_rows_per_band": 4,
     "salt": 8,
 }
 
@@ -277,7 +276,6 @@ def _run(spark: SparkSession, pages: DataFrame | None, warehouse: str,
                 mentions,
                 num_hashes=p["minhash_hashes"],
                 bands=p["lsh_bands"],
-                rows_per_band=p["lsh_rows_per_band"],
                 jaccard_threshold=p["jaccard_threshold"],
             ),
         )

@@ -7,7 +7,6 @@ from .ingest import (  # noqa: F401
     read_pages_stream,
     sessions_stream,
     start_catalog_sink,
-    start_mentions_sink,
     triples_stream,
 )
 from .stateful import domain_mention_state_stream  # noqa: F401

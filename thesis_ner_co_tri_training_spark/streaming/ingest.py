@@ -12,9 +12,12 @@ and one set of semantics. Streaming-specific pieces here:
     Spark-idiomatic stand-in for a crawl feed / Iceberg incremental scan,
   - event-time windowed mention-rate aggregation with a watermark on
     `warc_ts` for late crawl records,
-  - a parquet sink with Structured Streaming's own checkpointLocation
-    (exactly-once file sink; complements the batch pipeline's
-    per-stage snapshot resume).
+  - one sink, `start_catalog_sink`: foreachBatch appends into a
+    snapshot catalog table, exactly-once by (stream identity, batch id)
+    tags, next to Structured Streaming's own checkpointLocation — the
+    streamed table gets the batch stages' warehouse contract,
+  - stream-static near-dup matching against the persisted dedup index
+    (`dedup_against_index_stream`, plans/dedup_index's tables).
 
 At cluster scale the file source lists new files per trigger; with
 maxFilesPerTrigger it back-pressures a 100TB backfill into bounded
@@ -73,7 +76,7 @@ def triples_stream(
 
     Same narrow fused path as mentions_stream, ending in relation
     extraction — incremental KG construction: each micro-batch of crawled
-    pages appends its triples exactly-once through the file sink.
+    pages appends its triples exactly-once through the catalog sink.
     """
     from ..operators.triples import extract_triples
 
@@ -106,24 +109,6 @@ def mention_rates_stream(
     )
 
 
-def start_mentions_sink(
-    mentions: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    trigger_once: bool = True,
-):
-    """Exactly-once parquet sink with its own streaming checkpoint."""
-    writer = (
-        mentions.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def stream_identity(checkpoint_dir: str) -> str:
     """Stable identity of a streaming query: the UUID Spark writes to
     `<checkpoint>/metadata` at query start (constant across restarts of
@@ -148,7 +133,8 @@ def append_batch_to_catalog(
     warehouse: str,
     table: str,
     partition_by: list[str] | None = None,
-    stream_id: str = "",
+    *,
+    stream_id: str,
 ) -> dict | None:
     """Idempotent per-micro-batch append into a snapshot catalog table —
     the foreachBatch body of `start_catalog_sink`, exposed for tests.
@@ -166,13 +152,10 @@ def append_batch_to_catalog(
     replays safely: readers only see manifested snap dirs, and the
     replay claims a fresh dir; the orphan is GC'd by expire_snapshots.
     Returns the snapshot record, or None when the batch was already
-    committed. (Tables written by the pre-stream-id sink carry
-    `stream-batch-<id>` tags, which never collide with the new format;
-    do not resume a mid-crash pre-upgrade stream across this change.)"""
+    committed."""
     from ..sources import catalog
 
-    tag = (f"stream-{stream_id}-batch-{batch_id}" if stream_id
-           else f"stream-batch-{batch_id}")
+    tag = f"stream-{stream_id}-batch-{batch_id}"
     if tag in catalog.batch_tags(warehouse, table):
         return None
     return catalog.write_table(
@@ -198,10 +181,8 @@ def start_catalog_sink(
     travel, `read_incremental` (downstream consumers read only the snap
     dirs new batches added — the Iceberg streaming-append contract),
     per-batch lineage/partition metrics, and compaction via table_maint.
-
-    The plain parquet file sink (`start_mentions_sink`) writes one flat
-    dir with a _spark_metadata ledger only the same stream can read;
-    this sink makes stream output a first-class warehouse table."""
+    It is the one streaming sink: stream output is a first-class
+    warehouse table, never a flat dir only the same stream can read."""
     writer = (
         stream.writeStream.foreachBatch(
             # stream_identity is resolved lazily INSIDE the batch body:
