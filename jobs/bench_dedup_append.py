@@ -11,7 +11,7 @@ band-join probe side scanning a growing index table, which compaction
 (--maintain-every) keeps cheap by folding the per-batch snap dirs into
 few files.
 
-Prints one JSON line per append {batch_i, index_rows_before, seconds}
+Prints one JSON line per append {batch_i, index_docs_before, seconds}
 plus a summary with the first/last-quartile mean ratio and the
 compaction points. Uses the real jobs/run_dedup.py functions in one
 session (no per-batch JVM spin-up polluting the curve); the audit
@@ -62,7 +62,7 @@ def main() -> int:
         out = do_append(spark, wh, args.batch)
         sec = round(time.time() - t0, 3)
         rows.append({"batch_i": i + 1,
-                     "index_rows_before": idx_before,
+                     "index_docs_before": idx_before,
                      "batch_tag": out["batch_tag"],
                      "seconds": sec})
         print(json.dumps(rows[-1]), file=sys.stderr)

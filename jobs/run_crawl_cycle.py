@@ -18,17 +18,17 @@ survivors to the incremental KG pipeline. One cycle:
      frontier (ids continue from the high-water mark recorded in the
      pages snapshot params) and keep per-domain up to its allocation,
      smallest page id first.
-  3. DEDUP GATE — match candidates against the persisted index and
-     shingles tables with dedup_against_index (O(batch), q67's
-     operator); drop near-dups.
+  3. DEDUP GATE — match candidates against the persisted index
+     (dedup_index.read's two projections) with dedup_against_index
+     (O(batch), q67's operator); drop near-dups.
   4. INGEST — run_pipeline_incremental(batch_tag="cycle-<start>")
      appends survivors through the fused voted stage (extract, split,
      tag, vote) -> mentions/triples and recomputes the global
      entity/graph stages; the pages snapshot records the frontier
      high-water mark.
-  5. INDEX MAINT — append the survivors' docs/bands/shingles to the
-     index tables (plans/dedup_index.append_batch, the index's one
-     writer) so the NEXT cycle sees this one as history.
+  5. INDEX MAINT — append the survivors to the index as one snapshot
+     (plans/dedup_index.append_batch, the index's one writer) so the
+     NEXT cycle sees this one as history.
 
 Crash safety, in order of what can be lost:
   - before INGEST: nothing persisted; steps 1-3 are deterministic
@@ -38,11 +38,10 @@ Crash safety, in order of what can be lost:
     (every cycle first runs pipeline.finish_last_batch).
   - after INGEST, before/mid INDEX MAINT: the index repair loop scans
     ALL batch-tagged pages snapshots and re-derives any batch missing
-    from the index tables from the rows its pages snapshot added
-    (catalog.read_added; per-table idempotent by tag) — the
-    run_dedup.py repair shape, but re-derived from the warehouse
-    instead of regenerated. The gate runs only after this repair, so
-    the three tables agree when it matches.
+    from the index from the rows its pages snapshot added
+    (catalog.read_added; idempotent by tag) — the run_dedup.py repair
+    shape, but re-derived from the warehouse instead of regenerated.
+    The gate runs only after this repair, so it never misses history.
 A rerun of a fully completed cycle set proceeds to the NEXT cycle
 (frontier advanced); rerunning mid-crash never double-appends (tags).
 Prints one JSON line per cycle.
@@ -121,9 +120,9 @@ def _pages_batches(warehouse):
 
 def recover(spark, warehouse: str, kw: dict) -> dict:
     """Finish any half-done previous cycle: resume its pipeline batch,
-    then repair the index tables from the warehouse (idempotent). Each
-    index table's history is read once per call, whatever the number
-    of batches (recover runs twice per cycle). `kw` is the index params
+    then repair the index from the warehouse (idempotent). The index
+    history is read once per call, whatever the number of batches
+    (recover runs twice per cycle). `kw` is the index params
     (`_index_kw`), read once by the caller."""
     from thesis_ner_co_tri_training_spark.plans.pipeline import (
         finish_last_batch)
@@ -134,7 +133,7 @@ def recover(spark, warehouse: str, kw: dict) -> dict:
     have = dedup_index.tags(warehouse)
     for snap in _pages_batches(warehouse):
         tag = snap["params"]["batch_tag"]
-        if all(tag in h for h in have.values()):
+        if tag in have:
             continue
         # An UNindexed batch whose pages snapshot was already expired
         # cannot be re-derived; read_added then raises loudly (normal
@@ -143,9 +142,9 @@ def recover(spark, warehouse: str, kw: dict) -> dict:
         # reach that state).
         docs = catalog.read_added(spark, warehouse, "pages", snap).select(
             "url", "text")
-        done["repaired_index"] += [
-            f"{t}:{tag}" for t in dedup_index.append_batch(
-                warehouse, docs, {**kw, "batch_tag": tag}, have)]
+        dedup_index.append_batch(warehouse, docs, {**kw, "batch_tag": tag},
+                                 have)
+        done["repaired_index"].append(tag)
     return done
 
 
@@ -220,7 +219,7 @@ def run_cycle(spark, warehouse: str, budget: int,
     # 3. DEDUP GATE — one job collects the distinct matched new urls
     # (O(batch)); the drop count and the filter both come from that list
     n_dupes = 0
-    if catalog.latest_snapshot(warehouse, "dedup_index") is not None:
+    if catalog.latest_snapshot(warehouse, dedup_index.TABLE) is not None:
         dupes = [r["a"] for r in dedup_against_index(
             batch.select("url", "text"), *dedup_index.read(spark, warehouse),
             id_col="url", threshold=threshold,
@@ -239,7 +238,7 @@ def run_cycle(spark, warehouse: str, budget: int,
     n_survivors = lineage["pages"]["added_rows"]
 
     # 5. INDEX MAINT — same repair loop; this cycle's tag is now a
-    # pages batch, so the loop appends its docs/bands/shingles
+    # pages batch, so the loop appends its docs to the index
     indexed = recover(spark, warehouse, kw)
 
     top = {r["domain"]: r["alloc"] for r in sorted(

@@ -6,28 +6,29 @@
     spark-submit ... jobs/run_dedup.py --warehouse /tmp/kg_dedup --append 200
     spark-submit ... jobs/run_dedup.py --warehouse /tmp/kg_dedup --maintain
 
---init N: seed the corpus with N synthetic pages and build the three
-catalog tables of the persisted index (plans/dedup_index, which owns
-their format and is their one writer) — `dedup_docs` (url, text),
-`dedup_index` (url, band, bucket) and `dedup_shingles` (url, distinct
-shingle set). The index parameters (hasher/n/num_hashes/bands) are
-recorded in the snapshot lineage: they are the index schema contract,
-and --append reads them back rather than trusting its own defaults.
+--init N: seed the corpus with N synthetic pages and build the
+persisted index, the one catalog table `dedup_index` (plans/dedup_index
+owns its format and is its one writer): one row per doc, (url, text,
+distinct shingle set, array of band buckets). The index parameters
+(hasher/n/num_hashes/bands) are recorded in the snapshot lineage: they
+are the index schema contract, and --append reads them back rather
+than trusting its own defaults.
 
 --append N: ingest the next crawl batch — N new pages plus a recrawl
 tail (mirror-host copies of N//5 existing pages: different url,
 identical text, the classic case incremental dedup must catch). The
-batch is matched against the CURRENT index and shingles snapshots with
+batch is matched against the CURRENT index snapshot with
 dedup_against_index (O(batch) hashing + two broadcast joins — never a
 corpus self-join, signature recompute or re-tokenization), matches land
 in `dedup_matches` (append snapshot tagged by the batch), and the
-batch's own docs/bands/shingles are appended to the index tables so the
-NEXT batch sees this one as history. Exactly-once per batch: a rerun whose batch tag is
-already everywhere reports `"resumed": true` and writes nothing.
+batch's own rows are appended to the index as one snapshot so the NEXT
+batch sees this one as history. Exactly-once per batch: a rerun whose
+batch tag is already in both tables reports `"resumed": true` and
+writes nothing.
 
 --maintain: the index grows monotonically, one snap dir (many small
-files) per batch; this is the scheduled small-files job — compact each
-dedup table to --target-files files and expire all but the newest
+files) per batch; this is the scheduled small-files job — compact both
+dedup tables to --target-files files and expire all but the newest
 --keep-last snapshots. Batch tags of expired snapshots move to the
 catalog's batch-ledger, so the exactly-once/repair bookkeeping is
 unaffected; index parity is re-audited after compaction, and the next
@@ -35,19 +36,18 @@ unaffected; index parity is re-audited after compaction, and the next
 the newest snapshot that carries them, not blindly from the latest).
 
 Crash recovery: matches are written FIRST, so a crash mid-append can
-only leave docs/index/shingles missing a tag that matches already has.
-Every --append run starts with a repair pass — each batch tag recorded
-in `dedup_matches` but absent from one of the three maintenance tables
-is regenerated (batches are pure functions of their recorded start/
-size) and the missing appends are replayed, per-table idempotent. Only
-then does the new batch run, so the index a batch is matched against
-never silently misses history.
+only leave the index missing a tag that matches already has. Every
+--append run starts with a repair pass — each batch tag recorded in
+`dedup_matches` but absent from the index is regenerated (batches are
+pure functions of their recorded start/size) and appended, one
+snapshot per tag. Only then does the new batch run, so the index a
+batch is matched against never silently misses history.
 
-Every run asserts index parity: the accumulated `dedup_index` table,
-built per batch by the per-row minhash_bands_narrow, must equal the
-aggregate minhash_bands(all docs) row-for-row — append maintenance and
-full rebuild are interchangeable (cheap at smoke scale; at corpus scale
-this is an audit job, not a per-batch gate).
+Every run asserts index parity: the accumulated index's exploded
+buckets, built per batch by the per-row minhash_docs, must equal the
+aggregate minhash_bands over its `text` column row-for-row — append
+maintenance and full rebuild are interchangeable (cheap at smoke
+scale; at corpus scale this is an audit job, not a per-batch gate).
 """
 
 from __future__ import annotations
@@ -65,7 +65,7 @@ from thesis_ner_co_tri_training_spark.plans import dedup_index  # noqa: E402
 
 INDEX_PARAMS = dedup_index.INDEX_PARAMS
 
-DEDUP_TABLES = (*dedup_index.TABLES, "dedup_matches")
+DEDUP_TABLES = (dedup_index.TABLE, "dedup_matches")
 
 
 def _docs_from_pages(pages):
@@ -86,7 +86,7 @@ def index_kw(wh: str) -> dict:
     kw = dedup_index.index_params(wh)
     if kw is None:
         raise ValueError(
-            f"{wh}: no dedup-index parameters found in any dedup_docs "
+            f"{wh}: no dedup-index parameters found in any dedup_index "
             f"snapshot or the batch ledger — not an initialized dedup "
             f"warehouse (run --init first), or its params-bearing "
             f"snapshot was expired by a pre-ledger release. Appending "
@@ -110,7 +110,7 @@ def do_init(spark, wh: str, n: int) -> dict:
     return {
         "op": "init",
         "docs": n,
-        "index_rows": latest_snapshot(wh, "dedup_index")["row_count"],
+        "index_docs": latest_snapshot(wh, dedup_index.TABLE)["row_count"],
     }
 
 
@@ -130,10 +130,10 @@ def do_append(spark, wh: str, n: int, threshold: float = 0.8) -> dict:
             tag)
         return fresh.unionByName(recrawl).localCheckpoint(eager=True)
 
-    # repair pass: any batch recorded in matches but missing from an
-    # index table is replayed (batches regenerate exactly from their
-    # recorded start/size). Tags come from each table's `history`, read
-    # once: live snapshots + the expired-snapshot ledger, so expiry
+    # repair pass: any batch recorded in matches but missing from the
+    # index is replayed (batches regenerate exactly from their recorded
+    # start/size). Tags come from the index's `history`, read once:
+    # live snapshots + the expired-snapshot ledger, so expiry
     # (--maintain / table_maint --expire-keep) never makes a batch look
     # un-appended and repair/resume never double-appends.
     have = dedup_index.tags(wh)
@@ -142,14 +142,15 @@ def do_append(spark, wh: str, n: int, threshold: float = 0.8) -> dict:
                   for s in catalog.history(wh, "dedup_matches")]
     for p in match_recs:
         tag = p.get("batch_tag")
-        if tag and not all(tag in h for h in have.values()):
-            repaired += dedup_index.append_batch(
+        if tag and tag not in have:
+            dedup_index.append_batch(
                 wh, _regen_batch(p["start"], p["n_fresh"], tag), p, have)
+            repaired.append(tag)
 
     if repaired:
         # The repair completed a crashed batch (matches were written,
-        # maintenance tables were not). STOP here as the resumed run:
-        # the maintenance params advanced next_start, so falling
+        # the index was not). STOP here as the resumed run:
+        # the index snapshot's params advanced next_start, so falling
         # through would ingest an additional fresh batch — an operator
         # retrying one failed `--append N` would double the intended
         # page count. Exactly-once contract: complete, then stop; the
@@ -161,7 +162,7 @@ def do_append(spark, wh: str, n: int, threshold: float = 0.8) -> dict:
         # newest params carrying next_start: compaction snapshots carry
         # none, and expired batches live on in the ledger
         start = next(s["params"]["next_start"]
-                     for s in reversed(catalog.history(wh, "dedup_docs"))
+                     for s in reversed(catalog.history(wh, dedup_index.TABLE))
                      if "next_start" in s.get("params", {}))
         batch_tag = f"batch-{start}"
     if repaired or batch_tag in catalog.batch_tags(wh, "dedup_matches"):
@@ -169,7 +170,7 @@ def do_append(spark, wh: str, n: int, threshold: float = 0.8) -> dict:
             "op": "append", "batch_tag": batch_tag, "resumed": True,
             "repaired": repaired,
             "matches_total":
-                catalog.read_table(spark, wh, "dedup_matches").count(),
+                catalog.latest_snapshot(wh, "dedup_matches")["row_count"],
         }
     batch = _regen_batch(start, n, batch_tag)
     matches = dedup_against_index(
@@ -188,7 +189,7 @@ def do_append(spark, wh: str, n: int, threshold: float = 0.8) -> dict:
         "repaired": repaired,
         "batch_docs": batch.count(), "batch_matches": m_rows,
         "matches_total":
-            catalog.read_table(spark, wh, "dedup_matches").count(),
+            catalog.latest_snapshot(wh, "dedup_matches")["row_count"],
     }
 
 
@@ -221,17 +222,17 @@ def do_maintain(spark, wh: str, target_files: int = 4,
 
 
 def audit(spark, wh: str) -> dict:
-    """Index parity: the accumulated dedup_index (per-row builder, one
-    append per batch) equals the aggregate minhash_bands rebuild over
-    the accumulated docs, row-for-row."""
+    """Index parity: the accumulated index's (url, band, bucket) rows
+    (per-row builder, one append per batch) equal the aggregate
+    minhash_bands rebuild over its own `text` column, row-for-row."""
     from thesis_ner_co_tri_training_spark.operators.dedup import (
         minhash_bands)
     from thesis_ner_co_tri_training_spark.sources.catalog import read_table
 
     kw = index_kw(wh)
-    all_docs = read_table(spark, wh, "dedup_docs")
+    all_docs = read_table(spark, wh, dedup_index.TABLE).select("url", "text")
     rebuilt = minhash_bands(all_docs, id_col="url", **kw)
-    idx_now = read_table(spark, wh, "dedup_index")
+    idx_now = dedup_index.read(spark, wh)[0]
     return {
         "index_rows": idx_now.count(),
         "index_parity": (idx_now.exceptAll(rebuilt).isEmpty()
@@ -263,7 +264,7 @@ def main() -> int:
 
     if args.init:
         out = do_init(spark, wh, args.init)
-    elif latest_snapshot(wh, "dedup_docs") is None:
+    elif latest_snapshot(wh, dedup_index.TABLE) is None:
         print(json.dumps({"error": "run --init first"}))
         return 1
     elif args.append:

@@ -44,11 +44,10 @@ def neardups_stream(spark, pages, warehouse: str, n_history: int):
     The history is a mirror-host copy of the first `n_history`
     synthetic pages (disjoint urls, identical text — the classic
     recrawl/mirror case), appended under the batch tag
-    "mirror-history" by dedup_index.append_batch. That append skips
-    every table already carrying the tag, so a rerun, or a rerun after
-    a crash between the three table writes, writes only what is
-    missing. Seeding and matching use the warehouse's recorded index
-    params when it has an index."""
+    "mirror-history" by dedup_index.append_batch as one index snapshot,
+    which a rerun skips: the index carries the tag or does not.
+    Seeding and matching use the warehouse's recorded index params when
+    it has an index."""
     from pyspark.sql import functions as F
 
     from thesis_ner_co_tri_training_spark.plans import dedup_index

@@ -15,6 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from jobs.run_crawl_cycle import INDEX_KW, run_cycle
+from thesis_ner_co_tri_training_spark.plans import dedup_index
 from thesis_ner_co_tri_training_spark.sources import catalog
 from thesis_ner_co_tri_training_spark.sources.pages import gen_pages_df
 
@@ -27,19 +28,11 @@ def wh(spark, tmp_path_factory):
     # pre-seed the dedup index with mirror copies of frontier pages
     # 0..9 (same text, different url): cycle 1's dedup gate must drop
     # whichever of them it crawls
-    from thesis_ner_co_tri_training_spark.operators.dedup import (
-        minhash_bands, token_shingles)
-
     mirrors = gen_pages_df(spark, 10).select(
         F.regexp_replace("url", "^https://", "https://old.mirror.")
         .alias("url"), "text")
-    params = {**INDEX_KW, "batch_tag": "seed"}
-    catalog.write_table(mirrors, w, "dedup_docs", stage_params=params)
-    catalog.write_table(minhash_bands(mirrors, id_col="url", **INDEX_KW),
-                        w, "dedup_index", stage_params=params)
-    catalog.write_table(token_shingles(mirrors, id_col="url",
-                                       n=INDEX_KW["n"]),
-                        w, "dedup_shingles", stage_params=params)
+    dedup_index.append_batch(w, mirrors, {**INDEX_KW, "batch_tag": "seed"},
+                             set())
     return w
 
 
@@ -66,12 +59,10 @@ def test_two_cycles_budget_dedup_and_growth(spark, wh):
     # allocations are an exact budget split
     assert sum(c2["top_allocations"].values()) <= BUDGET
     # index grew by exactly the ingested survivors of both cycles
-    docs = catalog.read_table(spark, wh, "dedup_docs")
+    docs = catalog.read_table(spark, wh, dedup_index.TABLE)
     assert docs.count() == 10 + c1["ingested"] + c2["ingested"]
-    # every cycle tag is on all three index tables (maintenance ran)
-    for t in ("dedup_docs", "dedup_index", "dedup_shingles"):
-        tags = catalog.batch_tags(wh, t)
-        assert {"cycle-0", f"cycle-{2 * BUDGET}"} <= tags, t
+    # every cycle tag is in the index (maintenance ran)
+    assert {"cycle-0", f"cycle-{2 * BUDGET}"} <= dedup_index.tags(wh)
 
 
 def test_crash_recovery_resumes_cycle(spark, wh):
@@ -82,29 +73,23 @@ def test_crash_recovery_resumes_cycle(spark, wh):
             if s["params"].get("batch_tag", "").startswith("cycle-")][-1]
     tag = last["params"]["batch_tag"]
     # simulate crash after mentions append: drop edges' latest snapshot
-    # and the index tables' newest (this cycle's) appends
-    for t in ("edges",):
+    # and the index's newest (this cycle's) append
+    assert catalog.latest_snapshot(
+        wh, dedup_index.TABLE)["params"]["batch_tag"] == tag
+    for t in ("edges", dedup_index.TABLE):
         s = catalog.latest_snapshot(wh, t)
         os.remove(os.path.join(wh, t, "metadata",
                                f"snapshot-{s['snapshot_id']}.json"))
         shutil.rmtree(os.path.join(wh, t, "data",
                                    f"snap-{s['snapshot_id']}"))
-    for t in ("dedup_docs", "dedup_index", "dedup_shingles"):
-        s = catalog.latest_snapshot(wh, t)
-        assert s["params"]["batch_tag"] == tag
-        os.remove(os.path.join(wh, t, "metadata",
-                               f"snapshot-{s['snapshot_id']}.json"))
-        shutil.rmtree(os.path.join(wh, t, "data",
-                                   f"snap-{s['snapshot_id']}"))
-    docs_before = catalog.read_table(spark, wh, "dedup_docs").count()
+    docs_before = catalog.read_table(spark, wh, dedup_index.TABLE).count()
 
     c3 = run_cycle(spark, wh, BUDGET)
     assert c3["recovered"]["resumed_pipeline"] == tag
-    assert any(x.startswith("dedup_docs:") for x in
-               c3["recovered"]["repaired_index"])
-    # the repaired appends restored exactly the lost batch, and cycle 3
+    assert c3["recovered"]["repaired_index"] == [tag]
+    # the repaired append restored exactly the lost batch, and cycle 3
     # appended only its own survivors on top
-    docs_after = catalog.read_table(spark, wh, "dedup_docs").count()
+    docs_after = catalog.read_table(spark, wh, dedup_index.TABLE).count()
     prev_ingested = last["added_rows"]
     assert docs_after == docs_before + prev_ingested + c3["ingested"]
     # pipeline row sets stay consistent: mentions == its own snapshot
@@ -171,7 +156,7 @@ def test_mixed_warehouse_frontier_never_resets(spark, tmp_path):
     assert pages.count() == pages.select("url").distinct().count()
     # the pages- history got indexed by the cycle's repair loop, so the
     # gate now covers it
-    assert "pages-0-40" in catalog.batch_tags(w, "dedup_index")
+    assert "pages-0-40" in dedup_index.tags(w)
 
     # and the reverse direction: the generation frontier for the next
     # append-pages batch clears the cycle's frontier_end even though
@@ -187,10 +172,10 @@ def test_mixed_warehouse_frontier_never_resets(spark, tmp_path):
 def test_recover_reads_each_index_history_once(spark, tmp_path,
                                                monkeypatch):
     """recover() runs twice per cycle over EVERY pages batch ever
-    appended; reading the index tables' histories once per batch made
-    a cycle's catalog reads grow quadratically. With every batch already
-    indexed, one recover() reads each index table's history at most
-    once, however many batches there are."""
+    appended; reading the index history once per batch made a cycle's
+    catalog reads grow quadratically. With every batch already indexed,
+    one recover() reads the index history at most once, however many
+    batches there are."""
     from collections import Counter
 
     from jobs.run_crawl_cycle import _index_kw, recover
@@ -209,7 +194,7 @@ def test_recover_reads_each_index_history_once(spark, tmp_path,
             stage_params={"pages_snapshot": snap["snapshot_id"]})
     kw = _index_kw(w)
     first = recover(spark, w, kw)
-    assert len(first["repaired_index"]) == 9  # 3 batches x 3 tables
+    assert len(first["repaired_index"]) == 3  # one snapshot per batch
 
     calls = Counter()
     history = catalog.history
@@ -220,16 +205,14 @@ def test_recover_reads_each_index_history_once(spark, tmp_path,
 
     monkeypatch.setattr(catalog, "history", counting)
     assert recover(spark, w, kw)["repaired_index"] == []
-    for t in ("dedup_docs", "dedup_index", "dedup_shingles"):
-        assert calls[t] <= 1, (t, calls)
+    assert calls[dedup_index.TABLE] <= 1, calls
     monkeypatch.undo()
 
     # Whole cycles: the index params are read once per cycle and
-    # append_batch takes the tables to write from recover()'s history
-    # read, so a cycle reads each index snapshot at most 7 times over
-    # (dedup_docs for the params, then the three tables in each of the
-    # two recover() calls), plus the gate's two table reads: 0/9/16/23
-    # snapshot reads over 4 cycles (0/13/24/35 before).
+    # append_batch takes its tag check from recover()'s history read,
+    # so a cycle reads each index snapshot at most 3 times over (the
+    # params, then each of the two recover() calls), plus the gate's
+    # one table read: 0/4/7/10 snapshot reads over 4 cycles.
     reads = Counter()
     get_snapshot = catalog.get_snapshot
 
@@ -243,6 +226,5 @@ def test_recover_reads_each_index_history_once(spark, tmp_path,
     for i in range(4):
         reads.clear()
         assert run_cycle(spark, w, 8)["indexed"]
-        per_cycle.append(sum(reads[t] for t in (
-            "dedup_docs", "dedup_index", "dedup_shingles")))
-        assert per_cycle[-1] <= 7 * i + 2 * (i > 0), per_cycle
+        per_cycle.append(reads[dedup_index.TABLE])
+        assert per_cycle[-1] <= 3 * i + (i > 0), per_cycle

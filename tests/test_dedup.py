@@ -585,12 +585,13 @@ def test_dedup_against_index_matches_selfjoin(spark):
                                **kw).count() == 0
 
 
-def test_minhash_bands_narrow_identical(spark):
-    """The zero-shuffle per-row banding emits EXACTLY the rows of the
-    exploded groupBy form, for both hash families (the property that
-    makes stream-side banding interoperable with a batch-built index)."""
+def test_minhash_docs_buckets_identical(spark):
+    """minhash_docs' per-row `buckets`, exploded, are EXACTLY the rows
+    of the aggregate minhash_bands, for both hash families (the
+    property that makes the persisted index and stream-side banding
+    interoperate with q67's in-query index). Short docs emit no rows."""
     from thesis_ner_co_tri_training_spark.operators.dedup import (
-        minhash_bands, minhash_bands_narrow)
+        minhash_bands, minhash_docs)
 
     rows = [
         (1, "the quick brown fox jumps over the lazy dog"),
@@ -603,10 +604,41 @@ def test_minhash_bands_narrow_identical(spark):
     for hasher in ("xxhash64", "md5"):
         a = {tuple(r) for r in minhash_bands(
             df, num_hashes=16, bands=4, hasher=hasher).collect()}
-        b = {tuple(r) for r in minhash_bands_narrow(
-            df, num_hashes=16, bands=4, hasher=hasher).collect()}
+        docs = minhash_docs(df, num_hashes=16, bands=4,
+                            hasher=hasher).localCheckpoint()
+        b = {tuple(r) for r in docs.select(
+            "doc_id", F.posexplode("buckets")).collect()}
         assert a == b and a
-        assert not any(r[0] in (4, 5) for r in a)
+        assert {r.doc_id for r in docs.collect()} == {1, 2, 3}
+
+
+def test_index_matcher_plan_has_no_minhash_filter(spark):
+    """_index_matches explodes the band EXPRESSION of the new docs.
+    Exploding a `buckets` column projected in the same plan would let
+    InferFiltersFromGenerate push size(buckets) > 0 below the
+    projections, inlining the tokenizer and every minhash transform
+    into a Filter (a ~10x slower gate)."""
+    from thesis_ner_co_tri_training_spark.operators.dedup import (
+        _index_matches)
+
+    new = spark.createDataFrame([(1, BASE)], "doc_id long, text string")
+    idx = spark.createDataFrame([(2, 0, 7)],
+                                "doc_id long, band int, bucket long")
+    old = spark.createDataFrame([(2, ["a b c"])],
+                                "doc_id long, shingles array<string>")
+    m = _index_matches(new, idx, old, "doc_id", "text", 3, 32, 8, 0.5,
+                       "xxhash64")
+
+    def nodes(p):
+        yield p
+        for k in range(p.children().size()):
+            yield from nodes(p.children().apply(k))
+
+    conds = [nd.condition().toString()
+             for nd in nodes(m._jdf.queryExecution().optimizedPlan())
+             if nd.nodeName() == "Filter"]
+    assert conds  # the walk reached the new side's own filter
+    assert not any("array_min" in c for c in conds), conds
 
 
 def test_max_bucket_guard_binds(spark):

@@ -16,9 +16,12 @@ import os
 import shutil
 
 import pytest
+from pyspark.sql import functions as F
 
 from jobs.run_dedup import audit, do_append, do_init, do_maintain
+from thesis_ner_co_tri_training_spark.plans import dedup_index
 from thesis_ner_co_tri_training_spark.sources import catalog
+from thesis_ner_co_tri_training_spark.sources.pages import gen_pages_df
 
 
 @pytest.fixture(scope="module")
@@ -56,23 +59,21 @@ def test_init_append_maintain_parity(spark, wh):
     assert a2["resumed"] is False and a2["batch_tag"] == "batch-90"
     assert a2["repaired"] == []  # maintenance is not damage
     assert audit(spark, wh)["index_parity"] is True
-    # a crash between the matches write and the maintenance appends:
-    # the next run's repair pass replays the three missing appends from
-    # the matches record (never re-matching batch-90 — its matches rows
-    # stay exactly-once) and STOPS as the resumed run — an operator
-    # retrying one failed `--append N` must not ingest an extra batch.
-    # The following invocation proceeds with the NEXT batch.
-    for t in ("dedup_docs", "dedup_index", "dedup_shingles"):
-        snap = catalog.latest_snapshot(wh, t)
-        assert snap["params"]["batch_tag"] == "batch-90"
-        shutil.rmtree(os.path.join(wh, t, "data",
-                                   f"snap-{snap['snapshot_id']}"))
-        os.remove(os.path.join(wh, t, "metadata",
-                               f"snapshot-{snap['snapshot_id']}.json"))
+    # a crash between the matches write and the index append: the next
+    # run's repair pass replays the missing append from the matches
+    # record (never re-matching batch-90 — its matches rows stay
+    # exactly-once) and STOPS as the resumed run — an operator retrying
+    # one failed `--append N` must not ingest an extra batch. The
+    # following invocation proceeds with the NEXT batch.
+    snap = catalog.latest_snapshot(wh, dedup_index.TABLE)
+    assert snap["params"]["batch_tag"] == "batch-90"
+    shutil.rmtree(os.path.join(wh, dedup_index.TABLE, "data",
+                               f"snap-{snap['snapshot_id']}"))
+    os.remove(os.path.join(wh, dedup_index.TABLE, "metadata",
+                           f"snapshot-{snap['snapshot_id']}.json"))
     matches_before = catalog.latest_snapshot(wh, "dedup_matches")
     again = do_append(spark, wh, 20)
-    assert sorted(again["repaired"]) == [
-        "dedup_docs", "dedup_index", "dedup_shingles"]
+    assert again["repaired"] == ["batch-90"]
     assert again["resumed"] is True and again["batch_tag"] == "batch-90"
     assert audit(spark, wh)["index_parity"] is True
     nxt = do_append(spark, wh, 20)
@@ -90,15 +91,72 @@ def test_crash_repair_survives_maintenance(spark, wh):
     """Delete the newest dedup_index batch snapshot (simulated crash
     between matches-write and index-append) AFTER earlier batches were
     compacted+expired: the repair pass must replay exactly the missing
-    batch and parity must return."""
+    batch and parity must hold after it."""
     snap = catalog.latest_snapshot(wh, "dedup_index")
     assert snap["params"]["batch_tag"] == "batch-110"
     shutil.rmtree(os.path.join(wh, "dedup_index", "data",
                                f"snap-{snap['snapshot_id']}"))
     os.remove(os.path.join(wh, "dedup_index", "metadata",
                            f"snapshot-{snap['snapshot_id']}.json"))
-    assert audit(spark, wh)["index_parity"] is False
+    # one table: the deleted snapshot took batch-110's docs with it, so
+    # the index is consistent but misses the batch
+    assert "batch-110" not in dedup_index.tags(wh)
     a3 = do_append(spark, wh, 10)
-    assert "dedup_index" in a3["repaired"]
+    assert a3["repaired"] == ["batch-110"]
     assert a3["resumed"] is True  # complete-then-stop, no extra batch
     assert audit(spark, wh)["index_parity"] is True
+
+
+def test_read_projections_equal_aggregate_builders(spark, tmp_path):
+    """The one index table, after two appends and a compaction: read's
+    (url, band, bucket) projection equals minhash_bands over the docs,
+    and its (url, shingles) projection equals token_shingles over the
+    docs with at least n tokens (a shorter doc is in neither)."""
+    from thesis_ner_co_tri_training_spark.operators.dedup import (
+        minhash_bands, token_shingles)
+
+    w = str(tmp_path / "wh")
+    kw = dedup_index.INDEX_PARAMS
+    docs = gen_pages_df(spark, 12).select("url", "text").unionByName(
+        spark.createDataFrame([("https://short/1", "two words")],
+                              "url string, text string"))
+    for tag, part in (("b1", docs.filter(F.col("url").endswith("1"))),
+                      ("b2", docs.filter(~F.col("url").endswith("1")))):
+        assert dedup_index.append_batch(w, part, {**kw, "batch_tag": tag},
+                                        dedup_index.tags(w))
+    catalog.compact_table(spark, w, dedup_index.TABLE, target_files=1)
+
+    bands, shingles = dedup_index.read(spark, w)
+    want = {tuple(r) for r in minhash_bands(docs, id_col="url",
+                                            **kw).collect()}
+    assert {tuple(r) for r in bands.collect()} == want and want
+    long_docs = token_shingles(docs, id_col="url", n=kw["n"]).filter(
+        F.size("shingles") > 0)
+    got = {r.url: set(r.shingles) for r in shingles.collect()}
+    assert got == {r.url: set(r.shingles) for r in long_docs.collect()}
+    assert len(got) == 12 and "https://short/1" not in got
+
+
+def test_append_batch_once_per_tag(spark, tmp_path):
+    """A batch tag is one index snapshot: a second append_batch with
+    the same tag writes nothing."""
+    w = str(tmp_path / "wh")
+    docs = gen_pages_df(spark, 4).select("url", "text")
+    params = {**dedup_index.INDEX_PARAMS, "batch_tag": "b1"}
+    assert dedup_index.append_batch(w, docs, params, dedup_index.tags(w))
+    assert not dedup_index.append_batch(w, docs, params,
+                                        dedup_index.tags(w))
+    assert [s["params"]["batch_tag"] for s in
+            catalog.history(w, dedup_index.TABLE)] == ["b1"]
+
+
+def test_read_rejects_three_table_index(spark, tmp_path):
+    """An index table without `buckets` (the older three-table format,
+    (url, band, bucket) rows) fails fast instead of matching nothing."""
+    w = str(tmp_path / "wh")
+    catalog.write_table(
+        spark.createDataFrame([("u", 0, 1)],
+                              "url string, band int, bucket long"),
+        w, dedup_index.TABLE, stage_params={"batch_tag": "init"})
+    with pytest.raises(ValueError, match="buckets"):
+        dedup_index.read(spark, w)

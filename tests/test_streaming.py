@@ -251,9 +251,8 @@ def test_neardups_stream_seeds_index_once(spark, tmp_path):
 
     drain()
     drain()
-    for t in dedup_index.TABLES:
-        assert [s["params"]["batch_tag"]
-                for s in catalog.history(wh, t)] == ["mirror-history"]
+    assert [s["params"]["batch_tag"] for s in
+            catalog.history(wh, dedup_index.TABLE)] == ["mirror-history"]
     got = catalog.read_table(spark, wh, "neardups")
     want = {tuple(r) for r in dedup_against_index(
         gen_pages_df(spark, 12).select("url", "text"),

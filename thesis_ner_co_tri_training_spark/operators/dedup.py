@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .linking import (_band_buckets, _bucket_pairs, _shingle_hash,
+from .linking import (_band_array, _bucket_pairs, _shingle_hash,
                       connected_components, jaccard_verify)
 
 # lower + collapse whitespace runs + TRIM. The trim matters: without it
@@ -77,8 +77,8 @@ def exact_duplicates(df: DataFrame, id_col: str = "doc_id",
 def _shingle_expr(n: int) -> str:
     """SQL expr building the word-n-gram shingle array from a token
     array named __t — the single shared tokenize-to-shingles recipe
-    (token_shingles_long's exploded form and minhash_bands_narrow's
-    per-row form must hash identical strings)."""
+    (token_shingles_long's exploded form and _doc_hashes' per-row form
+    must hash identical strings)."""
     return (
         f"transform(sequence(0, size(__t) - {n}), "
         f"i -> concat_ws(' ', slice(__t, i + 1, {n})))"
@@ -150,9 +150,60 @@ def _doc_signature(df: DataFrame, id_col: str, text_col: str, n: int,
     )
 
 
+def _doc_hashes(df: DataFrame, id_col: str, text_col: str, n: int,
+                num_hashes: int, hasher: str, keep: tuple = ()) -> DataFrame:
+    """_doc_signature per row, with ZERO shuffle (so it runs unchanged
+    on a stream): h_i = array_min(transform(shingles, s -> hash(s, i)))
+    is the same min of the same hashed multiset, so its bands are
+    minhash_bands' rows (pinned by test). num_hashes array traversals
+    per row instead of a shuffle: right for a batch or micro-batch; a
+    query reading its index twice in one plan keeps minhash_bands."""
+    toks = df.select(
+        id_col, *keep, F.split(NORM(F.col(text_col)), " ").alias("__t")
+    )
+    sh = toks.select(
+        id_col, *keep,
+        F.when(F.size("__t") >= n, F.expr(_shingle_expr(n)))
+        .otherwise(F.array().cast("array<string>")).alias("__sh"),
+    )
+    # NB: the transform lambda must be single-argument — a two-arg
+    # lambda would make Spark bind the second parameter to the array
+    # INDEX, silently replacing the seed.
+    def _minhash(i: int) -> F.Column:
+        return F.array_min(F.transform("__sh",
+                                       lambda s: _shingle_hash(s, i, hasher)))
+
+    return sh.filter(F.size("__sh") > 0).select(
+        id_col, *keep, F.array_distinct("__sh").alias("shingles"),
+        *[_minhash(i).alias(f"h{i}") for i in range(num_hashes)],
+    )
+
+
+def _doc_band_array(num_hashes: int, bands: int, hasher: str) -> F.Column:
+    return _band_array([F.col(f"h{i}") for i in range(num_hashes)],
+                       bands, num_hashes // bands, hasher)
+
+
 def _doc_bands(num_hashes: int, bands: int, hasher: str) -> F.Column:
-    return _band_buckets([F.col(f"h{i}") for i in range(num_hashes)],
-                         bands, num_hashes // bands, hasher)
+    return F.posexplode(_doc_band_array(num_hashes, bands, hasher)).alias(
+        "band", "bucket")
+
+
+def minhash_docs(df: DataFrame, id_col: str = "doc_id",
+                 text_col: str = "text", n: int = 3,
+                 num_hashes: int = 32, bands: int = 8,
+                 hasher: str = "xxhash64") -> DataFrame:
+    """The persisted index's rows (plans/dedup_index), one per doc with
+    >= n tokens: (id, text, shingles, buckets = array<bigint> of the
+    band hashes; posexploded, exactly minhash_bands' rows). Explode
+    `buckets` only after a parquet round trip: on a column computed in
+    the same plan, InferFiltersFromGenerate pushes size(buckets) > 0
+    below the projections, inlining the tokenizer and every minhash
+    transform into a Filter; _index_matches explodes the expression."""
+    return _doc_hashes(df, id_col, text_col, n, num_hashes, hasher,
+                       keep=(text_col,)).select(
+        id_col, text_col, "shingles",
+        _doc_band_array(num_hashes, bands, hasher).alias("buckets"))
 
 
 def minhash_bands(df: DataFrame, id_col: str = "doc_id",
@@ -162,8 +213,8 @@ def minhash_bands(df: DataFrame, id_col: str = "doc_id",
     """Banded minhash rows (id, band, bucket) — the LSH index relation
     dedup_against_index matches a batch against, built in one query
     (q67, the index-parity audit). The persisted index is written per
-    batch by plans/dedup_index with the row-identical
-    minhash_bands_narrow, which needs no checkpoint. hasher/n/
+    batch by plans/dedup_index with the row-identical per-row
+    minhash_docs, which needs no checkpoint. hasher/n/
     num_hashes/bands are part of the index schema contract — a batch
     matched against an index built with different parameters silently
     finds nothing.
@@ -789,14 +840,14 @@ def _index_matches(new_docs: DataFrame, idx: DataFrame,
     """The one set-vs-index matcher (batch and stream): per-row banding
     of the new docs -> broadcast (band, bucket) join to the guarded
     index -> broadcast join to the old docs' (id, shingles) ->
-    jaccard_verify. The new side is broadcast both times, so neither
-    persisted table is shuffled. Output: (a, b, jaccard, *keep), one
-    row per colliding band."""
-    new_b = minhash_bands_narrow(
-        new_docs, id_col, text_col, n, num_hashes, bands, hasher,
-        keep=keep, keep_shingles=True,
+    jaccard_verify. The new side is broadcast both times, so the
+    persisted index is not shuffled. Output: (a, b, jaccard, *keep),
+    one row per colliding band."""
+    new_b = _doc_hashes(
+        new_docs, id_col, text_col, n, num_hashes, hasher, keep,
     ).select(F.col(id_col).alias("a"), *keep,
-             F.col("shingles").alias("sh_a"), "band", "bucket")
+             F.col("shingles").alias("sh_a"),
+             _doc_bands(num_hashes, bands, hasher))
     cand = F.broadcast(new_b).join(
         idx.select(F.col(id_col).alias("b"), "band", "bucket"),
         ["band", "bucket"],
@@ -813,12 +864,12 @@ def dedup_against_index(new_docs: DataFrame, index: DataFrame,
                         max_bucket: int = 64, threshold: float = 0.8,
                         hasher: str = "xxhash64") -> DataFrame:
     """Incremental near-dup dedup of a crawl batch against the
-    accumulated corpus, persisted as `index` = the old docs' (id, band,
+    accumulated corpus, given as `index` = the old docs' (id, band,
     bucket) rows (minhash_bands) and `old_shingles` = their (id,
-    shingles) rows (token_shingles); plans/dedup_index writes both per
-    batch. Each batch pays O(batch) hashing and two broadcast joins:
-    no O(corpus) signature recompute, no re-tokenization of the old
-    corpus, no self-join. Same matcher as streaming.ingest.
+    shingles) rows (token_shingles); plans/dedup_index.read projects
+    both from the persisted index. Each batch pays O(batch) hashing and
+    two broadcast joins: no O(corpus) signature recompute, no
+    re-tokenization of the old corpus, no self-join. Same matcher as streaming.ingest.
     dedup_against_index_stream, for history beyond any watermark.
 
     new_docs and the old corpus must have disjoint ids (crawl batches
@@ -836,58 +887,6 @@ def dedup_against_index(new_docs: DataFrame, index: DataFrame,
         new_docs, filter_index_buckets(index, max_bucket), old_shingles,
         id_col, text_col, n, num_hashes, bands, threshold, hasher,
     ).select("a", "b", "jaccard").distinct()
-
-
-def minhash_bands_narrow(df: DataFrame, id_col: str = "doc_id",
-                         text_col: str = "text", n: int = 3,
-                         num_hashes: int = 32, bands: int = 8,
-                         hasher: str = "xxhash64",
-                         keep: tuple = (),
-                         keep_shingles: bool = False) -> DataFrame:
-    """Per-row, ZERO-shuffle twin of minhash_bands — identical output
-    rows (pinned by test): h_i = array_min(transform(shingles,
-    s -> hash(s, i))) equals the signature aggregate's groupBy-min
-    because both are the min of the same hashed multiset, and the bands
-    come from the same band-hash expression (linking._band_buckets).
-    Docs shorter than n tokens emit no rows, as in the aggregate form.
-
-    Because there is no aggregation, this form runs UNCHANGED on a
-    stream — no state, no watermark — and it is the new-doc side of the
-    one set-vs-index matcher (dedup_against_index and streaming.ingest.
-    dedup_against_index_stream) and the builder of the persisted index
-    (plans/dedup_index). `keep` passes through extra columns (e.g. the
-    event-time column); `keep_shingles` adds the distinct shingle array
-    (token_shingles semantics) so a downstream jaccard_verify can score
-    pairs without rejoining the docs.
-
-    Trade: num_hashes array traversals per row instead of one shuffle.
-    For a crawl batch or a micro-batch that is the right trade; a query
-    that reads its index twice in one plan keeps minhash_bands (its
-    signature table localCheckpoints for reuse).
-    """
-    toks = df.select(
-        id_col, *keep, F.split(NORM(F.col(text_col)), " ").alias("__t")
-    )
-    sh = toks.select(
-        id_col, *keep,
-        F.when(F.size("__t") >= n, F.expr(_shingle_expr(n)))
-        .otherwise(F.array().cast("array<string>")).alias("__sh"),
-    )
-    # NB: the transform lambda must be single-argument — a two-arg
-    # lambda would make Spark bind the second parameter to the array
-    # INDEX, silently replacing the seed.
-    def _minhash(i: int) -> F.Column:
-        return F.array_min(F.transform("__sh",
-                                       lambda s: _shingle_hash(s, i, hasher)))
-
-    sig = sh.filter(F.size("__sh") > 0).select(
-        id_col, *keep, F.array_distinct("__sh").alias("shingles"),
-        *[_minhash(i).alias(f"h{i}") for i in range(num_hashes)],
-    )
-    return sig.select(
-        F.col(id_col), *keep, *(["shingles"] if keep_shingles else []),
-        _doc_bands(num_hashes, bands, hasher),
-    )
 
 
 def kmeans_centroids(emb: DataFrame, nlist: int = 8,

@@ -70,28 +70,28 @@ def minhash_signature(df: DataFrame, num_hashes: int = 16,
 
 
 def _shingle_hash(c, i: int, hasher: str) -> F.Column:
-    """Shingle c hashed under seed i. With _band_buckets' band hash, the
+    """Shingle c hashed under seed i. With _band_array's band hash, the
     cross-engine oracle byte recipe (hashutil docstring)."""
     if hasher == "md5":
         return md5_long(c, F.lit(str(i)))
     return F.xxhash64(c, F.lit(i))
 
 
-def _band_buckets(cols: list, bands: int, rows_per_band: int,
-                  hasher: str = "xxhash64") -> F.Column:
-    """posexplode(band, bucket): band b hashes the signature slice
-    cols[b*rows_per_band : (b+1)*rows_per_band]. The one band hash of
-    every LSH relation (linking, dedup pairs, the persisted dedup index
-    and its per-row stream twin)."""
+def _band_array(cols: list, bands: int, rows_per_band: int,
+                hasher: str = "xxhash64") -> F.Column:
+    """array<bigint> of `bands` hashes, band b over the signature slice
+    cols[b*rows_per_band : (b+1)*rows_per_band]; posexploded, the
+    (band, bucket) rows. The one band hash of every LSH relation
+    (linking, dedup pairs, the persisted dedup index's `buckets`)."""
     def bhash(b: int, cs: list) -> F.Column:
         if hasher == "md5":
             return md5_long(F.lit(str(b)), *[c.cast("string") for c in cs])
         return F.xxhash64(F.lit(b), *cs)
 
-    return F.posexplode(F.array(*[
+    return F.array(*[
         bhash(b, cols[b * rows_per_band:(b + 1) * rows_per_band])
         for b in range(bands)
-    ])).alias("band", "bucket")
+    ])
 
 
 def _bucket_pairs(rows: DataFrame, max_bucket: int) -> DataFrame:
@@ -139,7 +139,8 @@ def lsh_candidate_pairs(df: DataFrame, bands: int = 4,
     rows_per_band = n // bands
     cols = [F.element_at("sig", i + 1) for i in range(n)]
     return _bucket_pairs(df.select(
-        _band_buckets(cols, bands, rows_per_band),
+        F.posexplode(_band_array(cols, bands, rows_per_band))
+        .alias("band", "bucket"),
         F.struct(F.col(key).alias("k"), F.col("shingles").alias("sh"))
         .alias("m"),
     ), max_bucket)

@@ -17,7 +17,7 @@ and one set of semantics. Streaming-specific pieces here:
     tags, next to Structured Streaming's own checkpointLocation — the
     streamed table gets the batch stages' warehouse contract,
   - stream-static near-dup matching against the persisted dedup index
-    (`dedup_against_index_stream`, plans/dedup_index's tables).
+    (`dedup_against_index_stream`, over plans/dedup_index.read).
 
 At cluster scale the file source lists new files per trigger; with
 maxFilesPerTrigger it back-pressures a 100TB backfill into bounded
@@ -278,9 +278,9 @@ def dedup_against_index_stream(
     the watermark horizon).
 
     `index` = minhash_bands(old corpus) and `old_shingles` =
-    token_shingles(old corpus), both STATIC tables read from the
-    warehouse (same num_hashes/bands/n/hasher — the index schema
-    contract). Each arriving doc is banded per row (no state), its band
+    token_shingles(old corpus), both STATIC projections of the one
+    persisted index table (plans/dedup_index.read; same num_hashes/
+    bands/n/hasher — the index schema contract). Each arriving doc is banded per row (no state), its band
     rows are broadcast into the stream-static joins with the index and
     the shingles table, and jaccard_verify scores the pair (ts_col
     passes through). A watermarked dedup then drops the per-band match
