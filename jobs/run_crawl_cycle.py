@@ -161,10 +161,11 @@ def run_cycle(spark, warehouse: str, budget: int,
         apportion_budget)
     from thesis_ner_co_tri_training_spark.plans.pipeline import (
         run_pipeline_incremental)
+    from thesis_ner_co_tri_training_spark.session import codegen_compiles
     from thesis_ner_co_tri_training_spark.sources import catalog
     from thesis_ner_co_tri_training_spark.sources.pages import gen_pages_df
 
-    t0 = time.time()
+    c0, t0 = codegen_compiles(spark), time.time()
     # the index params, read once: the gate and both repair loops
     kw = _index_kw(warehouse)
     recovered = recover(spark, warehouse, kw)
@@ -260,6 +261,7 @@ def run_cycle(spark, warehouse: str, budget: int,
             warehouse, "triples")["row_count"],
         "resumed": lineage["pages"].get("resumed", False),
         "seconds": round(time.time() - t0, 2),
+        "codegen_compiles": codegen_compiles(spark) - c0,
     }
 
 

@@ -51,7 +51,8 @@ def main() -> int:
               file=sys.stderr)
 
     from thesis_ner_co_tri_training_spark.plans.pipeline import run_pipeline
-    from thesis_ner_co_tri_training_spark.session import get_spark
+    from thesis_ner_co_tri_training_spark.session import (
+        codegen_compiles, get_spark)
     from thesis_ner_co_tri_training_spark.sources.pages import gen_pages_df
 
     spark = get_spark("kg_pipeline", cpus=args.cpus,
@@ -85,7 +86,7 @@ def main() -> int:
                     pages_frontier(args.warehouse))
         n = args.append_pages
         batch = gen_pages_df(spark, n, start=start)
-        t0 = time.time()
+        c0, t0 = codegen_compiles(spark), time.time()
         lineage = run_pipeline_incremental(
             spark, batch, args.warehouse,
             batch_tag=f"pages-{start}-{start + n}")
@@ -97,6 +98,7 @@ def main() -> int:
             "total_pages": lineage["pages"]["row_count"],
             "seconds": round(elapsed, 2),
             "batch_docs_per_sec": round(n / elapsed, 2),
+            "codegen_compiles": codegen_compiles(spark) - c0,
             "stages": {
                 k: {"rows": v.get("row_count"),
                     "added": v.get("added_rows"),
@@ -122,7 +124,7 @@ def main() -> int:
         pages = gen_pages_df(spark, args.pages)
         n_pages = args.pages
 
-    t0 = time.time()
+    c0, t0 = codegen_compiles(spark), time.time()
     # n_pages rides the stage params so a resume against a warehouse
     # built from a different input fails loudly instead of silently
     # returning the old corpus's tables
@@ -135,6 +137,7 @@ def main() -> int:
         "pages": n_pages,
         "seconds": round(elapsed, 2),
         "docs_per_sec": round(n_pages / elapsed, 2),
+        "codegen_compiles": codegen_compiles(spark) - c0,
         "stages": {
             k: {"rows": v.get("row_count"), "resumed": v.get("resumed", False)}
             for k, v in lineage.items()

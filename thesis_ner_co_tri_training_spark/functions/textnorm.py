@@ -3,8 +3,9 @@
 The engine's per-row invariant (BASELINE.json input_hint) is that extracted
 text is byte-identical per url to the reference extractor. We guarantee it
 *by construction*: the pure-Python functions below are the single source of
-truth, called both by the pure-Python oracle in tests and by the Arrow
-pandas UDFs used in the Spark plan. No second implementation exists.
+truth, called both by the pure-Python oracle in tests and by the Spark
+plan's one Python pass (operators.tagging._sentence_pass). No second
+implementation exists.
 
 Reference semantics:
   - strip + html.unescape of each raw line  (co_training.py:60-61, utils.py:145-146)
@@ -19,9 +20,7 @@ import html as _html
 import re
 from html.parser import HTMLParser
 
-import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 _PUNCT_RE = re.compile(r"[^\w\s]")
 # Block-level elements that imply a line break in extracted text.
@@ -241,20 +240,6 @@ def split_sentences(text: str) -> list[str]:
         if frag:
             out.append(frag)
     return out
-
-
-# ----------------------------------------------------------------------
-# Arrow-vectorized UDFs (the ONLY Python that runs inside the Spark plan)
-# ----------------------------------------------------------------------
-
-@F.pandas_udf(T.StringType())
-def extract_text_udf(html_col: pd.Series) -> pd.Series:
-    return html_col.map(extract_text)
-
-
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def split_sentences_udf(s: pd.Series) -> pd.Series:
-    return s.map(lambda x: split_sentences(x) if x is not None else [])
 
 
 def strip_punct_col(col):

@@ -356,7 +356,7 @@ def shortest_paths(edges: DataFrame, sources: DataFrame,
     # would surface in the output and poison every path through them —
     # against the "unreachable nodes are absent" contract. (Weights are
     # a BIGINT contract; fractional inputs are truncated by the cast.)
-    if e.filter(F.col("w").isNull() | (F.col("w") < 0)).limit(1).count() > 0:
+    if not e.filter(F.col("w").isNull() | (F.col("w") < 0)).isEmpty():
         raise ValueError("shortest_paths: negative or NULL edge weights")
     dist = (
         sources.select(F.col(sources.columns[0]).alias("node"))
@@ -639,7 +639,7 @@ def strongly_connected_components(edges: DataFrame, src: str = "subj_id",
 
     Scale: each inner step is ONE node-keyed join + min-aggregate (the
     pagerank shuffle shape); the sweep joins are keyed the same way and
-    the per-round driver action is a scalar changed/remaining count.
+    the per-round driver action is an emptiness probe (isEmpty).
     Inner iteration count tracks graph diameter, outer rounds the
     condensation-DAG peeling depth after trimming — both small on
     web-scale graphs relative to the per-round cost. localCheckpoint
@@ -662,7 +662,7 @@ def strongly_connected_components(edges: DataFrame, src: str = "subj_id",
     assigned = active_nodes.select(
         "node", F.col("node").alias("scc_id")).limit(0)
     for _ in range(max_rounds):
-        if active_nodes.limit(1).count() == 0:
+        if active_nodes.isEmpty():
             break
         # 0. trim: no-in-edge or no-out-edge nodes are singleton SCCs.
         # Deliberately UNCAPPED (unlike the color/sweep loops): every
@@ -679,7 +679,7 @@ def strongly_connected_components(edges: DataFrame, src: str = "subj_id",
                 .distinct()
                 .localCheckpoint(eager=True)
             )
-            if trivial.limit(1).count() == 0:
+            if trivial.isEmpty():
                 break
             assigned = assigned.unionByName(
                 trivial.select("node", F.col("node").alias("scc_id"))
@@ -694,7 +694,7 @@ def strongly_connected_components(edges: DataFrame, src: str = "subj_id",
                 .select("u", "v")
                 .localCheckpoint(eager=True)
             )
-        if active_nodes.limit(1).count() == 0:
+        if active_nodes.isEmpty():
             break
         # 1. forward-min coloring to fixpoint
         color = active_nodes.select("node", F.col("node").alias("color"))
@@ -710,14 +710,14 @@ def strongly_connected_components(edges: DataFrame, src: str = "subj_id",
             )
             if (i + 1) % checkpoint_every == 0:
                 new_color = new_color.localCheckpoint(eager=True)
-            changed = (
+            settled = (
                 new_color.join(color.withColumnRenamed("color", "__old"),
                                "node")
                 .filter(F.col("color") != F.col("__old"))
-                .limit(1).count()
+                .isEmpty()
             )
             color = new_color
-            if changed == 0:
+            if settled:
                 break
         else:
             raise RuntimeError(
@@ -765,7 +765,7 @@ def strongly_connected_components(edges: DataFrame, src: str = "subj_id",
         # the loop body breaks as soon as active_nodes empties, but a
         # peel that finishes in EXACTLY max_rounds rounds exhausts the
         # range first — only raise if nodes genuinely remain
-        if active_nodes.limit(1).count() > 0:
+        if not active_nodes.isEmpty():
             raise RuntimeError(
                 "strongly_connected_components: peeling did not finish "
                 f"within max_rounds={max_rounds} rounds")
@@ -823,7 +823,7 @@ def dag_longest_path_levels(edges: DataFrame, src: str = "src_scc",
     Exact fixpoint by max-relaxation: level <- max(level, in-neighbor
     level + 1) per round, converging in depth(DAG) rounds — the max-
     plus twin of shortest_paths' min-relaxation, same one keyed join +
-    one keyed aggregate per round, scalar changed-count per round,
+    one keyed aggregate per round, an emptiness probe per round,
     localCheckpoint cadence. A cycle would relax forever, so exceeding
     max_iter raises (cycle or depth > max_iter) instead of silently
     returning a non-fixpoint. DuckDB-oracled via recursive-CTE path
@@ -856,13 +856,13 @@ def dag_longest_path_levels(edges: DataFrame, src: str = "src_scc",
         )
         if (i + 1) % checkpoint_every == 0:
             new_lev = new_lev.localCheckpoint(eager=True)
-        changed = (
+        settled = (
             new_lev.join(lev.withColumnRenamed("level", "__old"), "node")
             .filter(F.col("level") != F.col("__old"))
-            .limit(1).count()
+            .isEmpty()
         )
         lev = new_lev
-        if changed == 0:
+        if settled:
             return lev
     raise RuntimeError(
         "dag_longest_path_levels: no fixpoint within "
@@ -896,7 +896,7 @@ def kcore(edges: DataFrame, src: str = "subj_id", dst: str = "obj_id",
     distinct values computes H = max(min(c, #neighbors with core >= c))
     (f(c) is a step function, so checking the distinct values is
     exhaustive). Two keyed shuffles per round, the star-CC shape;
-    convergence probe is a scalar count; localCheckpoint cadence cuts
+    convergence probe is isEmpty(); localCheckpoint cadence cuts
     iterative lineage. Rounds-to-fixpoint is bounded by the graph's
     degeneracy ordering depth — small on web graphs.
 
@@ -944,13 +944,13 @@ def kcore(edges: DataFrame, src: str = "subj_id", dst: str = "obj_id",
         )
         if checkpoint_every and i % checkpoint_every == 0:
             new = new.localCheckpoint(eager=True)
-        changed = (
+        settled = (
             new.join(cur.withColumnRenamed("core", "__old"), "node")
             .filter(F.col("core") != F.col("__old"))
-            .limit(1).count()
+            .isEmpty()
         )
         cur = new
-        if changed == 0:
+        if settled:
             return cur
     raise RuntimeError(
         f"kcore: no fixpoint within max_rounds={max_rounds}")

@@ -70,6 +70,23 @@ def get_spark(
         .config("spark.sql.warehouse.dir",
                 os.environ.get("SPARK_GRAFT_WAREHOUSE",
                                "/tmp/spark_sql_warehouse"))
+        # Generated-code cache sized to the engine's working set. Ops,
+        # append batches, crawl cycles and stream micro-batches rerun
+        # the same plans in one session, but Spark's LRU keeps only 100
+        # classes. Measured at 4 cores: one 500-page run_pipeline
+        # compiles 124 distinct classes and one pass over the six
+        # query_mix entries 161, so a warm rerun recompiled 117-120 and
+        # 156 of them (Janino, on the driver, on the critical path).
+        # One pass over all 82 queries() at sf0.01 compiles 1,501
+        # classes (2,490 with stage ids in class names), so 2048 holds
+        # every working set measured. The cache is built once per JVM,
+        # from the session that compiles the first class.
+        .config("spark.sql.codegen.cache.maxEntries", "2048")
+        # Identical whole-stage pipelines share one class whatever their
+        # stage id, e.g. the per-snapshot-dir scans that catalog.
+        # _read_paths unions, whose ids shift as batches add branches.
+        # explain() still prints the *(id) markers.
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
@@ -87,6 +104,16 @@ def get_spark(
     spark.sql("SELECT lower('İÄßΣ'), upper('ıäßς'), initcap('ärger')").collect()
     _warn_if_heap_undersized(spark, driver_mem)
     return spark
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes compiled so far in this JVM: the count of Spark's
+    CodegenMetrics compilation-time histogram, one sample per generated
+    class compiled (a code-cache miss). A counter read, so no job and no
+    scan; take the difference around a run. A warm rerun of plans the
+    session has already run reads 0."""
+    return (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+            .METRIC_COMPILATION_TIME().getCount())
 
 
 def _warn_if_heap_undersized(spark: SparkSession,

@@ -168,12 +168,14 @@ def gen_pages_df(spark: SparkSession, n_pages: int,
     if partitions is None:
         partitions = max(8, spark.sparkContext.defaultParallelism)
 
+    # `start` is added in Python: a range literal is generated code, and
+    # a new start per batch would compile a new class per batch
     def batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            yield _page_rows(pdf["id"].tolist())
+            yield _page_rows((pdf["id"] + start).tolist())
 
     return (
-        spark.range(start, start + n_pages, numPartitions=partitions)
+        spark.range(n_pages, numPartitions=partitions)
         .mapInPandas(batch, schema=PAGES_SCHEMA)
     )
 
