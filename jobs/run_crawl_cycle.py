@@ -103,19 +103,19 @@ def _domain(col):
 
 
 def _pages_batches(warehouse):
-    """ALL tagged pages batches, oldest first — BOTH families ('cycle-*'
-    from this job and 'pages-*' from run_pipeline --append-pages; the
-    two jobs may interleave on one warehouse, and a family-blind scan
-    here made the frontier reset to 0 and re-append already-ingested
-    pages). The pages `history`, expired snapshots included, so table
-    maintenance (compact + expire-keep on the pages table) never resets
-    the frontier high-water mark or the already-appended set back to
-    zero (ledger entries keep the full params, including frontier_end)."""
+    """ALL batch-tagged pages snapshots, oldest first, whatever job
+    appended them ('cycle-*' from this job, 'pages-*' from run_pipeline
+    --append-pages, 'stream-*' from run_stream --what kg): every one
+    came through run_pipeline_incremental, so the index repair covers
+    them all and the gate sees every ingested page. The pages
+    `history`, expired snapshots included, so table maintenance
+    (compact + expire-keep on the pages table) never resets the
+    already-appended set or the frontier high-water mark (ledger
+    entries keep the full params, including frontier_end)."""
     from thesis_ner_co_tri_training_spark.sources import catalog
 
     return [s for s in catalog.history(warehouse, "pages")
-            if str(s.get("params", {}).get("batch_tag", ""))
-            .startswith(("cycle-", "pages-"))]
+            if s.get("params", {}).get("batch_tag")]
 
 
 def recover(spark, warehouse: str, kw: dict) -> dict:
@@ -173,9 +173,8 @@ def run_cycle(spark, warehouse: str, budget: int,
     from thesis_ner_co_tri_training_spark.plans.pipeline import (
         pages_frontier)
 
-    # shared generation frontier across BOTH batch families (cycle-*
-    # frontier_end and pages-* tag ends): never regenerate ids that a
-    # previous cycle OR a run_pipeline --append-pages batch already drew
+    # shared generation frontier across every batch family (at least
+    # the pages row count): never regenerate ids an earlier batch drew
     frontier_start = pages_frontier(warehouse)
     tag = f"cycle-{frontier_start}"
 

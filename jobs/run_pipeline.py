@@ -77,13 +77,11 @@ def main() -> int:
         # never reached the final stage (resumed by tag, no page
         # regeneration)
         recovered = finish_last_batch(spark, args.warehouse)
-        prev = catalog.latest_snapshot(args.warehouse, "pages")
-        # start from the shared generation frontier, not row_count alone:
-        # crawl-cycle batches (run_crawl_cycle) advance the frontier past
-        # row_count when their dedup gate drops candidates, and starting
-        # below the frontier would regenerate ids a cycle already drew.
-        start = max(prev["row_count"] if prev else 0,
-                    pages_frontier(args.warehouse))
+        # the shared generation frontier (at least the pages row count):
+        # crawl cycles advance it past row_count when their dedup gate
+        # drops candidates, and starting below it would regenerate ids
+        # an earlier batch already drew
+        start = pages_frontier(args.warehouse)
         n = args.append_pages
         batch = gen_pages_df(spark, n, start=start)
         c0, t0 = codegen_compiles(spark), time.time()

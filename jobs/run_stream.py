@@ -3,24 +3,22 @@
     python jobs/package.py
     spark-submit --py-files dist/engine.zip jobs/run_stream.py \
         --input /tmp/kg_pages_in --warehouse /tmp/kg_stream \
-        [--what mentions|triples|sessions|neardups] [--pages 300] [--max-files 4]
+        [--what kg|sessions|neardups] [--pages 300] [--max-files 8]
 
-Watches `--input` for new parquet page files and appends the chosen
-stream exactly-once to the snapshot CATALOG table `WH/<what>` through
-streaming.ingest.start_catalog_sink (foreachBatch appends keyed by
-(stream identity, batch id) tags; Structured Streaming's own checkpoint
-in `WH/_checkpoints/<what>`). Streamed tables get the batch stages'
-warehouse contract: time travel, `read_incremental` for downstream
-consumers, per-batch lineage and `table_maint` compaction. With
---pages N the job first seeds the input dir with N synthetic pages
-(smoke mode). availableNow trigger: drain everything currently in the
-directory in bounded micro-batches, then exit — rerunning picks up only
-files added since (incremental crawl-feed semantics; the checkpoint
-carries the file ledger).
+Watches `--input` for new parquet page files and drains them exactly-once
+into the warehouse, in bounded micro-batches (availableNow), then exits;
+a rerun picks up only files added since (the checkpoint in
+`WH/_checkpoints/<what>` carries the file ledger). With --pages N the job
+first seeds the input dir with N synthetic pages (smoke mode).
 
-`--what neardups` matches every arriving page against the persisted
-dedup index in the same warehouse (plans/dedup_index, the index's one
-writer; see `neardups_stream`).
+`--what kg` (the default) runs each micro-batch through the stage runner
+as one `stream-<stream id>-batch-<batch id>` batch
+(streaming.ingest.start_kg_sink): pages land in `WH/pages` (event time
+in pages.warc_ts) and the six KG tables follow, as for run_pipeline.py
+--append-pages, which can continue the same warehouse. `--what
+sessions` and `--what neardups` (matches against the persisted dedup
+index, plans/dedup_index; see `neardups_stream`) append to the catalog
+table `WH/<what>` (streaming.ingest.start_catalog_sink).
 """
 
 from __future__ import annotations
@@ -72,22 +70,23 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True)
     ap.add_argument("--warehouse", required=True,
-                    help="the stream appends to the snapshot catalog "
-                         "table <what> in this warehouse")
-    ap.add_argument("--what",
-                    choices=["mentions", "triples", "sessions", "neardups"],
-                    default="mentions")
+                    help="the KG tables (--what kg) or the snapshot "
+                         "catalog table <what> in this warehouse")
+    ap.add_argument("--what", choices=["kg", "sessions", "neardups"],
+                    default="kg")
     ap.add_argument("--pages", type=int, default=0,
                     help="seed the input dir with N synthetic pages first")
     ap.add_argument("--max-files", type=int, default=8)
     ap.add_argument("--cpus", type=int, default=None)
     args = ap.parse_args()
 
+    from thesis_ner_co_tri_training_spark.plans.pipeline import (
+        _DAG_ORDER, finish_last_batch)
     from thesis_ner_co_tri_training_spark.session import get_spark
     from thesis_ner_co_tri_training_spark.sources import catalog
     from thesis_ner_co_tri_training_spark.streaming.ingest import (
-        mentions_stream, read_pages_stream, sessions_stream,
-        start_catalog_sink, triples_stream)
+        read_pages_stream, sessions_stream, start_catalog_sink,
+        start_kg_sink)
 
     spark = get_spark("kg_stream", cpus=args.cpus)
 
@@ -100,43 +99,35 @@ def main() -> int:
 
     pages = read_pages_stream(spark, args.input,
                               max_files_per_trigger=args.max_files)
-    # sessions: stateful session_window with watermark — append mode
-    # emits each watermark-closed session exactly once; still-open
-    # sessions ride the state store into the next run.
-    if args.what == "neardups":
-        stream = neardups_stream(spark, pages, args.warehouse,
-                                 max(args.pages, 100))
-    else:
-        stream = {
-            "mentions": mentions_stream,
-            "triples": triples_stream,
-            "sessions": sessions_stream,
-        }[args.what](pages)
-
+    checkpoint_dir = os.path.join(args.warehouse, "_checkpoints", args.what)
+    out = {"what": args.what}
     t0 = time.time()
-    q = start_catalog_sink(
-        stream, args.warehouse, args.what,
-        checkpoint_dir=os.path.join(args.warehouse, "_checkpoints",
-                                    args.what))
+    if args.what == "kg":
+        # crash recovery, as --append-pages and the crawl cycle do
+        out["recovered_batch"] = finish_last_batch(spark, args.warehouse)
+        q = start_kg_sink(pages, args.warehouse, checkpoint_dir)
+        tables = _DAG_ORDER
+    else:
+        # sessions: append mode emits each watermark-closed session
+        # once; open sessions ride the state store into the next run
+        stream = (neardups_stream(spark, pages, args.warehouse,
+                                  max(args.pages, 100))
+                  if args.what == "neardups" else sessions_stream(pages))
+        q = start_catalog_sink(stream, args.warehouse, args.what,
+                               checkpoint_dir)
+        tables = (args.what,)
     q.awaitTermination()
-    elapsed = time.time() - t0
-    snap = catalog.latest_snapshot(args.warehouse, args.what)
-    print(json.dumps({
-        "what": args.what,
-        "seconds": round(elapsed, 2),
-        "rows_in_sink": snap["row_count"] if snap else 0,
-        "snapshot_id": snap["snapshot_id"] if snap else None,
-        # Count batches over the table's history, expired snapshots
-        # included — after table_maint --expire-keep the snapshots
-        # alone under-count the exactly-once history.
-        "stream_batches": len({
-            s["params"]["batch_tag"]
-            for s in catalog.history(args.warehouse, args.what)
-            if s.get("params", {}).get("stream_batch_id") is not None
-        }),
-        "exactly_once": True,
-        "catalog_table": f"{args.warehouse}/{args.what}",
-    }))
+    out["seconds"] = round(time.time() - t0, 2)
+    # Count batches over the first table's history (pages for kg),
+    # expired snapshots included — after table_maint --expire-keep the
+    # snapshots alone under-count the exactly-once history.
+    out["stream_batches"] = len({
+        s["params"]["batch_tag"]
+        for s in catalog.history(args.warehouse, tables[0])
+        if s.get("params", {}).get("stream_batch_id") is not None})
+    out["rows"] = {t: (catalog.latest_snapshot(args.warehouse, t)
+                       or {"row_count": 0})["row_count"] for t in tables}
+    print(json.dumps(out))
     spark.stop()
     return 0
 

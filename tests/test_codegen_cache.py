@@ -46,3 +46,19 @@ def test_warm_append_batch_compiles_nothing(spark, tmp_path):
     # from the 4th batch on, every plan a batch runs has been seen; no
     # per-batch value (the page-id offset included) is in generated code
     assert counts[3:] == [0] * (N_BATCHES - 3), counts
+
+
+def test_new_apportion_total_compiles_nothing(spark):
+    # a crawl cycle apportions its budget over weights whose total grows
+    # every cycle; the total must not be a literal in generated code
+    from thesis_ner_co_tri_training_spark.operators.selection import (
+        apportion_budget)
+
+    def apportion(extra):
+        weights = spark.createDataFrame(
+            [(f"d{i}", i + 1 + (extra if i == 0 else 0)) for i in range(50)],
+            "key string, weight long")
+        return lambda: apportion_budget(weights, 200).collect()
+
+    _compiles(spark, apportion(0))
+    assert _compiles(spark, apportion(1)) == 0

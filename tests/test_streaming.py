@@ -1,4 +1,5 @@
-"""Structured-Streaming path: incremental pages -> mentions parity with
+"""Structured-Streaming path: the KG stream as stage-runner batches
+(parity with one full run), incremental pages -> mentions parity with
 batch, watermarked windowed rates, exactly-once catalog sink + restart,
 near-dup matching against the persisted dedup index."""
 
@@ -114,24 +115,6 @@ def test_stateful_domain_counts_accumulate(spark, pages_dir, tmp_path):
     assert any(r["n_batches"] > 1 for r in final.values())
     for r in final.values():
         assert r["first_seen"] <= r["last_seen"]
-
-
-def test_triples_stream_matches_batch(spark, pages_dir):
-    from thesis_ner_co_tri_training_spark.operators.tagging import tag_pages_df
-    from thesis_ner_co_tri_training_spark.operators.triples import extract_triples
-    from thesis_ner_co_tri_training_spark.streaming import triples_stream
-
-    q = (triples_stream(read_pages_stream(spark, pages_dir))
-         .writeStream.format("memory").queryName("t_stream")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = {tuple(r) for r in spark.sql(
-        "select subj, pred, obj, url, sent_id, confidence from t_stream").collect()}
-
-    pages = gen_pages_df(spark, N_PAGES, partitions=2)
-    voted = vote_mentions(tag_pages_df(pages.drop("text")))
-    want = {tuple(r) for r in extract_triples(voted).collect()}
-    assert got == want and want
 
 
 def test_dedup_pages_stream_drops_recrawls(spark, tmp_path):
@@ -295,7 +278,8 @@ def test_dedup_pages_stream_canonical_merges_variants(spark, tmp_path):
 def test_catalog_sink_exactly_once_incremental(spark, tmp_path):
     """Verdict r4 item 6: stream N files into a snapshot CATALOG table,
     'crash' (replayed micro-batch), resume with new files — each batch
-    lands exactly once and read_incremental sees exactly the new rows."""
+    lands exactly once and read_incremental sees exactly the new rows.
+    The table is not one the stage runner owns: the sink refuses those."""
     from thesis_ner_co_tri_training_spark.sources import catalog
     from thesis_ner_co_tri_training_spark.streaming.ingest import (
         append_batch_to_catalog, start_catalog_sink, stream_identity)
@@ -308,12 +292,12 @@ def test_catalog_sink_exactly_once_incremental(spark, tmp_path):
     def drain():
         q = start_catalog_sink(
             mentions_stream(read_pages_stream(spark, src)),
-            wh, "mentions", ckpt)
+            wh, "stream_mentions", ckpt)
         q.awaitTermination(120)
 
     drain()
     sid = stream_identity(ckpt)
-    s0 = catalog.latest_snapshot(wh, "mentions")
+    s0 = catalog.latest_snapshot(wh, "stream_mentions")
     n0 = s0["row_count"]
     assert n0 > 0 and s0["params"]["batch_tag"] == f"stream-{sid}-batch-0"
     assert s0["params"]["stream_id"] == sid
@@ -321,7 +305,7 @@ def test_catalog_sink_exactly_once_incremental(spark, tmp_path):
 
     # rerun with no new files: no new snapshot (checkpoint file ledger)
     drain()
-    assert catalog.latest_snapshot(wh, "mentions")["snapshot_id"] == \
+    assert catalog.latest_snapshot(wh, "stream_mentions")["snapshot_id"] == \
         s0["snapshot_id"]
 
     # crash replay: Structured Streaming re-invokes foreachBatch with the
@@ -330,10 +314,13 @@ def test_catalog_sink_exactly_once_incremental(spark, tmp_path):
     # eager cut: the end of this test re-appends batch0 AFTER expiry
     # has deleted snapshot 0's original files
     batch0 = catalog.read_table(
-        spark, wh, "mentions", snapshot_id=0).localCheckpoint(eager=True)
+        spark, wh, "stream_mentions", snapshot_id=0
+    ).localCheckpoint(eager=True)
     assert append_batch_to_catalog(
-        batch0, 0, wh, "mentions", stream_id=sid) is None
-    assert catalog.latest_snapshot(wh, "mentions")["row_count"] == n0
+        batch0, 0, wh, "stream_mentions", stream_id=sid) is None
+    with pytest.raises(ValueError, match="--what kg"):
+        append_batch_to_catalog(batch0, 1, wh, "mentions", stream_id=sid)
+    assert catalog.latest_snapshot(wh, "stream_mentions")["row_count"] == n0
 
     # new crawl files arrive; resume processes ONLY them
     extra = gen_pages_df(spark, 14, partitions=2).filter(
@@ -341,37 +328,96 @@ def test_catalog_sink_exactly_once_incremental(spark, tmp_path):
                             .select("url").collect()]))
     extra.write.mode("append").parquet(src)
     drain()
-    s1 = catalog.latest_snapshot(wh, "mentions")
+    s1 = catalog.latest_snapshot(wh, "stream_mentions")
     assert s1["params"]["stream_batch_id"] == 1
-    inc = catalog.read_incremental(spark, wh, "mentions", from_snapshot=0)
+    inc = catalog.read_incremental(spark, wh, "stream_mentions",
+                                   from_snapshot=0)
     assert inc.count() == s1["added_rows"] == s1["row_count"] - n0
     assert s1["added_rows"] > 0
     # exactly-once across everything: catalog table == batch replay
     want = _batch_mentions_df(spark, 14)
-    got = catalog.read_table(spark, wh, "mentions")
+    got = catalog.read_table(spark, wh, "stream_mentions")
     assert got.count() == want.count()
     assert got.select("url", "sent_id", "beg", "end").exceptAll(
         want.select("url", "sent_id", "beg", "end")).isEmpty()
     # the streamed table is a first-class warehouse table: compaction
     # + expiry keep rows and the batch ledger intact
-    catalog.compact_table(spark, wh, "mentions", target_files=1)
-    catalog.expire_snapshots(wh, "mentions", keep_last=1)
-    assert catalog.read_table(spark, wh, "mentions").count() == want.count()
-    assert catalog.batch_tags(wh, "mentions") == {
+    catalog.compact_table(spark, wh, "stream_mentions", target_files=1)
+    catalog.expire_snapshots(wh, "stream_mentions", keep_last=1)
+    assert catalog.read_table(spark, wh, "stream_mentions").count() == \
+        want.count()
+    assert catalog.batch_tags(wh, "stream_mentions") == {
         f"stream-{sid}-batch-0", f"stream-{sid}-batch-1"}
     # a DIFFERENT stream (reset checkpoint / second writer) reusing
     # batch_id 0 must NOT be mistaken for a replay and must append —
     # the pre-fix bare-id key silently dropped such batches
-    n_before = catalog.latest_snapshot(wh, "mentions")["row_count"]
+    n_before = catalog.latest_snapshot(wh, "stream_mentions")["row_count"]
     snap_other = append_batch_to_catalog(
-        batch0, 0, wh, "mentions", stream_id="feedB")
+        batch0, 0, wh, "stream_mentions", stream_id="feedB")
     assert snap_other is not None
     assert snap_other["params"]["batch_tag"] == "stream-feedB-batch-0"
-    assert catalog.latest_snapshot(wh, "mentions")["row_count"] == \
+    assert catalog.latest_snapshot(wh, "stream_mentions")["row_count"] == \
         n_before + n0
     # and its replay is again a no-op for that same identity
     assert append_batch_to_catalog(
-        batch0, 0, wh, "mentions", stream_id="feedB") is None
+        batch0, 0, wh, "stream_mentions", stream_id="feedB") is None
+
+
+def test_kg_stream_is_a_pipeline_batch(spark, tmp_path):
+    """A stream drained into the KG tables runs the stage runner once
+    per micro-batch: a replay of a batch and a drain with no new files
+    add nothing, the crawl jobs' frontier and index repair see the
+    streamed pages, and an --append-pages batch after it leaves the six
+    tables row-identical to one full run over the union of the pages."""
+    from collections import Counter
+
+    from jobs.run_crawl_cycle import _pages_batches
+    from thesis_ner_co_tri_training_spark.plans.pipeline import (
+        _DAG_ORDER, finish_last_batch, pages_frontier, run_pipeline,
+        run_pipeline_incremental)
+    from thesis_ner_co_tri_training_spark.sources import catalog
+    from thesis_ner_co_tri_training_spark.streaming.ingest import (
+        run_kg_batch, start_kg_sink, stream_identity)
+
+    src, wh, ckpt = (str(tmp_path / d) for d in ("in", "wh", "ckpt"))
+    gen_pages_df(spark, N_PAGES, partitions=4).write.parquet(src)
+
+    def drain():
+        assert finish_last_batch(spark, wh) is None
+        start_kg_sink(read_pages_stream(spark, src, max_files_per_trigger=2),
+                      wh, ckpt).awaitTermination(120)
+
+    def snapshots():
+        return {t: len(catalog.history(wh, t)) for t in _DAG_ORDER}
+
+    drain()
+    sid = stream_identity(ckpt)
+    batches = catalog.history(wh, "pages")
+    assert [s["params"]["batch_tag"] for s in batches] == [
+        f"stream-{sid}-batch-{b}" for b in range(len(batches))]
+    assert len(batches) >= 2
+    before = snapshots()
+    drain()
+    replay = run_kg_batch(
+        catalog.read_added(spark, wh, "pages", batches[0]), 0, wh,
+        stream_id=sid)
+    assert all(s.get("resumed") for s in replay.values()), replay
+    assert snapshots() == before
+
+    # the crawl jobs draw past the streamed pages and index them
+    start = pages_frontier(wh)
+    assert start >= catalog.latest_snapshot(wh, "pages")["row_count"] \
+        == N_PAGES
+    assert _pages_batches(wh) == batches
+    run_pipeline_incremental(spark, gen_pages_df(spark, 10, start=start),
+                             wh, batch_tag=f"pages-{start}-{start + 10}")
+
+    full = str(tmp_path / "full")
+    run_pipeline(spark, gen_pages_df(spark, start + 10, partitions=4), full)
+    for t in _DAG_ORDER[1:]:
+        got, want = (Counter(repr(tuple(r)) for r in catalog.read_table(
+            spark, w, t).collect()) for w in (wh, full))
+        assert got == want and want, t
 
 
 def _batch_mentions_df(spark, n):

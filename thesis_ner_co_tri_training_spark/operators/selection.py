@@ -599,10 +599,12 @@ def apportion_budget(df: DataFrame, budget: int, key_col: str = "key",
 
     Shape at scale: one checkpoint of (key, weight) whose job also
     observes the scalar total (guarded positive — NULL allocs on a zero
-    sum would be silent), one broadcast 1-row used-total, and ONE global
-    row_number over (remainder desc, key). The global sort is inherent
-    to the problem (leftover +1s are a corpus-global ranking); rows are
-    (key, two longs), so even 10^8 domains sort ~GBs in one task —
+    sum would be silent), then ONE exchange to a single partition whose
+    window sums give the weight total and the used-total and whose
+    row_number ranks (remainder desc, key). The total is a column, not
+    a literal, so a new total compiles no new class. The global sort is
+    inherent to the problem (leftover +1s are a corpus-global ranking);
+    rows are (key, two longs), so even 10^8 domains sort ~GBs in one task —
     acceptable for a scheduling step that runs once per crawl cycle.
     Weights must be non-negative with a positive sum; rows with weight
     0 get 0.
@@ -611,9 +613,9 @@ def apportion_budget(df: DataFrame, budget: int, key_col: str = "key",
 
     w = F.col(weight_col).cast("long")
     # ONE evaluation of the caller's (possibly expensive) upstream
-    # lineage: cut it to (key, long weight); both downstream references
-    # (used-total, ranking) read the cut, and the guard's sum/min are
-    # observed on the cut's own job (as in connected_components). A
+    # lineage: cut it to (key, long weight); the windows read the cut,
+    # and the guard's sum/min are observed on the cut's own job (as in
+    # connected_components). A
     # zero/all-null total would make __base/__rem NULL via DIV and
     # silently return alloc=NULL for every key.
     obs = Observation()
@@ -628,17 +630,16 @@ def apportion_budget(df: DataFrame, budget: int, key_col: str = "key",
             f"{tot_row['__tot']!r} (weights all zero/null?)")
     if tot_row["__min"] is not None and tot_row["__min"] < 0:
         raise ValueError("apportion_budget: weights must be non-negative")
-    tot = int(tot_row["__tot"])
-    base = wdf.select(
+    everything = W.partitionBy()
+    base = wdf.withColumn("__tot", F.sum("__w").over(everything)).select(
         key_col,
-        F.expr(f"CAST(({budget} * __w) DIV {tot} AS BIGINT)")
+        F.expr(f"CAST(({budget} * __w) DIV __tot AS BIGINT)")
         .alias("__base"),
-        F.expr(f"CAST(({budget} * __w) % {tot} AS BIGINT)")
+        F.expr(f"CAST(({budget} * __w) % __tot AS BIGINT)")
         .alias("__rem"),
     )
-    used = base.agg(F.sum("__base").alias("__used"))
     ranked = (
-        base.crossJoin(F.broadcast(used))
+        base.withColumn("__used", F.sum("__base").over(everything))
         .withColumn(
             "__rk",
             F.row_number().over(

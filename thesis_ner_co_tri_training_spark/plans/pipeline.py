@@ -28,10 +28,12 @@ entry points:
   resumes each stage whose table is complete (`_SUCCESS` + snapshot)
   and was built under the same params — kill the job at any stage and
   rerun to resume.
-- `run_pipeline_incremental`, one crawl batch: the batch lands in a
-  `pages` table, doc-local stages append its delta, global stages
-  recompute over the accumulated tables, and a stage resumes when its
-  history holds a live snapshot of this batch.
+- `run_pipeline_incremental`, one crawl batch (run_pipeline.py
+  --append-pages, a crawl cycle, or a micro-batch of run_stream.py
+  --what kg): the batch lands in a `pages` table, doc-local stages
+  append its delta, global stages recompute over the accumulated
+  tables, and a stage resumes when its history holds a live snapshot
+  of this batch.
 
 Overlap: after `voted`, the DAG has two pairs of independent stages —
 `triples` beside `mentions -> entities`, then `nodes` beside `edges`
@@ -431,21 +433,22 @@ def build_edges_df(triples: DataFrame, entities: DataFrame) -> DataFrame:
 
 def pages_frontier(warehouse: str) -> int:
     """Synthetic-corpus generation frontier of an incremental warehouse:
-    the first page id NOT yet drawn, across BOTH batch families that
-    append pages — run_pipeline --append-pages ('pages-<start>-<end>'
-    tags, end = row_count high-water mark) and run_crawl_cycle
-    ('cycle-*' tags whose params carry frontier_end, which can run
-    AHEAD of row_count because dedup-gated candidates consume frontier
-    ids without landing in the table). Scans the pages `history`,
-    expired snapshots included (maintenance must not reset the frontier).
-    Both jobs derive their next batch start from this single number; a
-    family-blind scan (the old per-job logic) regenerated ids the other
-    job had already drawn and silently double-appended those pages."""
+    the first page id NOT yet drawn by any batch that appends pages.
+    Its floor is the pages row count, so a batch never redraws ids 0..
+    over pages a stream or any other tag family appended. Above it,
+    run_pipeline --append-pages ('pages-<start>-<end>' tags) and
+    run_crawl_cycle (params carry frontier_end) can run AHEAD of the
+    row count: a batch can start past it, and dedup-gated candidates
+    consume frontier ids without landing in the table. Scans the pages
+    `history`, expired snapshots included (maintenance must not reset
+    the frontier). Every job that draws pages starts its next batch
+    here; a per-job scan regenerated ids another job had already drawn
+    and silently double-appended those pages."""
     end = 0
     for s in catalog.history(warehouse, "pages"):
         p = s.get("params", {})
-        if "frontier_end" in p:
-            end = max(end, int(p["frontier_end"]))
+        end = max(end, s.get("row_count") or 0,
+                  int(p.get("frontier_end", 0)))
         tag = str(p.get("batch_tag", ""))
         if tag.startswith("pages-"):
             try:

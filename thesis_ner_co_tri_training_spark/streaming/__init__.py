@@ -5,8 +5,9 @@ from .ingest import (  # noqa: F401
     mention_rates_stream,
     mentions_stream,
     read_pages_stream,
+    run_kg_batch,
     sessions_stream,
     start_catalog_sink,
-    triples_stream,
+    start_kg_sink,
 )
 from .stateful import domain_mention_state_stream  # noqa: F401

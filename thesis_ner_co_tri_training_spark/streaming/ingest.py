@@ -1,31 +1,30 @@
-"""Structured-Streaming ingestion: incremental pages -> mentions.
+"""Structured-Streaming ingestion: a crawl feed of pages into the warehouse.
 
-The reference is batch-only, but its pool-by-pool consumption of an
-unlabeled corpus (co_training.py:84-89 — "take the next chunk of u
-sentences, select, extend") is exactly a micro-batch pattern: each
-arriving batch of crawled pages flows through the SAME narrow operators
-as the batch DAG (extract_text -> sentences -> tri-view tagging ->
-agreement vote -> mentions), so batch and streaming share one code path
-and one set of semantics. Streaming-specific pieces here:
+The reference consumes its unlabeled pool one chunk at a time
+(co_training.py:84-89), so a stream micro-batch is one more crawl batch:
+`start_kg_sink` runs each through the one stage runner
+(plans/pipeline.run_pipeline_incremental), into the same pages and KG
+tables as --append-pages and the crawl cycle. Event time stays in
+pages.warc_ts. Streaming-specific pieces here:
 
   - file-source ingestion of new parquet page files (`readStream`), the
     Spark-idiomatic stand-in for a crawl feed / Iceberg incremental scan,
-  - event-time windowed mention-rate aggregation with a watermark on
-    `warc_ts` for late crawl records,
-  - one sink, `start_catalog_sink`: foreachBatch appends into a
-    snapshot catalog table, exactly-once by (stream identity, batch id)
-    tags, next to Structured Streaming's own checkpointLocation — the
-    streamed table gets the batch stages' warehouse contract,
+  - event-time operators with a watermark on `warc_ts` for late crawl
+    records (windowed mention rates over `mentions_stream`, sessions,
+    recrawl dedup),
+  - `start_catalog_sink` for the tables the stage runner does not own:
+    foreachBatch appends into a snapshot catalog table, exactly-once by
+    the same batch tags (`stream_batch_tag`),
   - stream-static near-dup matching against the persisted dedup index
     (`dedup_against_index_stream`, over plans/dedup_index.read).
 
-At cluster scale the file source lists new files per trigger; with
-maxFilesPerTrigger it back-pressures a 100TB backfill into bounded
-micro-batches while keeping every stage narrow (no shuffle before the
-windowed agg, which is partial-aggregated map-side).
+With maxFilesPerTrigger the file source back-pressures a backfill into
+bounded micro-batches.
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -53,7 +52,8 @@ def mentions_stream(
     tcfd_threshold: float = 0.7,
     scfd_threshold: float = 0.6,
 ) -> DataFrame:
-    """pages stream -> voted mentions stream (all-narrow; no state).
+    """pages stream -> voted mentions stream (all-narrow; no state): the
+    event-time source of the rate and state streams, never a table.
 
     Output: url, warc_ts, sent_id, beg, end, surface, tag, confidence.
     """
@@ -64,26 +64,6 @@ def mentions_stream(
         pages.drop("text"), cos_threshold, tcfd_threshold, scfd_threshold,
         passthrough=["warc_ts"])
     return mentions_table(voted)
-
-
-def triples_stream(
-    pages: DataFrame,
-    cos_threshold: float = 0.7,
-    tcfd_threshold: float = 0.7,
-    scfd_threshold: float = 0.6,
-) -> DataFrame:
-    """pages stream -> (subj, pred, obj, url, sent_id, confidence) stream.
-
-    Same narrow fused path as mentions_stream, ending in relation
-    extraction — incremental KG construction: each micro-batch of crawled
-    pages appends its triples exactly-once through the catalog sink.
-    """
-    from ..operators.triples import extract_triples
-
-    voted = tag_and_vote_pages_df(
-        pages.drop("text"), cos_threshold, tcfd_threshold, scfd_threshold,
-        passthrough=["warc_ts"])
-    return extract_triples(voted.drop("warc_ts"))
 
 
 def mention_rates_stream(
@@ -127,12 +107,19 @@ def stream_identity(checkpoint_dir: str) -> str:
             _os.path.abspath(checkpoint_dir).encode()).hexdigest()[:8]
 
 
+def stream_batch_tag(stream_id: str, batch_id: int) -> str:
+    """The exactly-once key of a micro-batch in both sinks. It names the
+    stream (Delta's (appId, version) convention): batch ids restart at 0
+    when a checkpoint is reset or a second stream writes the same
+    warehouse, and a bare-id key would drop those batches as replays."""
+    return f"stream-{stream_id}-batch-{batch_id}"
+
+
 def append_batch_to_catalog(
     batch_df: DataFrame,
     batch_id: int,
     warehouse: str,
     table: str,
-    partition_by: list[str] | None = None,
     *,
     stream_id: str,
 ) -> dict | None:
@@ -140,26 +127,29 @@ def append_batch_to_catalog(
     the foreachBatch body of `start_catalog_sink`, exposed for tests.
 
     Exactly-once: Structured Streaming replays the last uncommitted
-    batch_id after a crash, so the append is keyed by a
-    `stream-<stream_id>-batch-<id>` batch_tag — a tag already present
-    in the table's snapshots (or its expired-snapshot ledger) is a
-    no-op. The key includes the STREAM's identity (the checkpoint
-    metadata UUID, Delta's (appId, version) convention), not the bare
-    batch id: batch ids restart at 0 whenever a checkpoint is reset or
-    a second stream targets the same table, and a bare-id key would
-    silently discard those streams' first batches as replays. A crash
-    INSIDE write_table (data dir written, manifest not published) also
-    replays safely: readers only see manifested snap dirs, and the
-    replay claims a fresh dir; the orphan is GC'd by expire_snapshots.
-    Returns the snapshot record, or None when the batch was already
-    committed."""
+    batch_id after a crash, so the append is keyed by its
+    `stream_batch_tag` — a tag already present in the table's snapshots
+    (or its expired-snapshot ledger) is a no-op. A crash INSIDE
+    write_table (data dir written, manifest not published) also replays
+    safely: readers only see manifested snap dirs, and the replay claims
+    a fresh dir; the orphan is GC'd by expire_snapshots. Returns the
+    snapshot record, or None when the batch was already committed.
+
+    Raises ValueError for a table the stage runner owns: rows appended
+    beside it (mentions of pages not in `pages`) would silently enter
+    the next batch's global stages."""
+    from ..plans.pipeline import _DAG_ORDER
     from ..sources import catalog
 
-    tag = f"stream-{stream_id}-batch-{batch_id}"
+    if table in _DAG_ORDER:
+        raise ValueError(
+            f"table {table!r} belongs to the KG stage runner; stream pages "
+            "into it with start_kg_sink (jobs/run_stream.py --what kg)")
+    tag = stream_batch_tag(stream_id, batch_id)
     if tag in catalog.batch_tags(warehouse, table):
         return None
     return catalog.write_table(
-        batch_df, warehouse, table, partition_by=partition_by,
+        batch_df, warehouse, table,
         stage_params={"batch_tag": tag, "stream_batch_id": batch_id,
                       "stream_id": stream_id},
         mode=("append" if catalog.latest_snapshot(warehouse, table)
@@ -168,36 +158,54 @@ def append_batch_to_catalog(
     )
 
 
-def start_catalog_sink(
-    stream: DataFrame,
-    warehouse: str,
-    table: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-    partition_by: list[str] | None = None,
-):
-    """Exactly-once foreachBatch sink into a snapshot CATALOG table, so
-    streamed mentions/triples get everything the batch stages get: time
-    travel, `read_incremental` (downstream consumers read only the snap
-    dirs new batches added — the Iceberg streaming-append contract),
-    per-batch lineage/partition metrics, and compaction via table_maint.
-    It is the one streaming sink: stream output is a first-class
-    warehouse table, never a flat dir only the same stream can read."""
-    writer = (
+def run_kg_batch(batch_df: DataFrame, batch_id: int, warehouse: str, *,
+                 stream_id: str) -> dict:
+    """The foreachBatch body of `start_kg_sink`, exposed for tests: the
+    micro-batch is one run_pipeline_incremental batch. A replay finds
+    its tag in the pages history and resumes every stage."""
+    from ..plans.pipeline import run_pipeline_incremental
+
+    return run_pipeline_incremental(
+        batch_df.sparkSession, batch_df, warehouse,
+        batch_tag=stream_batch_tag(stream_id, batch_id),
+        pages_params={"stream_id": stream_id, "stream_batch_id": batch_id})
+
+
+def _start_sink(stream: DataFrame, checkpoint_dir: str, body):
+    return (
         stream.writeStream.foreachBatch(
-            # stream_identity is resolved lazily INSIDE the batch body:
-            # Spark writes <checkpoint>/metadata at query start, so by
-            # the first batch the stable UUID exists (the path-hash
-            # fallback only covers exotic external foreachBatch use).
-            lambda df, bid: append_batch_to_catalog(
-                df, bid, warehouse, table, partition_by,
-                stream_id=stream_identity(checkpoint_dir)))
+            # resolved per batch: Spark writes <checkpoint>/metadata
+            # (the stable UUID) at query start
+            lambda df, bid: body(df, bid,
+                                 stream_id=stream_identity(checkpoint_dir)))
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+
+
+def start_kg_sink(pages: DataFrame, warehouse: str, checkpoint_dir: str):
+    """availableNow drain of a pages stream into the KG tables, one
+    stage-runner batch per micro-batch (`run_kg_batch`). Run
+    plans.pipeline.finish_last_batch first, as the batch jobs do: an
+    unfinished earlier batch fails the first micro-batch ("batches must
+    be sequential")."""
+    return _start_sink(pages, checkpoint_dir,
+                       partial(run_kg_batch, warehouse=warehouse))
+
+
+def start_catalog_sink(stream: DataFrame, warehouse: str, table: str,
+                       checkpoint_dir: str):
+    """availableNow drain into a snapshot CATALOG table the stage runner
+    does not own (sessions, near-dups), so the streamed table gets the
+    batch stages' warehouse contract: time travel, `read_incremental`
+    (downstream consumers read only the snap dirs new batches added —
+    the Iceberg streaming-append contract), per-batch lineage/partition
+    metrics, and compaction via table_maint."""
+    return _start_sink(
+        stream, checkpoint_dir,
+        partial(append_batch_to_catalog, warehouse=warehouse, table=table))
 
 
 def sessions_stream(
