@@ -1090,8 +1090,8 @@ def q47_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the q22 triple graph's simple directed edges: 10 integer power
     iterations with dangling-mass redistribution, ranks as BIGINTs in
     1e-12 units — order-independent integer sums, so the full iterative
-    join/agg pipeline is DuckDB-oracled; the float `pagerank` engine
-    default is pinned close to this twin by test_graph."""
+    join/agg pipeline is DuckDB-oracled; test_graph pins rank / 1e12 to
+    a float power iteration."""
     from thesis_ner_co_tri_training_spark.plans.graph import pagerank_fixedpoint
 
     edges = q22_triples(spark, sf_dir).select("subj", "obj")

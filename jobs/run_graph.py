@@ -6,7 +6,8 @@ Usage (after jobs/run_pipeline.py has built <warehouse>/nodes + edges):
         --warehouse /tmp/kg_wh [--khop 2] [--pagerank-iters 10] [--cpus 8]
 
 Runs over the edges table: per-entity degree stats, PageRank (dangling-
-aware), a bounded k-hop neighborhood from the highest-out-degree entity
+aware; the integer-scaled pagerank_fixedpoint, written as a double
+rank = fixed / scale), a bounded k-hop neighborhood from the highest-out-degree entity
 (ties broken lexicographically, same scalar rule as q35), directed
 strongly connected components (mutual-reference clusters), and k-core
 decomposition (coreness — densely inter-linked entity tiers, the
@@ -47,7 +48,7 @@ def main() -> int:
     from pyspark.sql import functions as F
 
     from thesis_ner_co_tri_training_spark.plans.graph import (
-        degree_stats, k_hop, kcore, pagerank,
+        degree_stats, k_hop, kcore, pagerank_fixedpoint,
         strongly_connected_components)
     from thesis_ner_co_tri_training_spark.session import get_spark
     from thesis_ner_co_tri_training_spark.sources import catalog
@@ -62,11 +63,15 @@ def main() -> int:
     catalog.write_table(deg, args.warehouse, "graph_degrees",
                         stage_params={"source": "edges"})
 
-    # localCheckpoint: pagerank only cuts lineage every checkpoint_every
-    # rounds, so without a cut here the top-3 summary collect below would
-    # re-execute the un-checkpointed tail of the iterative DAG after
-    # write_table already computed it (same pattern as deg above).
-    pr = pagerank(e, iterations=args.pagerank_iters).localCheckpoint(eager=True)
+    # localCheckpoint: pagerank_fixedpoint only cuts lineage every
+    # checkpoint_every rounds, so without a cut here the top-3 summary
+    # collect below would re-execute the un-checkpointed tail of the
+    # iterative DAG after write_table already computed it (same pattern
+    # as deg above).
+    scale = 10**12
+    pr = pagerank_fixedpoint(e, iterations=args.pagerank_iters, scale=scale)
+    pr = pr.select("node", (F.col("rank") / scale).alias("rank")
+                   ).localCheckpoint(eager=True)
     catalog.write_table(pr, args.warehouse, "graph_pagerank",
                         stage_params={"iterations": args.pagerank_iters})
 

@@ -165,6 +165,18 @@ def test_write_table_rejects_unknown_mode(spark, tmp_path):
                             mode="error")
 
 
+def test_read_table_without_snapshot_raises(spark, tmp_path):
+    """A table with no snapshot is refused with a message naming the
+    warehouse and the table, also when parquet files sit in its data
+    dir (write_table never leaves that layout)."""
+    wh = str(tmp_path)
+    with pytest.raises(ValueError, match=f"{wh}: table t has no snapshot"):
+        catalog.read_table(spark, wh, "t")
+    _df(spark, 0, 3).write.parquet(os.path.join(wh, "u", "data"))
+    with pytest.raises(ValueError, match="table u has no snapshot"):
+        catalog.read_table(spark, wh, "u")
+
+
 def test_expire_preserves_batch_ledger(spark, tmp_path):
     """Expiring batch-tagged snapshots must not forget the batches: the
     exactly-once ledger of the incremental jobs moves to

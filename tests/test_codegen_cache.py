@@ -62,3 +62,20 @@ def test_new_apportion_total_compiles_nothing(spark):
 
     _compiles(spark, apportion(0))
     assert _compiles(spark, apportion(1)) == 0
+
+
+def test_warm_minhash_queries_compile_nothing(spark, tmp_path):
+    # q19 bands the aggregate signature, q67 the per-row one against an
+    # in-query index: neither the `sig` metadata nor the band helper may
+    # put a per-run value into generated code
+    import __spark_entry__ as entry
+
+    words = [f"w{i}" for i in range(40)]
+    docs = [(i, " ".join(words[i % 7:i % 7 + 20])) for i in range(30)]
+    spark.createDataFrame(docs, "doc_id long, text string").write.parquet(
+        str(tmp_path / "documents.parquet"))
+    for name in ("q19_minhash_pairs", "q67_dedup_incremental"):
+        q = entry.queries()[name]
+        run = lambda: q(spark, str(tmp_path)).collect()
+        _compiles(spark, run)
+        assert _compiles(spark, run) == 0, name

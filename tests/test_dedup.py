@@ -94,6 +94,33 @@ def test_minhash_lsh_finds_identical_and_near(spark, docs):
     assert verified <= {(a, b) for a in range(1, 6) for b in range(1, 6)}
 
 
+@pytest.mark.parametrize("bands", [0, 5, 64])
+@pytest.mark.parametrize("op", ["minhash_lsh_pairs", "near_dup_clusters",
+                                "minhash_bands", "minhash_docs",
+                                "dedup_against_index"])
+def test_minhash_ops_reject_nondividing_bands(spark, docs, op, bands):
+    """Every MinHash entry point bands through linking's one band
+    helper, so a band count that does not divide num_hashes fails at
+    the driver (no job) instead of dropping hash rows (bands=5) or
+    banding past the signature (bands=64 paired every doc)."""
+    from thesis_ner_co_tri_training_spark.operators import dedup
+
+    kw = dict(num_hashes=32, bands=bands)
+    calls = {
+        "minhash_lsh_pairs": lambda: dedup.minhash_lsh_pairs(docs, **kw),
+        "near_dup_clusters": lambda: dedup.near_dup_clusters(docs, **kw),
+        "minhash_bands": lambda: dedup.minhash_bands(docs, **kw),
+        "minhash_docs": lambda: dedup.minhash_docs(docs, **kw),
+        "dedup_against_index": lambda: dedup.dedup_against_index(
+            docs,
+            spark.createDataFrame([], "doc_id long, band int, bucket long"),
+            spark.createDataFrame([], "doc_id long, shingles array<string>"),
+            **kw),
+    }
+    with pytest.raises(ValueError, match="does not divide"):
+        calls[op]()
+
+
 def test_simhash_identity_and_hamming(spark, docs):
     sims = {r["doc_id"]: r["simhash"] for r in simhash(docs).collect()}
     assert sims[1] == sims[2]  # identical normalized token streams

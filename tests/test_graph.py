@@ -3,7 +3,7 @@
 import pytest
 
 from thesis_ner_co_tri_training_spark.plans.graph import (
-    degree_stats, k_hop, pagerank)
+    degree_stats, k_hop, pagerank_fixedpoint)
 
 EDGES = [
     ("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"),
@@ -44,12 +44,13 @@ def test_degree_stats(spark, edges_df):
 
 
 def test_pagerank_matches_power_iteration(spark, edges_df):
-    got = {r["node"]: r["rank"] for r in pagerank(edges_df, iterations=10).collect()}
+    got = {r["node"]: r["rank"] / 10**12
+           for r in pagerank_fixedpoint(edges_df, iterations=10).collect()}
     want = oracle_pagerank(EDGES, iters=10)
     assert set(got) == set(want)
     for v in want:
-        assert abs(got[v] - want[v]) < 1e-9, v
-    assert abs(sum(got.values()) - 1.0) < 1e-9
+        assert abs(got[v] - want[v]) < 1e-6, v
+    assert abs(sum(got.values()) - 1.0) < 1e-6
     # c is the hub
     assert max(got, key=got.get) == "c"
 
@@ -75,13 +76,11 @@ def oracle_pagerank_fixedpoint(edges, iters=10, scale=10**12):
 
 
 def test_pagerank_fixedpoint_oracle_and_close_to_float(spark, edges_df):
-    from thesis_ner_co_tri_training_spark.plans.graph import pagerank_fixedpoint
-
     got = {r["node"]: r["rank"]
            for r in pagerank_fixedpoint(edges_df, iterations=10).collect()}
     assert got == oracle_pagerank_fixedpoint(EDGES, iters=10)
-    # the integer twin vouches for the float default: ranks agree to well
-    # under the per-iteration floor-division loss (~iters * n / scale)
+    # ranks agree with the float recurrence to well under the
+    # per-iteration floor-division loss (~iters * n / scale)
     flt = oracle_pagerank(EDGES, iters=10)
     for v, r in got.items():
         assert abs(r / 10**12 - flt[v]) < 1e-9, v
@@ -433,31 +432,20 @@ def test_hits_fixedpoint_survives_high_degree_hub(spark):
     assert r == (big * 1000000) // (big + 7)
 
 
-def test_pagerank_float_collapses_duplicate_edges(spark):
-    """Float pagerank and pagerank_fixedpoint share the simple-digraph
-    contract: duplicate (src, dst) rows (one per supporting evidence in
-    a KG edges table) must not multigraph-weight the float form while
-    the fixedpoint twin collapses them."""
-    from thesis_ner_co_tri_training_spark.plans.graph import (
-        pagerank, pagerank_fixedpoint)
-
+def test_pagerank_collapses_duplicate_edges(spark):
+    """PageRank's contract is over the simple digraph: duplicate (src,
+    dst) rows (one per supporting evidence in a KG edges table) must not
+    multigraph-weight the ranks."""
     dup = spark.createDataFrame(
         [("a", "b")] * 5 + [("a", "c"), ("c", "b")],
         "s string, o string")
     simple = spark.createDataFrame(
         [("a", "b"), ("a", "c"), ("c", "b")], "s string, o string")
-    r_dup = {r.node: r.rank for r in
-             pagerank(dup, iterations=5, src="s", dst="o").collect()}
-    r_simple = {r.node: r.rank for r in
-                pagerank(simple, iterations=5, src="s", dst="o").collect()}
-    assert r_dup.keys() == r_simple.keys()
-    for k in r_dup:
-        assert abs(r_dup[k] - r_simple[k]) < 1e-12
-    fx = {r.node: r.rank / 10**12 for r in
-          pagerank_fixedpoint(dup, iterations=5, src="s",
-                              dst="o").collect()}
-    for k in fx:
-        assert abs(fx[k] - r_dup[k]) < 1e-6
+    ranks = [{r.node: r.rank for r in
+              pagerank_fixedpoint(df, iterations=5, src="s",
+                                  dst="o").collect()}
+             for df in (dup, simple)]
+    assert ranks[0] == ranks[1]
 
 
 def _tarjan_scc(edges):

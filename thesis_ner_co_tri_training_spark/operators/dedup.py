@@ -8,10 +8,17 @@ Five strategies, all DataFrame-first:
   ngram-jaccard  exact verify on candidate pairs
   embedding      cosine >= threshold on embedding pairs   (semantic dups)
 
-MinHash-LSH runs on operators.linking's band hash, bucket enumerator
-and jaccard_verify, at document granularity. Matching a batch against
-a persisted index (the old docs' bands + shingles) is one matcher,
-_index_matches, shared by dedup_against_index and the streaming twin.
+MinHash-LSH runs on operators.linking's one signature format (the
+`sig` column), band helper (_band_array), bucket enumerator and
+jaccard_verify, at document granularity. Signatures come from two
+builders of that one format: the in-set batch ops (minhash_lsh_pairs,
+near_dup_clusters, minhash_bands) use _doc_signature, a long-form
+aggregate of codegen'd mins (the fastest form with a shuffle to hand);
+the persisted index, the crawl gate and the stream cannot shuffle and
+use linking.minhash_signature per row over _with_shingles' shingle
+array. Matching a batch against a persisted index (the old docs'
+bands + shingles) is one matcher, _index_matches, shared by
+dedup_against_index and the streaming twin.
 
 At 100 TB: exact dedup is one shuffle on a 16-byte key; minhash banding
 keys the shuffle by (band, bucket) which is uniform by construction
@@ -24,8 +31,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .linking import (_band_array, _bucket_pairs, _shingle_hash,
-                      connected_components, jaccard_verify)
+from .linking import (_band_array, _shingle_hash, _sig_column,
+                      connected_components, jaccard_verify,
+                      lsh_candidate_pairs, minhash_signature)
 
 # lower + collapse whitespace runs + TRIM. The trim matters: without it
 # leading/trailing whitespace leaves empty-string tokens after split
@@ -77,8 +85,8 @@ def exact_duplicates(df: DataFrame, id_col: str = "doc_id",
 def _shingle_expr(n: int) -> str:
     """SQL expr building the word-n-gram shingle array from a token
     array named __t — the single shared tokenize-to-shingles recipe
-    (token_shingles_long's exploded form and _doc_hashes' per-row form
-    must hash identical strings)."""
+    (token_shingles_long's exploded form and _with_shingles' per-row
+    form must hash identical strings)."""
     return (
         f"transform(sequence(0, size(__t) - {n}), "
         f"i -> concat_ws(' ', slice(__t, i + 1, {n})))"
@@ -117,76 +125,56 @@ def token_shingles_long(df: DataFrame, id_col: str = "doc_id",
     return out.distinct() if distinct else out
 
 
+def _with_shingles(df: DataFrame, text_col: str, n: int) -> DataFrame:
+    """df plus `shingles`: the doc's distinct word n-gram shingles, per
+    row, empty for a doc shorter than n tokens or with NULL text. The
+    one shingle-array builder (token_shingles, the persisted index and
+    the batch side of every index match)."""
+    toks = df.select("*", F.split(NORM(F.col(text_col)), " ").alias("__t"))
+    return toks.withColumn(
+        "shingles",
+        F.when(F.size("__t") >= n, F.array_distinct(F.expr(_shingle_expr(n))))
+        .otherwise(F.array().cast("array<string>")),
+    ).drop("__t")
+
+
 def token_shingles(df: DataFrame, id_col: str = "doc_id",
                    text_col: str = "text", n: int = 3) -> DataFrame:
-    """Word n-gram shingle arrays per doc (distinct shingles).
-
-    Array form over token_shingles_long; docs shorter than n tokens keep
-    an empty array (not a dropped row)."""
-    arr = token_shingles_long(df, id_col, text_col, n).groupBy(id_col).agg(
-        F.collect_list("s").alias("shingles")
-    )
-    return (
-        df.select(id_col).join(arr, id_col, "left")
-        .withColumn(
-            "shingles",
-            F.coalesce(F.col("shingles"), F.array().cast("array<string>")),
-        )
-    )
+    """(id, shingles) per doc, no shuffle: word n-gram shingle arrays
+    (distinct shingles); docs shorter than n tokens keep an empty array
+    (not a dropped row)."""
+    return _with_shingles(df.select(id_col, text_col), text_col, n).select(
+        id_col, "shingles")
 
 
 def _doc_signature(df: DataFrame, id_col: str, text_col: str, n: int,
                    num_hashes: int, hasher: str) -> DataFrame:
-    """(id, shingles, h0 .. h{num_hashes-1}) per doc with >= n tokens:
-    num_hashes codegen'd mins over the long-form (doc, shingle) rows,
-    partially aggregated map-side, plus the doc's distinct shingles for
-    a verify (a caller that drops them prunes that aggregate away). The
-    shingle rows are not deduplicated first: min() doesn't need it."""
+    """(id, shingles, sig) per doc with >= n tokens, the in-set batch
+    builder: num_hashes codegen'd mins over the long-form (doc, shingle)
+    rows, partially aggregated map-side, plus the doc's distinct
+    shingles for a verify (a caller that drops them prunes that
+    aggregate away). The shingle rows are not deduplicated first: min()
+    doesn't need it. `sig` is minhash_signature's format, value for
+    value (pinned by test)."""
     ex = token_shingles_long(df, id_col, text_col, n, distinct=False)
     return ex.groupBy(id_col).agg(
         F.array_distinct(F.collect_list("s")).alias("shingles"),
-        *[F.min(_shingle_hash(F.col("s"), i, hasher)).alias(f"h{i}")
-          for i in range(num_hashes)],
+        _sig_column([F.min(_shingle_hash(F.col("s"), i, hasher))
+                     for i in range(num_hashes)], hasher),
     )
 
 
-def _doc_hashes(df: DataFrame, id_col: str, text_col: str, n: int,
-                num_hashes: int, hasher: str, keep: tuple = ()) -> DataFrame:
-    """_doc_signature per row, with ZERO shuffle (so it runs unchanged
-    on a stream): h_i = array_min(transform(shingles, s -> hash(s, i)))
-    is the same min of the same hashed multiset, so its bands are
-    minhash_bands' rows (pinned by test). num_hashes array traversals
-    per row instead of a shuffle: right for a batch or micro-batch; a
-    query reading its index twice in one plan keeps minhash_bands."""
-    toks = df.select(
-        id_col, *keep, F.split(NORM(F.col(text_col)), " ").alias("__t")
-    )
-    sh = toks.select(
-        id_col, *keep,
-        F.when(F.size("__t") >= n, F.expr(_shingle_expr(n)))
-        .otherwise(F.array().cast("array<string>")).alias("__sh"),
-    )
-    # NB: the transform lambda must be single-argument — a two-arg
-    # lambda would make Spark bind the second parameter to the array
-    # INDEX, silently replacing the seed.
-    def _minhash(i: int) -> F.Column:
-        return F.array_min(F.transform("__sh",
-                                       lambda s: _shingle_hash(s, i, hasher)))
-
-    return sh.filter(F.size("__sh") > 0).select(
-        id_col, *keep, F.array_distinct("__sh").alias("shingles"),
-        *[_minhash(i).alias(f"h{i}") for i in range(num_hashes)],
-    )
-
-
-def _doc_band_array(num_hashes: int, bands: int, hasher: str) -> F.Column:
-    return _band_array([F.col(f"h{i}") for i in range(num_hashes)],
-                       bands, num_hashes // bands, hasher)
-
-
-def _doc_bands(num_hashes: int, bands: int, hasher: str) -> F.Column:
-    return F.posexplode(_doc_band_array(num_hashes, bands, hasher)).alias(
-        "band", "bucket")
+def _doc_hashes(df: DataFrame, text_col: str, n: int, num_hashes: int,
+                hasher: str) -> DataFrame:
+    """df's docs with >= n tokens plus (shingles, sig), with ZERO
+    shuffle (so it runs unchanged on a stream): _with_shingles, then
+    the per-row minhash_signature. Its bands are minhash_bands' rows
+    (pinned by test). num_hashes array traversals per row instead of a
+    shuffle: right for a batch or micro-batch; a query reading its
+    index twice in one plan keeps minhash_bands."""
+    return minhash_signature(
+        _with_shingles(df, text_col, n).filter(F.size("shingles") > 0),
+        num_hashes, hasher=hasher)
 
 
 def minhash_docs(df: DataFrame, id_col: str = "doc_id",
@@ -200,10 +188,9 @@ def minhash_docs(df: DataFrame, id_col: str = "doc_id",
     the same plan, InferFiltersFromGenerate pushes size(buckets) > 0
     below the projections, inlining the tokenizer and every minhash
     transform into a Filter; _index_matches explodes the expression."""
-    return _doc_hashes(df, id_col, text_col, n, num_hashes, hasher,
-                       keep=(text_col,)).select(
-        id_col, text_col, "shingles",
-        _doc_band_array(num_hashes, bands, hasher).alias("buckets"))
+    d = _doc_hashes(df, text_col, n, num_hashes, hasher)
+    return d.select(id_col, text_col, "shingles",
+                    _band_array(d, bands).alias("buckets"))
 
 
 def minhash_bands(df: DataFrame, id_col: str = "doc_id",
@@ -222,10 +209,13 @@ def minhash_bands(df: DataFrame, id_col: str = "doc_id",
     # Materialize the signature table (num_hashes longs per doc, never
     # the shingles): filter_index_buckets reads an in-query index twice
     # (bucket sizes + the join back), and without a cut Spark would
-    # re-run the whole shingle pipeline per read.
-    sig = (_doc_signature(df, id_col, text_col, n, num_hashes, hasher)
-           .drop("shingles").localCheckpoint(eager=True))
-    return sig.select(F.col(id_col), _doc_bands(num_hashes, bands, hasher))
+    # re-run the whole shingle pipeline per read. The band expression is
+    # built first, so a bad band count fails before the checkpoint job.
+    sig = _doc_signature(df, id_col, text_col, n, num_hashes,
+                         hasher).drop("shingles")
+    buckets = _band_array(sig, bands)
+    return sig.localCheckpoint(eager=True).select(
+        F.col(id_col), F.posexplode(buckets).alias("band", "bucket"))
 
 
 def _lsh_candidates(df: DataFrame, id_col: str = "doc_id",
@@ -233,17 +223,15 @@ def _lsh_candidates(df: DataFrame, id_col: str = "doc_id",
                     num_hashes: int = 32, bands: int = 8,
                     max_bucket: int = 64, hasher: str = "xxhash64",
                     carry_shingles: bool = True) -> DataFrame:
-    """Distinct (a, b, sh_a, sh_b) doc candidates, a < b: signature ->
-    band hash -> bucket enumerator. carry_shingles=False carries NULL
-    arrays, pruning collect_list out of the signature aggregate, which
-    keeps its mins in a codegen'd HashAggregate."""
+    """Distinct (a, b, sh_a, sh_b) doc candidates, a < b: the aggregate
+    signature handed to linking.lsh_candidate_pairs. carry_shingles=
+    False carries NULL arrays, pruning collect_list out of the signature
+    aggregate, which keeps its mins in a codegen'd HashAggregate."""
     sig = _doc_signature(df, id_col, text_col, n, num_hashes, hasher)
-    sh = (F.col("shingles") if carry_shingles
-          else F.lit(None).cast("array<string>"))
-    return _bucket_pairs(sig.select(
-        _doc_bands(num_hashes, bands, hasher),
-        F.struct(F.col(id_col).alias("k"), sh.alias("sh")).alias("m"),
-    ), max_bucket)
+    if not carry_shingles:
+        sig = sig.withColumn("shingles", F.lit(None).cast("array<string>"))
+    return lsh_candidate_pairs(sig, bands=bands, key=id_col,
+                               max_bucket=max_bucket)
 
 
 def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
@@ -255,6 +243,7 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
     banding: one collect_list per (band, bucket), pairs enumerated in it.
 
     rows_per_band = num_hashes // bands; collision prob ~ 1-(1-s^r)^b.
+    A band count that does not divide num_hashes raises ValueError.
 
     hasher="xxhash64" (default): the fast JVM hash — value-checked
     locally by the pure-Python XXH64 oracle (tests/xxh64.py).
@@ -843,11 +832,11 @@ def _index_matches(new_docs: DataFrame, idx: DataFrame,
     jaccard_verify. The new side is broadcast both times, so the
     persisted index is not shuffled. Output: (a, b, jaccard, *keep),
     one row per colliding band."""
-    new_b = _doc_hashes(
-        new_docs, id_col, text_col, n, num_hashes, hasher, keep,
-    ).select(F.col(id_col).alias("a"), *keep,
-             F.col("shingles").alias("sh_a"),
-             _doc_bands(num_hashes, bands, hasher))
+    d = _doc_hashes(new_docs, text_col, n, num_hashes, hasher)
+    new_b = d.select(F.col(id_col).alias("a"), *keep,
+                     F.col("shingles").alias("sh_a"),
+                     F.posexplode(_band_array(d, bands)).alias(
+                         "band", "bucket"))
     cand = F.broadcast(new_b).join(
         idx.select(F.col(id_col).alias("b"), "band", "bucket"),
         ["band", "bucket"],

@@ -7,13 +7,18 @@ north star names explicitly:
 
   1. MinHash-LSH blocking on character-3-gram shingles of the normalized
      surface. One keyed aggregate gives each distinct surface its
-     mention count and shingles; the signature is one higher-order SQL
-     expression (xxhash64 with per-hash seeds).
+     mention count and shingles; minhash_signature, the engine's one
+     per-row builder, gives it a `sig` column (array_min of the
+     seeded shingle hashes, one per hash; `num_hashes` and `hasher` in
+     the column metadata), and _band_array, the one band helper, reads
+     that metadata to band it.
      Each (band, bucket) is grouped ONCE into a list of its members'
      (key, shingles), and candidate pairs are enumerated inside the
      bucket, carrying both shingle arrays — no bucket-size join and no
      self-join. All hashing is JVM-side; candidate generation touches
-     only DISTINCT surfaces, not mention rows.
+     only DISTINCT surfaces, not mention rows. operators.dedup runs the
+     same signature format, band helper, bucket enumerator and verify
+     at document granularity.
   2. Verify: exact n-gram Jaccard similarity on the candidate pairs,
      scored in place from the carried shingles (jaccard_verify, the
      reference's cosine-check role).
@@ -50,25 +55,6 @@ def surface_shingles(df: DataFrame, col: str = "surface", n: int = 3) -> DataFra
             .withColumn("shingles", grams))
 
 
-def minhash_signature(df: DataFrame, num_hashes: int = 16,
-                      shingles_col: str = "shingles") -> DataFrame:
-    """Per-surface minhash signature: min over xxhash64(shingle, seed_i).
-
-    JVM-side only: one SQL expression folds the shingles once per hash
-    seed. The `sig` column's metadata records `num_hashes`, so banding
-    can check its length at the driver without running a job.
-    """
-    if num_hashes < 1:
-        raise ValueError(f"minhash_signature: num_hashes={num_hashes} < 1")
-    sig = F.expr(
-        f"transform(sequence(0, {num_hashes - 1}), i -> aggregate("
-        f"{shingles_col}, 9223372036854775807L, "
-        f"(acc, s) -> least(acc, xxhash64(s, i))))"
-    )
-    return df.select(
-        "*", sig.alias("sig", metadata={"num_hashes": num_hashes}))
-
-
 def _shingle_hash(c, i: int, hasher: str) -> F.Column:
     """Shingle c hashed under seed i. With _band_array's band hash, the
     cross-engine oracle byte recipe (hashutil docstring)."""
@@ -77,21 +63,64 @@ def _shingle_hash(c, i: int, hasher: str) -> F.Column:
     return F.xxhash64(c, F.lit(i))
 
 
-def _band_array(cols: list, bands: int, rows_per_band: int,
-                hasher: str = "xxhash64") -> F.Column:
-    """array<bigint> of `bands` hashes, band b over the signature slice
-    cols[b*rows_per_band : (b+1)*rows_per_band]; posexploded, the
+def _sig_column(mins: list, hasher: str) -> F.Column:
+    """The one signature format: `sig` = array<bigint> of the per-seed
+    shingle-hash minima, its metadata recording `num_hashes` and
+    `hasher` for _band_array. Built per row by minhash_signature and
+    as aggregate minima by dedup's in-set batch builder."""
+    if not mins:
+        raise ValueError("minhash signature: num_hashes < 1")
+    return F.array(*mins).alias(
+        "sig", metadata={"num_hashes": len(mins), "hasher": hasher})
+
+
+def minhash_signature(df: DataFrame, num_hashes: int = 16,
+                      shingles_col: str = "shingles",
+                      hasher: str = "xxhash64") -> DataFrame:
+    """The one per-row minhash builder: sig[i] = the min over the
+    shingles of _shingle_hash(s, i). No shuffle, so it runs unchanged
+    on a stream. An empty shingle array gives NULL minima: callers
+    filter such rows out first."""
+    # NB: the transform lambda must be single-argument — a two-arg
+    # lambda would make Spark bind the second parameter to the array
+    # INDEX, silently replacing the seed.
+    def minhash(i: int) -> F.Column:
+        return F.array_min(F.transform(
+            shingles_col, lambda s: _shingle_hash(s, i, hasher)))
+
+    return df.select("*", _sig_column(
+        [minhash(i) for i in range(num_hashes)], hasher))
+
+
+def _band_array(df: DataFrame, bands: int) -> F.Column:
+    """array<bigint> of `bands` hashes over df's `sig`, band b over the
+    slice sig[b*r : (b+1)*r], r = num_hashes // bands; posexploded, the
     (band, bucket) rows. The one band hash of every LSH relation
-    (linking, dedup pairs, the persisted dedup index's `buckets`)."""
-    def bhash(b: int, cs: list) -> F.Column:
+    (linking, dedup pairs, the persisted dedup index's `buckets`).
+    num_hashes and the hasher come from the `sig` metadata; a band
+    count that does not divide num_hashes fails here, at the driver
+    and before any job, instead of leaving hash rows unused or
+    indexing past the signature mid-stage."""
+    meta = df.schema["sig"].metadata
+    if "num_hashes" not in meta or "hasher" not in meta:
+        raise ValueError(
+            "the sig column carries no num_hashes/hasher metadata; "
+            "build it with minhash_signature")
+    n, hasher = meta["num_hashes"], meta["hasher"]
+    if bands < 1 or n % bands:
+        raise ValueError(
+            f"bands={bands} does not divide the signature length {n} "
+            "(num_hashes at signature build)")
+    rows = n // bands
+    sig = F.col("sig")
+
+    def bhash(b: int) -> F.Column:
+        cs = [sig[i] for i in range(b * rows, (b + 1) * rows)]
         if hasher == "md5":
             return md5_long(F.lit(str(b)), *[c.cast("string") for c in cs])
         return F.xxhash64(F.lit(b), *cs)
 
-    return F.array(*[
-        bhash(b, cols[b * rows_per_band:(b + 1) * rows_per_band])
-        for b in range(bands)
-    ])
+    return F.array(*[bhash(b) for b in range(bands)])
 
 
 def _bucket_pairs(rows: DataFrame, max_bucket: int) -> DataFrame:
@@ -117,30 +146,14 @@ def lsh_candidate_pairs(df: DataFrame, bands: int = 4,
                         key: str = "surface", max_bucket: int = 256) -> DataFrame:
     """Band the signature and pair the members of each band bucket.
 
-    Input: (key, shingles, sig) rows, `sig` built by minhash_signature.
-    Each band takes num_hashes // bands signature rows, num_hashes read
-    from the `sig` metadata, as dedup derives it. Output: distinct
+    Input: (key, shingles, sig) rows, `sig` in the one signature format
+    (minhash_signature, or dedup's aggregate builder). Output: distinct
     (a, b, sh_a, sh_b) candidate pairs with a < b and both shingle
     arrays, ready for jaccard_verify. Buckets with more than max_bucket
     members are dropped (_bucket_pairs' skew guard).
     """
-    # Fail fast at the driver, no job: a band count that does not split
-    # the signature evenly would leave hash rows unused or index past
-    # the signature (INVALID_ARRAY_INDEX mid-stage under ANSI).
-    n = df.schema["sig"].metadata.get("num_hashes")
-    if n is None:
-        raise ValueError(
-            "lsh_candidate_pairs: the sig column carries no num_hashes "
-            "metadata; build it with minhash_signature")
-    if bands < 1 or n % bands:
-        raise ValueError(
-            f"lsh_candidate_pairs: bands={bands} does not divide the "
-            f"signature length {n} (num_hashes at signature build)")
-    rows_per_band = n // bands
-    cols = [F.element_at("sig", i + 1) for i in range(n)]
     return _bucket_pairs(df.select(
-        F.posexplode(_band_array(cols, bands, rows_per_band))
-        .alias("band", "bucket"),
+        F.posexplode(_band_array(df, bands)).alias("band", "bucket"),
         F.struct(F.col(key).alias("k"), F.col("shingles").alias("sh"))
         .alias("m"),
     ), max_bucket)

@@ -2,7 +2,8 @@
 
 The north star ends at partitioned node/edge tables; these operators make
 the graph queryable: degree statistics (one aggregation) and PageRank
-(the second hand-rolled iterative driver beside linking's
+(`pagerank_fixedpoint`, integer-scaled so its ranks are exact in any
+engine; the second hand-rolled iterative driver beside linking's
 connected-components — same alternating join + checkpoint pattern
 GraphFrames uses, SURVEY §4).
 
@@ -46,81 +47,28 @@ def degree_stats(edges: DataFrame, src: str = "subj_id",
     )
 
 
-def pagerank(edges: DataFrame, iterations: int = 10, damping: float = 0.85,
-             src: str = "subj_id", dst: str = "obj_id",
-             checkpoint_every: int = 5) -> DataFrame:
-    """Power-iteration PageRank on a (src, dst) edge DataFrame.
-
-    Semantics (classic random surfer with dangling-node handling):
-    every node starts at 1/N; each iteration a node's rank is
-    (1 - d)/N + d * (sum of in-neighbor contributions + dangling_mass/N).
-    Output: node, rank (sums to 1 up to float error).
-
-    Duplicate (src, dst) edges are collapsed: the contract is over the
-    simple directed graph, SAME as pagerank_fixedpoint — that shared
-    contract is what lets the fixedpoint twin vouch for this float form
-    on identical input. A KG edges table with one row per supporting
-    (url, sent_id) evidence should pre-weight explicitly if evidence
-    multiplicity is meant to matter; silent multigraph weighting is not
-    this operator's job.
-    """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).filter(
-        F.col("src").isNotNull() & F.col("dst").isNotNull()
-    ).distinct()
-    nodes = e.select(F.col("src").alias("node")).union(
-        e.select(F.col("dst").alias("node"))
-    ).distinct().localCheckpoint(eager=True)
-    n = nodes.count()
-    if n == 0:
-        return nodes.withColumn("rank", F.lit(0.0))
-
-    out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-    for i in range(iterations):
-        contrib = (
-            e.join(ranks.withColumnRenamed("node", "src"), "src")
-            .join(out_deg, "src")
-            .select("dst", (F.col("rank") / F.col("out_deg")).alias("c"))
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("c").alias("in_sum"))
-        )
-        dangling = (
-            ranks.join(out_deg.withColumnRenamed("src", "node"), "node", "left_anti")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)))
-            .collect()[0][0]
-        )
-        base = (1.0 - damping) / n + damping * dangling / n
-        ranks = (
-            nodes.join(contrib, "node", "left")
-            .select(
-                "node",
-                (F.lit(base)
-                 + F.lit(damping) * F.coalesce(F.col("in_sum"), F.lit(0.0))
-                 ).alias("rank"),
-            )
-        )
-        if (i + 1) % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint(eager=True)
-    return ranks
-
-
 def pagerank_fixedpoint(edges: DataFrame, iterations: int = 10,
                         src: str = "subj_id", dst: str = "obj_id",
                         scale: int = 10**12,
                         checkpoint_every: int = 5,
                         sources: DataFrame | None = None) -> DataFrame:
-    """Deterministic integer-scaled PageRank twin of `pagerank` above.
+    """Power-iteration PageRank with dangling-node handling, the
+    engine's one PageRank: every node starts at 1/N; each iteration a
+    node's rank is (1 - d)/N + d * (sum of in-neighbor contributions +
+    dangling_mass/N).
 
     Ranks are BIGINTs in units of 1/scale; d = 0.85 is the exact rational
     85/100 and every per-edge contribution is an integer division
     (rank DIV out_deg), so all sums are order-independent integer sums —
-    byte-reproducible in ANY engine (the DuckDB-oracled contract variant,
-    q47; float `pagerank` stays the engine default, and the unit test
-    pins |fixedpoint/scale - float| small on the same graph so this twin
-    vouches for it). Same join/shuffle shape per iteration: one keyed
-    contribution join + aggregate, one dangling-mass aggregate (a single
-    scalar to the driver), one rank rebuild. Duplicate (src, dst) edges
-    are collapsed — the contract is over the simple directed graph.
+    byte-reproducible in ANY engine (DuckDB-oracled, q47). rank / scale
+    is the float rank to within the per-iteration floor-division loss
+    (~iterations * N / scale; the unit test pins it to a float power
+    iteration). Per iteration: one keyed contribution join + aggregate,
+    one dangling-mass aggregate (a single scalar to the driver), one
+    rank rebuild. Duplicate (src, dst) edges are collapsed — the
+    contract is over the simple directed graph; a KG edges table with
+    one row per supporting evidence should pre-weight explicitly if
+    evidence multiplicity is meant to matter.
 
     `sources` switches to PERSONALIZED PageRank: the teleport (base)
     term and the dangling mass go uniformly to the source set only,
@@ -215,7 +163,7 @@ def k_hop(edges: DataFrame, sources: DataFrame, k: int = 2,
     Scale: every join/agg is keyed by node id (uniform for entity
     graphs after canonicalization; salt upstream for power-law hubs);
     per-round localCheckpoint cuts the iterative lineage exactly like
-    pagerank/connected_components above.
+    pagerank_fixedpoint above and linking.connected_components.
     """
     e = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
@@ -340,7 +288,7 @@ def shortest_paths(edges: DataFrame, sources: DataFrame,
 
     Scale: per round ONE node-keyed relax join + min-aggregate and one
     min-union with the previous front — same keyed shuffle shape as
-    pagerank; localCheckpoint cadence cuts the iterative lineage.
+    pagerank_fixedpoint; localCheckpoint cadence cuts the iterative lineage.
     Negative weights are rejected (guarantees monotone convergence and
     the <=k-edges semantics both).
     """
@@ -517,7 +465,7 @@ def hits_fixedpoint(edges: DataFrame, iterations: int = 8,
     1-row normalization aggregates joined back by broadcast — no driver
     collect in the loop. Duplicate edges collapse (simple digraph).
 
-    checkpoint_every defaults to 1 (tighter than pagerank's 5): each
+    checkpoint_every defaults to 1 (tighter than pagerank_fixedpoint's 5): each
     score relation is referenced TWICE downstream (its normalization
     total and the next half-step's join), so uncut lineage re-expands
     ~2x per half-step — 8 uncut rounds audit at 135 shuffles vs ~4
@@ -638,7 +586,7 @@ def strongly_connected_components(edges: DataFrame, src: str = "subj_id",
     early.
 
     Scale: each inner step is ONE node-keyed join + min-aggregate (the
-    pagerank shuffle shape); the sweep joins are keyed the same way and
+    pagerank_fixedpoint shuffle shape); the sweep joins are keyed the same way and
     the per-round driver action is an emptiness probe (isEmpty).
     Inner iteration count tracks graph diameter, outer rounds the
     condensation-DAG peeling depth after trimming — both small on

@@ -279,10 +279,7 @@ def write_table(
 def _resolve_paths(warehouse: str, table: str,
                    snap: dict[str, Any]) -> list[str]:
     data_dir = _data_dir(warehouse, table)
-    rels = snap.get("data_paths")
-    if rels is None:  # pre-snapshot-layout warehouse: flat data/ dir
-        return [data_dir]
-    return [os.path.join(data_dir, r) for r in rels]
+    return [os.path.join(data_dir, r) for r in snap["data_paths"]]
 
 
 def _read_paths(spark: SparkSession, paths: list[str],
@@ -321,8 +318,9 @@ def read_table(spark: SparkSession, warehouse: str, table: str,
     travel over the manifested immutable snap dirs."""
     snap = get_snapshot(warehouse, table, snapshot_id)
     if snap is None:
-        # no metadata at all: legacy flat layout
-        return spark.read.parquet(_data_dir(warehouse, table))
+        raise ValueError(
+            f"{warehouse}: table {table} has no snapshot (never written, "
+            "or its metadata was removed)")
     return _read_paths(spark, _resolve_paths(warehouse, table, snap),
                        schema_json=snap.get("schema"))
 
